@@ -48,30 +48,35 @@ import scala.collection.immutable.SortedMap
   * [[CommitPrimitive]] whose default is `fs.create(target, overwrite =
   * false)` — atomic create-exclusive on HDFS-class stores, so a second
   * writer racing the same version number LOSES cleanly instead of
-  * silently replacing a committed manifest (the round-9 TOCTOU of
-  * exists-check + rename). Object stores without atomic create plug in
-  * their own conditional write (S3 `If-None-Match: *`, GCS
+  * silently replacing a committed manifest (an exists-check + rename
+  * would leave a check-then-act window). Object stores without atomic
+  * create plug in their own conditional write (S3 `If-None-Match: *`, GCS
   * `ifGenerationMatch=0`) via the `commit` parameter. On local
   * filesystems the default primitive bypasses the Hadoop connector's
   * check-then-open create and writes through NIO `CREATE_NEW` (true
-  * `O_EXCL`, r11), so exclusivity holds across PROCESSES there too; the
+  * `O_EXCL`), so exclusivity holds across PROCESSES there too; the
   * in-process lock additionally serializes commits across the one
   * driver JVM — where accidental dual writers (two streams against one
   * table) most often appear — keeping their collisions on the cheap
   * clean-loss path.
   *
-  * Concurrent writers SERIALIZE (r11): when a commit loses the
-  * version race, [[upsertBatchSnapshot]] re-reads the new current
-  * version, RE-MERGES the batch against it, and retries (bounded by
-  * `maxCommitAttempts`) — optimistic concurrency, so two independent
-  * ingest pipelines sharing one table both land, in some serial
-  * order. The loser's abandoned staging directory is unreferenced
-  * debris [[vacuum]] sweeps (staging dirs are unique per attempt, so
-  * no attempt can ever delete files another may yet commit). Sustained
-  * multi-writer contention still deserves one writer per table — each
-  * retry re-reads the touched buckets and re-runs the merge — but a
-  * scheduled-job overlap or a failover double-start now converges
-  * instead of erroring.
+  * Every writer commits through ONE optimistic path ([[publish]]): read
+  * the head version, re-check the caller's `expectProps` against it,
+  * stage the next version against that head, and create its manifest
+  * exclusively. The path, not the writer, numbers the version, keeps
+  * `#ts` monotone, prunes per-file metadata to the live files, and runs
+  * GC. A writer that loses the version race re-stages against the new
+  * head: upserts, delta appends, [[mergeInto]], [[compactDeltas]] and
+  * [[restore]] try up to `maxCommitAttempts` times, so two independent
+  * ingest pipelines sharing one table both land, in some serial order;
+  * [[rebucket]], [[splitBucket]] and [[setProps]] make one attempt and
+  * surface [[ConcurrentCommitException]] — re-run them. A lost
+  * attempt's staging directory is unreferenced debris [[vacuum]]
+  * sweeps (staging dirs are unique per attempt, so no attempt can ever
+  * delete files another may yet commit). Sustained multi-writer
+  * contention still deserves one writer per table — each retry re-reads
+  * the touched buckets and re-runs the merge — but a scheduled-job
+  * overlap or a failover double-start converges instead of erroring.
   *
   * Crash contract (single writer, e.g. one streaming query): a crash
   * BEFORE the manifest write leaves readers on the old version and the
@@ -164,7 +169,7 @@ object SnapshotUpsert {
 
   /** Serializes manifest creation within this JVM (see object doc:
     * cross-process exclusivity comes from create-exclusive — atomic on
-    * HDFS-class stores, NIO `O_EXCL` on local filesystems since r11). */
+    * HDFS-class stores, NIO `O_EXCL` on local filesystems). */
   private val commitLock = new Object
 
   /** The ONE shared mutable point of the commit protocol, made
@@ -194,15 +199,14 @@ object SnapshotUpsert {
     * PROCESSES too, not just across this JVM's commit lock (two drivers
     * pointed at one local table race safely on the create itself; the
     * torn-manifest reclaim in [[commitManifest]] remains in-JVM-only,
-    * see its doc; r11). A manifest written this
-    * way carries no `.crc` sidecar, which the checksummed local reader
-    * accepts (it verifies only when a sidecar exists). */
+    * see its doc). A manifest written this way carries no `.crc`
+    * sidecar, which the checksummed local reader accepts (it verifies
+    * only when a sidecar exists). */
   object CreateExclusive extends CommitPrimitive {
     override def createExclusive(fs: FileSystem, target: Path,
         bytes: Array[Byte]): Boolean = {
       // `getScheme` is optional in the FileSystem contract (the base
-      // class throws) — a connector without it takes the Hadoop path,
-      // exactly what pre-r11 code did for every store
+      // class throws) — a connector without it takes the Hadoop path
       val isLocal =
         try fs.getScheme == "file"
         catch { case _: UnsupportedOperationException => false }
@@ -257,9 +261,10 @@ object SnapshotUpsert {
   }
 
   /** A commit lost the version race: another writer created this
-    * version's manifest first. [[upsertBatchSnapshot]] catches this and
-    * re-merges against the new current version (bounded retries);
-    * table-sized operations ([[rebucket]]) surface it — re-run them. */
+    * version's manifest first. Retrying writers re-stage against the new
+    * head until `maxCommitAttempts` is spent and then surface it;
+    * [[rebucket]], [[splitBucket]] and [[setProps]] surface it on the
+    * first loss — re-run them. */
   final class ConcurrentCommitException(msg: String)
     extends RuntimeException(msg)
 
@@ -505,7 +510,7 @@ object SnapshotUpsert {
       }.toMap).getOrElse(Map.empty)
     // #prop.<key> (r11): user-level table properties — committed
     // atomically with the version like everything else in the header,
-    // carried forward by subsequent commits (see commitVersion), and
+    // carried forward by every later commit, and
     // ignored by readers from before this revision
     val props: Map[String, String] = headers.collect {
       case (k, v) if k.startsWith("prop.") => k.stripPrefix("prop.") -> v
@@ -537,129 +542,147 @@ object SnapshotUpsert {
     * stores the default primitive's link-commit makes manifests
     * COMPLETE-OR-ABSENT at the target, so this race cannot arise. */
   private[streaming] def commitManifest(fs: FileSystem, root: Path,
-      version: Long, nBuckets: Int,
-      schema: org.apache.spark.sql.types.StructType,
-      files: Map[Int, Seq[String]], nowMs: Long,
-      bucketCols: Option[Seq[String]] = None,
-      commit: CommitPrimitive = CreateExclusive,
-      depths: Map[Int, Int] = Map.empty,
-      props: Map[String, String] = Map.empty,
-      deltas: Map[Int, Seq[String]] = Map.empty,
-      mergeKeys: Option[Seq[String]] = None,
-      orderCol: Option[String] = None,
-      stats: Map[String, Map[String, (String, String)]] = Map.empty,
-      lens: Map[String, Long] = Map.empty,
-      valueSets: Map[String, Map[String, Set[String]]] = Map.empty,
-      blooms: Map[String, Map[String, String]] = Map.empty)
-      : Unit = {
+      next: Snapshot, commit: CommitPrimitive = CreateExclusive): Unit = {
     // the merge contract is part of the COMMIT when deltas exist:
     // without recorded keys/ordercol no reader could fold the layers
-    require(deltas.valuesIterator.forall(_.nonEmpty),
+    require(next.deltas.valuesIterator.forall(_.nonEmpty),
       "commitManifest: a bucket must not record an empty delta list")
-    require(deltas.isEmpty || (mergeKeys.nonEmpty && orderCol.nonEmpty),
+    require(next.deltas.isEmpty ||
+      (next.mergeKeys.nonEmpty && next.orderCol.nonEmpty),
       "commitManifest: delta files need the recorded merge contract " +
         "(#keys/#ordercol) or no reader can fold them")
-    mergeKeys.foreach(ks => require(
+    next.mergeKeys.foreach(ks => require(
       ks.nonEmpty && ks.forall(c => !c.contains(",") && !c.contains("\n")),
       s"merge key names must be non-empty with no ',' or newlines: $ks"))
-    orderCol.foreach(o => require(!o.contains("\n") && !o.contains(","),
+    next.orderCol.foreach(o => require(!o.contains("\n") && !o.contains(","),
       s"orderCol must not contain ',' or newlines: '$o'"))
     // a prefix-bucketed layout is recorded IN the manifest (like
     // nBuckets): a later merge must restate it or its rows would land
     // in buckets the prefix layout never reads
-    bucketCols.foreach(bc => require(
+    next.bucketCols.foreach(bc => require(
       bc.forall(c => !c.contains(",") && !c.contains("\n")),
       s"bucketCols names must not contain ',' or newlines: $bc"))
     // prop keys parse as `prop.<key>=<value>` split on the FIRST '='
     // (values may contain '='; keys may not) and the manifest is
     // line-oriented, so neither side may contain a newline
-    props.foreach { case (k, v) =>
+    next.props.foreach { case (k, v) =>
       require(k.nonEmpty && !k.contains("=") && !k.contains("\n"),
         s"table property key '$k' must be non-empty with no '=' or newline")
       require(!v.contains("\n"),
         s"table property '$k' value must not contain a newline")
     }
+    // stat values are b64 over canonical strings: the manifest is
+    // line/tab/comma oriented and values may contain all three
+    def b64(s: String): String = java.util.Base64.getEncoder
+      .encodeToString(s.getBytes("UTF-8"))
     fs.mkdirs(new Path(root, ManifestDir))
-    val target = manifestPath(root, version)
-    val body = (Iterator(s"#format=$ManifestFormat", s"#nbuckets=$nBuckets",
-      s"#ts=$nowMs", s"#schema=${schema.toDDL}") ++
-      bucketCols.iterator.map(bc => s"#bucketcols=${bc.mkString(",")}") ++
-      // the merge contract (r11): keys and precedence recorded like the
+    val target = manifestPath(root, next.version)
+    val body = (Iterator(s"#format=$ManifestFormat",
+      s"#nbuckets=${next.nBuckets}", s"#ts=${next.commitTsMs}",
+      s"#schema=${next.schema.toDDL}") ++
+      next.bucketCols.iterator.map(bc => s"#bucketcols=${bc.mkString(",")}") ++
+      // the merge contract: keys and precedence recorded like the
       // bucket layout, so delta folds and later merges validate against
       // the manifest, not the caller's memory
-      mergeKeys.iterator.map(ks => s"#keys=${ks.mkString(",")}") ++
-      orderCol.iterator.map(o => s"#ordercol=$o") ++
-      SortedMap.from(props).iterator.map { case (k, v) => s"#prop.$k=$v" } ++
+      next.mergeKeys.iterator.map(ks => s"#keys=${ks.mkString(",")}") ++
+      next.orderCol.iterator.map(o => s"#ordercol=$o") ++
+      SortedMap.from(next.props).iterator
+        .map { case (k, v) => s"#prop.$k=$v" } ++
       // split layout travels WITH the file set (like nBuckets): a split
       // and its bucket rewrites commit atomically or not at all
-      (if (depths.nonEmpty)
-        Iterator(s"#depths=${SortedMap.from(depths).iterator
+      (if (next.depths.nonEmpty)
+        Iterator(s"#depths=${SortedMap.from(next.depths).iterator
           .map { case (id, d) => s"$id.$d" }.mkString(",")}")
       else Iterator.empty) ++
-      SortedMap.from(files).iterator.flatMap { case (b, fs0) =>
+      SortedMap.from(next.files).iterator.flatMap { case (b, fs0) =>
         fs0.map(f => s"$b\t$f")
       } ++
-      SortedMap.from(deltas).iterator.flatMap { case (b, fs0) =>
+      SortedMap.from(next.deltas).iterator.flatMap { case (b, fs0) =>
         fs0.map(f => s"$b\tD\t$f")
-      } ++ {
-        def b64(s: String): String = java.util.Base64.getEncoder
-          .encodeToString(s.getBytes("UTF-8"))
-        // only files this manifest still references may carry stats
-        val live = files.valuesIterator.flatten.toSet ++
-          deltas.valuesIterator.flatten
-        SortedMap.from(stats).iterator
-          .filter { case (rel, _) => live(rel) }
-          .flatMap { case (rel, cols) =>
-            SortedMap.from(cols).iterator.map { case (c, (mn, mx)) =>
-              s"S\t$rel\t$c\t${b64(mn)}\t${b64(mx)}"
-            }
-          }
-      } ++ {
-        // value sets (like stats: only live references; values b64
-        // over canonical strings — the manifest is line/tab/comma
-        // oriented and values may contain all three)
-        def b64(s: String): String = java.util.Base64.getEncoder
-          .encodeToString(s.getBytes("UTF-8"))
-        val live = files.valuesIterator.flatten.toSet ++
-          deltas.valuesIterator.flatten
-        SortedMap.from(valueSets).iterator
-          .filter { case (rel, _) => live(rel) }
-          .flatMap { case (rel, cols) =>
-            SortedMap.from(cols).iterator.map { case (c, vs) =>
-              s"V\t$rel\t$c\t${vs.toSeq.sorted.map(b64).mkString(",")}"
-            }
-          }
-      } ++ {
-        // file lengths (like stats: only live references)
-        val live = files.valuesIterator.flatten.toSet ++
-          deltas.valuesIterator.flatten
-        SortedMap.from(lens).iterator
-          .filter { case (rel, _) => live(rel) }
-          .map { case (rel, n) => s"L\t$rel\t$n" }
-      } ++ {
-        // bloom sidecar references (like stats: only live data files)
-        val live = files.valuesIterator.flatten.toSet ++
-          deltas.valuesIterator.flatten
-        SortedMap.from(blooms).iterator
-          .filter { case (rel, _) => live(rel) }
-          .flatMap { case (rel, cols) =>
-            SortedMap.from(cols).iterator.map { case (c, side) =>
-              s"B\t$rel\t$c\t$side"
-            }
-          }
+      } ++
+      SortedMap.from(next.stats).iterator.flatMap { case (rel, cols) =>
+        SortedMap.from(cols).iterator.map { case (c, (mn, mx)) =>
+          s"S\t$rel\t$c\t${b64(mn)}\t${b64(mx)}"
+        }
+      } ++
+      SortedMap.from(next.valueSets).iterator.flatMap { case (rel, cols) =>
+        SortedMap.from(cols).iterator.map { case (c, vs) =>
+          s"V\t$rel\t$c\t${vs.toSeq.sorted.map(b64).mkString(",")}"
+        }
+      } ++
+      SortedMap.from(next.lens).iterator
+        .map { case (rel, n) => s"L\t$rel\t$n" } ++
+      SortedMap.from(next.blooms).iterator.flatMap { case (rel, cols) =>
+        SortedMap.from(cols).iterator.map { case (c, side) =>
+          s"B\t$rel\t$c\t$side"
+        }
       } ++ Iterator(Eof)).mkString("\n")
     commitLock.synchronized {
       if (fs.exists(target)) {
-        try readManifest(fs, root, version)
+        try readManifest(fs, root, next.version)
         catch { case _: TornManifestException => fs.delete(target, false) }
       }
       if (!commit.createExclusive(fs, target, body.getBytes("UTF-8")))
         throw new ConcurrentCommitException(
-          s"snapshot upsert: manifest v$version already exists — another " +
-            "writer committed concurrently; this commit is NOT applied " +
-            "(upsertBatchSnapshot re-merges and retries; re-run table-sized " +
-            "operations like rebucket)")
+          s"snapshot commit: manifest v${next.version} already exists — " +
+            "another writer committed concurrently; this commit is NOT " +
+            "applied (retrying writers re-stage against the new head; " +
+            "re-run rebucket, splitBucket or setProps)")
     }
+  }
+
+  private def nextVersion(head: Option[Snapshot]): Long =
+    head.fold(1L)(_.version + 1)
+
+  /** THE commit path of every writer: optimistic concurrency shaped as
+    * `publish(root, expect)(stage)`. Reads the head, re-checks `expect`
+    * against it (a [[StalePropsException]] is never retried), and asks
+    * `stage` for the next version's content given that head — None
+    * means there is nothing to commit. The published version is then
+    * numbered `head + 1` and stamped `max(nowMs, head's #ts)`: `#ts`
+    * must stay MONOTONE, because [[readAsOf]] resolves "newest ts <=
+    * target" and age-based GC drops a prefix, and a retried attempt or a
+    * lagging clock can carry a `nowMs` older than the head. Per-file
+    * stats, value sets, lengths and blooms are pruned to the version's
+    * live files, so its [[Snapshot.allRefs]] is exactly what GC must
+    * protect. A lost version race re-runs `stage` from the new head,
+    * `attempts` tries in all; the last loss surfaces as
+    * [[ConcurrentCommitException]]. Returns the committed snapshot, or
+    * None when `stage` had nothing to commit. */
+  private def publish(fs: FileSystem, root: Path,
+      expect: Map[String, String], commit: CommitPrimitive, attempts: Int,
+      keepVersions: Int, keepAgeMs: Option[Long], nowMs: Long)(
+      stage: Option[Snapshot] => Option[Snapshot]): Option[Snapshot] = {
+    require(attempts >= 1, "maxCommitAttempts must be >= 1")
+    require(keepVersions >= 2,
+      "keepVersions must be >= 2: the next commit's GC must not delete " +
+        "files a reader pinned to the current version may still be scanning")
+    @scala.annotation.tailrec
+    def attempt(n: Int): Option[Snapshot] = {
+      val head = currentSnapshot(fs, root)
+      checkExpectProps(head, root, expect)
+      stage(head) match {
+        case None => None
+        case Some(s) =>
+          val live = s.files.valuesIterator.flatten.toSet ++
+            s.deltas.valuesIterator.flatten
+          def prune[V](m: Map[String, V]) =
+            m.filter { case (rel, _) => live(rel) }
+          val next = s.copy(version = nextVersion(head),
+            commitTsMs = head.fold(nowMs)(h => math.max(nowMs, h.commitTsMs)),
+            stats = prune(s.stats), lens = prune(s.lens),
+            valueSets = prune(s.valueSets), blooms = prune(s.blooms))
+          val lost =
+            try { commitManifest(fs, root, next, commit); false }
+            catch { case _: ConcurrentCommitException if n < attempts => true }
+          if (lost) attempt(n + 1)
+          else {
+            gc(fs, root, next, head, keepVersions, keepAgeMs, nowMs)
+            Some(next)
+          }
+      }
+    }
+    attempt(1)
   }
 
   /** Enumerate the bucket files a just-written staging directory holds
@@ -870,17 +893,6 @@ object SnapshotUpsert {
       .filter(_._2.nonEmpty).toMap
   }
 
-  /** Value sets for a staged slice under the effective props, merged
-    * over the carried-forward map — the shared per-commit-site shape
-    * (mirrors how stats carry). */
-  private def mergedValueSets(spark: SparkSession, versionDir: Path,
-      vsCols: Seq[String],
-      prev: Map[String, Map[String, Set[String]]],
-      schema: org.apache.spark.sql.types.StructType)
-      : Map[String, Map[String, Set[String]]] =
-    prev ++ (if (vsCols.isEmpty) Map.empty
-             else computeValueSets(spark, versionDir, vsCols, schema))
-
   /** Build per-file bloom sidecars for the declared [[BloomColsProp]]
     * columns of a just-staged version directory, write them under
     * `<versionDir>/_blooms/` (underscore-prefixed: invisible to every
@@ -978,20 +990,38 @@ object SnapshotUpsert {
     }
   }
 
-  /** Bloom sidecars for a staged slice under the effective props,
-    * merged over the carried-forward references (mirrors
-    * [[mergedValueSets]]). */
-  private def mergedBlooms(spark: SparkSession, root: Path,
-      versionDir: Path, effProps: Map[String, String],
-      prev: Map[String, Map[String, String]],
-      schema: org.apache.spark.sql.types.StructType)
-      : Map[String, Map[String, String]] = {
-    val cols = effProps.get(BloomColsProp).map(_.split(",", -1).toSeq)
-      .getOrElse(Seq.empty)
-    prev ++ (if (cols.isEmpty) Map.empty
-             else computeBlooms(spark, root, versionDir, cols, schema,
-               effProps.get(BloomNdvProp).map(_.toLong).getOrElse(100000L),
-               effProps.get(BloomFppProp).map(_.toDouble).getOrElse(0.03)))
+  /** The one staged write: `rows` (data columns plus `kb`) sorted by
+    * `next`'s clustering columns and written `partitionBy("kb")` into a
+    * fresh staging directory for the version after `head`, then listed
+    * and measured under `next`'s declared columns — min/max over the
+    * clustering ++ bucket columns (bucket-column ranges prove the key
+    * disjointness [[rangePlan]] relies on), value sets, bloom sidecars.
+    * Returns the staged bucket files and `next` with their lengths and
+    * skipping metadata merged over its carried maps; the caller places
+    * the files as base files or delta layers. */
+  private def stageSlice(root: Path, head: Option[Snapshot], rows: DataFrame,
+      next: Snapshot): (Map[Int, Seq[String]], Snapshot) = {
+    val spark = rows.sparkSession
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    next.clusterCols.foreach(c => require(next.schema.fieldNames.contains(c),
+      s"clustering column '$c' ($ClusterColsProp) is not a table column"))
+    val dir = newVersionDir(root, nextVersion(head))
+    ClusterLayout.sorted(rows, next.clusterCols, next.props)
+      .write.options(ClusterLayout.writerOptions(next.props))
+      .partitionBy("kb").parquet(dir.toString)
+    val staged = stagedFiles(fs, dir)
+    if (staged.isEmpty) return (Map.empty, next)
+    (staged.files, next.copy(
+      stats = next.stats ++ computeStats(spark, dir,
+        (next.clusterCols ++ next.bucketCols.getOrElse(Seq.empty)).distinct,
+        next.schema),
+      lens = next.lens ++ staged.lens,
+      valueSets = next.valueSets ++
+        computeValueSets(spark, dir, next.valueSetCols, next.schema),
+      blooms = next.blooms ++ computeBlooms(spark, root, dir, next.bloomCols,
+        next.schema,
+        next.props.get(BloomNdvProp).map(_.toLong).getOrElse(100000L),
+        next.props.get(BloomFppProp).map(_.toDouble).getOrElse(0.03))))
   }
 
   /** Range-pruning plan over the CURRENT manifest: (kept base files of
@@ -1228,42 +1258,29 @@ object SnapshotUpsert {
       commit: CommitPrimitive = CreateExclusive,
       props: Map[String, String] = Map.empty,
       expectProps: Map[String, String] = Map.empty): Unit = {
-    require(keepVersions >= 2,
-      "keepVersions must be >= 2: the next commit's GC must not delete " +
-        "files a reader pinned to the current version may still be scanning")
     require(bucketCols.forall(keys.contains),
       s"upsert: bucketCols (${bucketCols.mkString(",")}) must be a subset " +
         s"of the keys (${keys.mkString(",")}) — bucketing by a non-key " +
         "column would scatter a key's versions across buckets")
-    require(maxCommitAttempts >= 1, "maxCommitAttempts must be >= 1")
-    val spark = batch.sparkSession
     val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(
+      batch.sparkSession.sparkContext.hadoopConfiguration)
     // FULL validation before any side effect (layout pin): a rejected
     // first batch must not pin the table to its bucket count
     UpsertSink.validateBatch(batch, keys, tombstoneCol)
-    val batchData = org.apache.spark.sql.types.StructType(
-      batch.schema.fields.filterNot(f => tombstoneCol.contains(f.name)))
-    // OPTIMISTIC retry loop (see object doc): everything that depends
-    // on the current version — layout validation, schema evolution,
-    // the existing-rows read, the staged merge, the commit — re-runs
-    // per attempt, so a writer that loses the version race re-merges
-    // against the winner's committed rows instead of erroring. Each
-    // attempt stages into its own unique directory (a lost attempt's
-    // staging is unreferenced debris for vacuum) and evaluates the
-    // batch ONCE (re-checkpointed per attempt for a populated table),
-    // so whichever attempt commits is internally consistent.
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      try {
-        attemptUpsert(batch, batchData, root, fs, keys, orderCol, nBuckets,
-          keepVersions, keepAgeMs, tombstoneCol, nowMs, bucketCols, commit,
-          props, expectProps)
-        committed = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < maxCommitAttempts => ()
+    // each attempt stages into its own directory and evaluates the batch
+    // ONCE (re-checkpointed per attempt for a populated table), so
+    // whichever attempt commits is internally consistent
+    publish(fs, root, expectProps, commit, maxCommitAttempts, keepVersions,
+        keepAgeMs, nowMs) { head =>
+      val next = batchHeader(fs, root, head, batch, keys, orderCol, nBuckets,
+        tombstoneCol, bucketCols, props)
+      UpsertSink.withPreparedBatch(batch, keys, nBuckets,
+        populatedTable = head.exists(_.files.nonEmpty),
+        bucketCols = bucketCols, depths = next.depths) { withBucket =>
+        rewriteTouched(root, head, withBucket, next,
+          UpsertSink.selectWinners(_, _, next.schema.fieldNames.toSeq, keys,
+            orderCol, tombstoneCol))
       }
     }
   }
@@ -1308,33 +1325,37 @@ object SnapshotUpsert {
       props: Map[String, String] = Map.empty,
       expectProps: Map[String, String] = Map.empty,
       compactAt: Int = 0): Unit = {
-    require(keepVersions >= 2,
-      "keepVersions must be >= 2: the next commit's GC must not delete " +
-        "files a reader pinned to the current version may still be scanning")
     require(bucketCols.forall(keys.contains),
       s"delta append: bucketCols (${bucketCols.mkString(",")}) must be a " +
         "subset of the keys")
-    require(maxCommitAttempts >= 1, "maxCommitAttempts must be >= 1")
     require(compactAt >= 0, "compactAt must be >= 0 (0 = never inline)")
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     UpsertSink.validateBatch(batch, keys, tombstoneCol)
-    val batchData = org.apache.spark.sql.types.StructType(
-      batch.schema.fields.filterNot(f => tombstoneCol.contains(f.name)))
-    // same optimistic loop as the CoW path; a retry re-stages (the
-    // layer files carry the commit version, which the race moved)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      try {
-        attemptDelta(batch, batchData, root, fs, keys, orderCol, nBuckets,
-          keepVersions, keepAgeMs, tombstoneCol, nowMs, bucketCols, commit,
-          props, expectProps)
-        committed = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < maxCommitAttempts => ()
+    publish(fs, root, expectProps, commit, maxCommitAttempts, keepVersions,
+        keepAgeMs, nowMs) { head =>
+      val next = batchHeader(fs, root, head, batch, keys, orderCol, nBuckets,
+        tombstoneCol, bucketCols, props)
+      // ONE action (the staging write), so the batch needs no pinning
+      // snapshot — a single evaluation per attempt by construction
+      UpsertSink.withPreparedBatch(batch, keys, nBuckets,
+        populatedTable = false, bucketCols = bucketCols,
+        depths = next.depths) { withBucket =>
+        // in-batch winners ONLY (the existing rows are never read — that
+        // is the whole point); tombstone winners are kept and STATED in
+        // the layer for the read-time fold
+        val layer = UpsertSink.selectWinners(emptyWithKb(spark, next.schema),
+            withBucket, next.schema.fieldNames.toSeq, keys, orderCol,
+            tombstoneCol, keepTombstones = true, tombOut = DeltaTombCol)
+          .withColumn(DeltaVCol, lit(nextVersion(head)))
+          .repartition(col("kb"))
+        val (staged, n) = stageSlice(root, head, layer, next)
+        if (staged.isEmpty) None // empty batch: nothing to commit
+        else Some(n.copy(deltas = staged.foldLeft(n.deltas) {
+          case (acc, (b, fs0)) =>
+            acc.updated(b, acc.getOrElse(b, Seq.empty) ++ fs0)
+        }))
       }
     }
     if (compactAt > 0)
@@ -1343,90 +1364,34 @@ object SnapshotUpsert {
         maxCommitAttempts = maxCommitAttempts, commit = commit)
   }
 
-  private def attemptDelta(batch: DataFrame,
-      batchData: org.apache.spark.sql.types.StructType, root: Path,
-      fs: FileSystem, keys: Seq[String], orderCol: String, nBuckets: Int,
-      keepVersions: Int, keepAgeMs: Option[Long],
-      tombstoneCol: Option[String], nowMs: Long, bucketCols: Seq[String],
-      commit: CommitPrimitive, props: Map[String, String],
-      expectProps: Map[String, String]): Unit = {
-    val spark = batch.sparkSession
-    val cur = currentSnapshot(fs, root)
-    checkExpectProps(cur, root, expectProps)
-    cur match {
+  /** The next version's header for a keyed batch commit (upsert or
+    * delta append) against `head`: the layout validated against the
+    * head (or pinned on a fresh table), the schema evolved additively
+    * by the batch's data columns, the bucket columns and merge contract
+    * recorded, `props` merged over the carried ones. Files and metadata
+    * carry from the head. */
+  private def batchHeader(fs: FileSystem, root: Path, head: Option[Snapshot],
+      batch: DataFrame, keys: Seq[String], orderCol: String, nBuckets: Int,
+      tombstoneCol: Option[String], bucketCols: Seq[String],
+      props: Map[String, String]): Snapshot = {
+    head match {
       case Some(c) => checkLayout(c, root, nBuckets, keys, orderCol, bucketCols)
       case None => UpsertSink.pinLayout(fs, root, nBuckets)
     }
-    val dataSchema = evolvedSchema(cur, batchData)
-    val dataCols = dataSchema.fieldNames.toSeq
-    val tsMs = math.max(nowMs, cur.map(_.commitTsMs).getOrElse(nowMs))
-    val version = cur.map(_.version + 1).getOrElse(1L)
-    val versionDir = newVersionDir(root, version)
-    val effProps = cur.map(_.props).getOrElse(Map.empty) ++ props
-    val cluster = effProps.get(ClusterColsProp)
-      .map(_.split(",", -1).toSeq).getOrElse(Seq.empty)
-    cluster.foreach(c => require(dataSchema.fieldNames.contains(c),
-      s"delta append: clustering column '$c' ($ClusterColsProp) is not a " +
-        "table column"))
-    // the delta path runs ONE action (the staging write), so the batch
-    // needs no pinning snapshot — a single evaluation by construction
-    // (each retry attempt re-evaluates, and whichever attempt commits
-    // is internally consistent, like the CoW path's per-attempt
-    // checkpoint)
-    UpsertSink.withPreparedBatch(batch, keys, nBuckets,
-      populatedTable = false, bucketCols = bucketCols,
-      depths = cur.map(_.depths).getOrElse(Map.empty)) { withBucket =>
-      val emptyExisting = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(dataSchema.fields :+
-          org.apache.spark.sql.types.StructField("kb",
-            org.apache.spark.sql.types.IntegerType)))
-      // in-batch winners ONLY (the existing rows are never read — that
-      // is the whole point); tombstone winners are kept and STATED in
-      // the layer for the read-time fold
-      val layer = UpsertSink.selectWinners(emptyExisting, withBucket,
-          dataCols, keys, orderCol, tombstoneCol, keepTombstones = true,
-          tombOut = DeltaTombCol)
-        .withColumn(DeltaVCol, lit(version))
-        .repartition(col("kb"))
-      ClusterLayout.sorted(layer, cluster, effProps)
-        .write.options(ClusterLayout.writerOptions(effProps))
-        .partitionBy("kb").parquet(versionDir.toString)
-    }
-    val staged = stagedFiles(fs, versionDir)
-    if (staged.isEmpty) return // empty batch: nothing to commit
-    val carried = cur.map(_.files).getOrElse(Map.empty)
-    val prevDeltas = cur.map(_.deltas).getOrElse(Map.empty)
-    val newDeltas = staged.files.foldLeft(prevDeltas) { case (acc, (b, fs0)) =>
-      acc.updated(b, acc.getOrElse(b, Seq.empty) ++ fs0)
-    }
-    // layer files record ranges too: they can only WIDEN a bucket's
-    // effective range, and readRange's layered all-or-nothing check
-    // needs every file of the bucket to be provably disjoint. Bucket
-    // columns are ALWAYS recorded alongside (r12): their per-file
-    // ranges prove key-disjointness between a layer and a base file,
-    // which is what lets rangePlan drop base files inside a layered
-    // bucket soundly
-    val statCols = (cluster ++
-      (if (bucketCols.isEmpty) keys else bucketCols)).distinct
-    val stats = cur.map(_.stats).getOrElse(Map.empty) ++
-      computeStats(spark, versionDir, statCols, dataSchema)
-    val vsets = mergedValueSets(spark, versionDir,
-      effProps.get(ValueSetColsProp).map(_.split(",", -1).toSeq)
-        .getOrElse(Seq.empty),
-      cur.map(_.valueSets).getOrElse(Map.empty), dataSchema)
-    val blms = mergedBlooms(spark, root, versionDir, effProps,
-      cur.map(_.blooms).getOrElse(Map.empty), dataSchema)
-    commitManifest(fs, root, version, nBuckets, dataSchema, carried, tsMs,
-      Some(if (bucketCols.isEmpty) keys else bucketCols), commit,
-      cur.map(_.depths).getOrElse(Map.empty), effProps,
-      newDeltas, Some(keys), Some(orderCol), stats,
-      cur.map(_.lens).getOrElse(Map.empty) ++ staged.lens, vsets, blms)
-    gc(fs, root, version,
-      refsWithBlooms(carried.valuesIterator.flatten.toSet ++
-        newDeltas.valuesIterator.flatten, blms),
-      cur, keepVersions, keepAgeMs, nowMs)
+    val schema = evolvedSchema(head, org.apache.spark.sql.types.StructType(
+      batch.schema.fields.filterNot(f => tombstoneCol.contains(f.name))))
+    val base = head.getOrElse(Snapshot(0L, nBuckets, 0L, schema, Map.empty))
+    base.copy(nBuckets = nBuckets, schema = schema,
+      bucketCols = Some(if (bucketCols.isEmpty) keys else bucketCols),
+      props = base.props ++ props, mergeKeys = Some(keys),
+      orderCol = Some(orderCol))
   }
+
+  /** An empty frame of `schema` plus the `kb` bucket column. */
+  private def emptyWithKb(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    readImage(spark, schema.add("kb", org.apache.spark.sql.types.IntegerType),
+      Seq.empty)
 
   /** Fold delta layers back into base files — the maintenance half of
     * merge-on-read. Every bucket holding at least `minLayers` layers
@@ -1447,93 +1412,33 @@ object SnapshotUpsert {
       commit: CommitPrimitive = CreateExclusive): Seq[Int] = {
     require(minLayers >= 1, "compactDeltas: minLayers must be >= 1")
     require(maxBuckets >= 1, "compactDeltas: maxBuckets must be >= 1")
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = currentSnapshot(fs, root).getOrElse(
+    // re-selected per attempt: a racing delta append may stack new layers
+    var compacted = Seq.empty[Int]
+    publish(fs, root, Map.empty, commit, maxCommitAttempts, keepVersions,
+        keepAgeMs, nowMs) { head =>
+      val cur = head.getOrElse(
         sys.error(s"compactDeltas: no committed version at $targetDir"))
-      val sel = cur.deltas.toSeq.filter(_._2.size >= minLayers)
+      compacted = cur.deltas.toSeq.filter(_._2.size >= minLayers)
         .sortBy { case (b, ls) => (-ls.size, b) }
         .take(maxBuckets).map(_._1)
-      if (sel.isEmpty) return Seq.empty
-      val version = cur.version + 1
-      val versionDir = newVersionDir(root, version)
-      val folded = readMergedImage(spark, root, cur, Some(sel))
-        .withColumn("kb", UpsertSink.bucketOfLayout(
-          cur.bucketCols.getOrElse(cur.mergeKeys.getOrElse(sys.error(
-            s"compactDeltas: no recorded bucket columns at $targetDir"))),
-          cur.nBuckets, cur.depths))
-        .repartition(sel.length, col("kb"))
-      ClusterLayout.sorted(folded, cur.clusterCols, cur.props)
-        .write.options(ClusterLayout.writerOptions(cur.props))
-        .partitionBy("kb").parquet(versionDir.toString)
-      // a compacted bucket whose every key was tombstoned by its
-      // layers stages NO file and correctly vanishes from the manifest
-      val staged = stagedFiles(fs, versionDir)
-      val selSet = sel.toSet
-      val manifest = cur.files.filterNot { case (b, _) => selSet(b) } ++
-        staged.files
-      val deltas = cur.deltas.filterNot { case (b, _) => selSet(b) }
-      val stats = cur.stats ++ computeStats(spark, versionDir,
-        (cur.clusterCols ++ cur.bucketCols.getOrElse(Seq.empty)).distinct,
-        cur.schema)
-      val vsets = mergedValueSets(spark, versionDir, cur.valueSetCols,
-        cur.valueSets, cur.schema)
-      val blms = mergedBlooms(spark, root, versionDir, cur.props,
-        cur.blooms, cur.schema)
-      try {
-        commitManifest(fs, root, version, cur.nBuckets, cur.schema, manifest,
-          math.max(nowMs, cur.commitTsMs), cur.bucketCols, commit,
-          cur.depths, cur.props, deltas, cur.mergeKeys, cur.orderCol, stats,
-          cur.lens ++ staged.lens, vsets, blms)
-        gc(fs, root, version,
-          refsWithBlooms(manifest.valuesIterator.flatten.toSet ++
-            deltas.valuesIterator.flatten, blms),
-          Some(cur), keepVersions, keepAgeMs, nowMs)
-        return sel.sorted
-      } catch {
-        case _: ConcurrentCommitException if attempt < maxCommitAttempts => ()
+      if (compacted.isEmpty) None
+      else {
+        val folded = readMergedImage(spark, root, cur, Some(compacted))
+          .withColumn("kb", UpsertSink.bucketOfLayout(
+            cur.bucketCols.getOrElse(cur.mergeKeys.getOrElse(sys.error(
+              s"compactDeltas: no recorded bucket columns at $targetDir"))),
+            cur.nBuckets, cur.depths))
+          .repartition(compacted.length, col("kb"))
+        // a compacted bucket whose every key was tombstoned by its
+        // layers stages NO file and correctly vanishes from the manifest
+        val (staged, n) = stageSlice(root, head, folded, cur.copy(
+          files = cur.files -- compacted, deltas = cur.deltas -- compacted))
+        Some(n.copy(files = n.files ++ staged))
       }
     }
-    Seq.empty // unreachable
-  }
-
-  private def attemptUpsert(batch: DataFrame,
-      batchData: org.apache.spark.sql.types.StructType, root: Path,
-      fs: FileSystem, keys: Seq[String], orderCol: String, nBuckets: Int,
-      keepVersions: Int, keepAgeMs: Option[Long],
-      tombstoneCol: Option[String], nowMs: Long, bucketCols: Seq[String],
-      commit: CommitPrimitive,
-      props: Map[String, String] = Map.empty,
-      expectProps: Map[String, String] = Map.empty): Unit = {
-    val cur = currentSnapshot(fs, root)
-    // CAS precondition, re-checked on EVERY attempt: a retry that lost
-    // the version race re-reads the current version, so a concurrent
-    // writer that advanced an expected prop turns the retry into a
-    // clean StalePropsException instead of a silent double-apply
-    checkExpectProps(cur, root, expectProps)
-    cur match {
-      case Some(c) => checkLayout(c, root, nBuckets, keys, orderCol, bucketCols)
-      case None => UpsertSink.pinLayout(fs, root, nBuckets)
-    }
-    val dataSchema = evolvedSchema(cur, batchData)
-    // commit timestamps must stay MONOTONE across versions (gc's
-    // age-based dropped set is a prefix, and readAsOf resolves "newest
-    // ts <= target" against them) — a RETRIED attempt still carries the
-    // caller's original nowMs, which by now can predate the winner's
-    // commit, so clamp to the current version's timestamp
-    val tsMs = math.max(nowMs, cur.map(_.commitTsMs).getOrElse(nowMs))
-    UpsertSink.withPreparedBatch(batch, keys, nBuckets,
-      populatedTable = cur.exists(_.files.nonEmpty),
-      bucketCols = bucketCols,
-      depths = cur.map(_.depths).getOrElse(Map.empty)) { withBucket =>
-      commitVersion(withBucket, root, fs, cur, dataSchema, keys, orderCol,
-        nBuckets, keepVersions, keepAgeMs, tombstoneCol, tsMs,
-        if (bucketCols.isEmpty) keys else bucketCols, commit, props)
-    }
+    compacted.sorted
   }
 
   /** SQL `MERGE INTO` semantics against the snapshot table: per key,
@@ -1584,8 +1489,6 @@ object SnapshotUpsert {
       commit: CommitPrimitive = CreateExclusive,
       props: Map[String, String] = Map.empty,
       expectProps: Map[String, String] = Map.empty): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
-    require(maxCommitAttempts >= 1, "maxCommitAttempts must be >= 1")
     require(!(updateAll && updateSet.nonEmpty),
       "mergeInto: updateAll replaces every non-key column from the " +
         "source; it cannot be combined with explicit updateSet entries")
@@ -1608,19 +1511,31 @@ object SnapshotUpsert {
       "mergeInto: the source has more than one row for some key — " +
         "MERGE requires a key-unique source (the SQL cardinality rule); " +
         "pre-aggregate the source")
-    val sourceData = org.apache.spark.sql.types.StructType(
-      source.schema.fields)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      try {
-        attemptMerge(source, sourceData, root, fs, keys, updateSet,
-          updateAll, updateCond, deleteCond, insert, insertCond,
-          keepVersions, keepAgeMs, nowMs, commit, props, expectProps)
-        committed = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < maxCommitAttempts => ()
+    publish(fs, root, expectProps, commit, maxCommitAttempts, keepVersions,
+        keepAgeMs, nowMs) { head =>
+      val cur = head.getOrElse(sys.error(
+        s"mergeInto: no committed version at $root — MERGE needs an " +
+          "existing target; seed the table with upsertBatchSnapshot"))
+      val bc = cur.bucketCols.getOrElse(keys)
+      // layout + frozen-contract validation exactly like a CoW merge;
+      // the table's own recorded precedence satisfies the delta check
+      // (a MERGE rewrite folds and compacts touched layered buckets)
+      val orderCol = cur.orderCol.getOrElse("")
+      checkLayout(cur, root, cur.nBuckets, keys, orderCol, bc)
+      val dataSchema = evolvedSchema(head, source.schema)
+      val effectiveSet =
+        if (updateAll)
+          dataSchema.fieldNames.filterNot(keys.contains)
+            .map(c => c -> col(s"s.$c")).toMap
+        else updateSet
+      UpsertSink.withPreparedBatch(source, keys, cur.nBuckets,
+        populatedTable = cur.files.nonEmpty, bucketCols = bc,
+        depths = cur.depths) { withBucket =>
+        rewriteTouched(root, head, withBucket, cur.copy(schema = dataSchema,
+            bucketCols = Some(bc), props = cur.props ++ props,
+            mergeKeys = Some(keys), orderCol = Some(orderCol)),
+          mergeActionRule(dataSchema, keys, effectiveSet, updateCond,
+            deleteCond, insert, insertCond))
       }
     }
   }
@@ -1688,43 +1603,6 @@ object SnapshotUpsert {
     val rows = SnapshotRelation.readSql(spark, targetDir).where(cond)
       .localCheckpoint(true)
     (rows, keys)
-  }
-
-  private def attemptMerge(source: DataFrame,
-      sourceData: org.apache.spark.sql.types.StructType, root: Path,
-      fs: FileSystem, keys: Seq[String], updateSet: Map[String, Column],
-      updateAll: Boolean, updateCond: Option[Column],
-      deleteCond: Option[Column], insert: Boolean,
-      insertCond: Option[Column], keepVersions: Int,
-      keepAgeMs: Option[Long], nowMs: Long, commit: CommitPrimitive,
-      props: Map[String, String],
-      expectProps: Map[String, String]): Unit = {
-    val cur = currentSnapshot(fs, root).getOrElse(sys.error(
-      s"mergeInto: no committed version at $root — MERGE needs an " +
-        "existing target; seed the table with upsertBatchSnapshot"))
-    checkExpectProps(Some(cur), root, expectProps)
-    val bc = cur.bucketCols.getOrElse(keys)
-    // layout + frozen-contract validation exactly like a CoW merge;
-    // the table's own recorded precedence satisfies the delta check
-    // (a MERGE rewrite folds and compacts touched layered buckets)
-    checkLayout(cur, root, cur.nBuckets, keys,
-      cur.orderCol.getOrElse(""), bc)
-    val dataSchema = evolvedSchema(Some(cur), sourceData)
-    val dataCols = dataSchema.fieldNames.toSeq
-    val effectiveSet =
-      if (updateAll)
-        dataCols.filterNot(keys.contains).map(c => c -> col(s"s.$c")).toMap
-      else updateSet
-    val tsMs = math.max(nowMs, cur.commitTsMs)
-    UpsertSink.withPreparedBatch(source, keys, cur.nBuckets,
-      populatedTable = cur.files.nonEmpty, bucketCols = bc,
-      depths = cur.depths) { withBucket =>
-      commitVersion(withBucket, root, fs, Some(cur), dataSchema, keys,
-        cur.orderCol.getOrElse(""), cur.nBuckets, keepVersions, keepAgeMs,
-        None, tsMs, bc, commit, props,
-        mergeRule = Some(mergeActionRule(dataSchema, keys, effectiveSet,
-          updateCond, deleteCond, insert, insertCond)))
-    }
   }
 
   /** The MERGE action decision as one row rule over (existing rows of
@@ -1795,46 +1673,30 @@ object SnapshotUpsert {
       bucketCols: Seq[String] = Seq.empty,
       commit: CommitPrimitive = CreateExclusive): Unit = {
     require(newBuckets > 0, s"rebucket: newBuckets must be > 0, got $newBuckets")
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     require(bucketCols.forall(keys.contains),
       s"rebucket: bucketCols (${bucketCols.mkString(",")}) must be a " +
         s"subset of the keys (${keys.mkString(",")})")
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentSnapshot(fs, root).getOrElse(
-      sys.error(s"rebucket: no committed version at $targetDir"))
-    val version = cur.version + 1
-    val versionDir = newVersionDir(root, version)
-    // read under the recorded schema: files from before a schema
-    // evolution lack the newer columns (null-filled here); pending
-    // delta layers fold in, so the rewrite doubles as a full compaction
-    val rebucketed = readMergedImage(spark, root, cur)
-      .withColumn("kb", UpsertSink.bucketOf(
-        if (bucketCols.isEmpty) keys else bucketCols, newBuckets))
-      .repartition(newBuckets min 4096, col("kb"))
-    ClusterLayout.sorted(rebucketed, cur.clusterCols, cur.props)
-      .write.options(ClusterLayout.writerOptions(cur.props))
-      .partitionBy("kb").parquet(versionDir.toString)
-    // nothing is carried: the new layout's manifest is exactly the
-    // staged set, and the header flips the layout in the same commit
-    val staged = stagedFiles(fs, versionDir)
-    val blms = mergedBlooms(spark, root, versionDir, cur.props,
-      Map.empty, cur.schema)
-    commitManifest(fs, root, version, newBuckets, cur.schema, staged.files,
-      nowMs,
-      Some(if (bucketCols.isEmpty) keys else bucketCols), commit,
-      props = cur.props, mergeKeys = Some(keys), orderCol = cur.orderCol,
-      stats = computeStats(spark, versionDir,
-        (cur.clusterCols ++
-          (if (bucketCols.isEmpty) keys else bucketCols)).distinct,
-        cur.schema),
-      lens = staged.lens,
-      valueSets = mergedValueSets(spark, versionDir, cur.valueSetCols,
-        Map.empty, cur.schema),
-      blooms = blms)
-    gc(fs, root, version,
-      refsWithBlooms(staged.files.valuesIterator.flatten.toSet, blms),
-      Some(cur), keepVersions, keepAgeMs, nowMs)
+    val bc = if (bucketCols.isEmpty) keys else bucketCols
+    publish(fs, root, Map.empty, commit, 1, keepVersions, keepAgeMs,
+        nowMs) { head =>
+      val cur = head.getOrElse(
+        sys.error(s"rebucket: no committed version at $targetDir"))
+      // read under the recorded schema: files from before a schema
+      // evolution lack the newer columns (null-filled here); pending
+      // delta layers fold in, so the rewrite doubles as a full compaction
+      val rebucketed = readMergedImage(spark, root, cur)
+        .withColumn("kb", UpsertSink.bucketOf(bc, newBuckets))
+        .repartition(newBuckets min 4096, col("kb"))
+      // nothing is carried: the new layout's manifest is exactly the
+      // staged set, and the header flips the layout in the same commit
+      val (staged, n) = stageSlice(root, head, rebucketed,
+        Snapshot(0L, newBuckets, 0L, cur.schema, Map.empty,
+          bucketCols = Some(bc), props = cur.props, mergeKeys = Some(keys),
+          orderCol = cur.orderCol))
+      Some(n.copy(files = staged))
+    }
     // best-effort marker refresh for humans; the manifest header is
     // what merges validate against
     UpsertSink.refreshLayoutMarker(fs, root, newBuckets)
@@ -1865,53 +1727,38 @@ object SnapshotUpsert {
       keepVersions: Int = 2, keepAgeMs: Option[Long] = None,
       nowMs: Long = System.currentTimeMillis(),
       commit: CommitPrimitive = CreateExclusive): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentSnapshot(fs, root).getOrElse(
-      sys.error(s"splitBucket: no committed version at $targetDir"))
-    val bc = cur.bucketCols.getOrElse(sys.error(
-      s"splitBucket: the manifest at $targetDir predates recorded bucket " +
-        "columns; one fresh merge upgrades it"))
-    require(cur.files.contains(bucket) || cur.deltas.contains(bucket),
-      s"splitBucket: bucket $bucket holds no files at $targetDir " +
-        "(unknown id, or empty — nothing to split)")
-    val d = cur.depths.getOrElse(bucket, 0)
-    val m = cur.nBuckets.toLong << d
-    require(bucket + m <= Int.MaxValue,
-      s"splitBucket: bucket $bucket at depth $d cannot split further " +
-        "(id overflow); rebucket the table instead")
-    val sibling = (bucket + m).toInt
-    val newDepths = cur.depths + (bucket -> (d + 1)) + (sibling -> (d + 1))
-    val version = cur.version + 1
-    val versionDir = newVersionDir(root, version)
-    // read ONLY the split bucket (its base files plus any pending delta
-    // layers, folded — the split doubles as that bucket's compaction);
-    // the new depth map routes its rows onto the two children (all
-    // other rows are untouched and their buckets carried by reference)
-    val splitImg = readMergedImage(spark, root, cur, Some(Seq(bucket)))
-      .withColumn("kb", UpsertSink.bucketOfLayout(bc, cur.nBuckets, newDepths))
-      .repartition(2, col("kb"))
-    ClusterLayout.sorted(splitImg, cur.clusterCols, cur.props)
-      .write.options(ClusterLayout.writerOptions(cur.props))
-      .partitionBy("kb").parquet(versionDir.toString)
-    val staged = stagedFiles(fs, versionDir)
-    val manifest = (cur.files - bucket) ++ staged.files
-    val deltas = cur.deltas - bucket
-    val stats = cur.stats ++ computeStats(spark, versionDir,
-      (cur.clusterCols ++ bc).distinct, cur.schema)
-    val splitBlms = mergedBlooms(spark, root, versionDir, cur.props,
-      cur.blooms, cur.schema)
-    commitManifest(fs, root, version, cur.nBuckets, cur.schema, manifest,
-      nowMs, Some(bc), commit, newDepths, cur.props, deltas,
-      cur.mergeKeys, cur.orderCol, stats, cur.lens ++ staged.lens,
-      mergedValueSets(spark, versionDir, cur.valueSetCols, cur.valueSets,
-        cur.schema),
-      splitBlms)
-    gc(fs, root, version,
-      refsWithBlooms(manifest.valuesIterator.flatten.toSet ++
-        deltas.valuesIterator.flatten, splitBlms),
-      Some(cur), keepVersions, keepAgeMs, nowMs)
+    publish(fs, root, Map.empty, commit, 1, keepVersions, keepAgeMs,
+        nowMs) { head =>
+      val cur = head.getOrElse(
+        sys.error(s"splitBucket: no committed version at $targetDir"))
+      val bc = cur.bucketCols.getOrElse(sys.error(
+        s"splitBucket: the manifest at $targetDir predates recorded bucket " +
+          "columns; one fresh merge upgrades it"))
+      require(cur.files.contains(bucket) || cur.deltas.contains(bucket),
+        s"splitBucket: bucket $bucket holds no files at $targetDir " +
+          "(unknown id, or empty — nothing to split)")
+      val d = cur.depths.getOrElse(bucket, 0)
+      val m = cur.nBuckets.toLong << d
+      require(bucket + m <= Int.MaxValue,
+        s"splitBucket: bucket $bucket at depth $d cannot split further " +
+          "(id overflow); rebucket the table instead")
+      val sibling = (bucket + m).toInt
+      val newDepths = cur.depths + (bucket -> (d + 1)) + (sibling -> (d + 1))
+      // read ONLY the split bucket (its base files plus any pending delta
+      // layers, folded — the split doubles as that bucket's compaction);
+      // the new depth map routes its rows onto the two children (all
+      // other rows are untouched and their buckets carried by reference)
+      val splitImg = readMergedImage(spark, root, cur, Some(Seq(bucket)))
+        .withColumn("kb",
+          UpsertSink.bucketOfLayout(bc, cur.nBuckets, newDepths))
+        .repartition(2, col("kb"))
+      val (staged, n) = stageSlice(root, head, splitImg, cur.copy(
+        files = cur.files - bucket, deltas = cur.deltas - bucket,
+        depths = newDepths))
+      Some(n.copy(files = n.files ++ staged))
+    }
   }
 
   /** One maintenance pass of [[splitBucket]]: split every bucket whose
@@ -2018,17 +1865,14 @@ object SnapshotUpsert {
       nowMs: Long = System.currentTimeMillis(),
       commit: CommitPrimitive = CreateExclusive,
       maxCommitAttempts: Int = 5): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      try {
-        val cur = currentSnapshot(fs, root).getOrElse(sys.error(
-          s"restore: no committed version at $targetDir"))
-        if (cur.version == version) return
+    publish(fs, root, Map.empty, commit, maxCommitAttempts, keepVersions,
+        keepAgeMs, nowMs) { head =>
+      val cur = head.getOrElse(sys.error(
+        s"restore: no committed version at $targetDir"))
+      if (cur.version == version) None
+      else {
         val target =
           try readManifest(fs, root, version)
           catch {
@@ -2058,19 +1902,7 @@ object SnapshotUpsert {
           s"restore: version $version references files GC already " +
             s"removed (e.g. ${missing.mkString(", ")}); the version is " +
             "outside the effective retention window")
-        val newV = cur.version + 1
-        // commit-timestamp monotonicity clamp, like every writer:
-        // readAsOf/TIMESTAMP AS OF and age-based GC order by #ts
-        commitManifest(fs, root, newV, target.nBuckets, target.schema,
-          target.files, math.max(nowMs, cur.commitTsMs),
-          target.bucketCols, commit, target.depths,
-          target.props, target.deltas, target.mergeKeys, target.orderCol,
-          target.stats, target.lens, target.valueSets, target.blooms)
-        gc(fs, root, newV, target.allRefs.toSet, Some(cur),
-          keepVersions, keepAgeMs, nowMs)
-        committed = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < maxCommitAttempts =>
+        Some(target)
       }
     }
   }
@@ -2153,24 +1985,19 @@ object SnapshotUpsert {
     case None => nullableTop(batchData)
   }
 
-  private def commitVersion(withBucket: DataFrame, root: Path,
-      fs: FileSystem, cur: Option[Snapshot],
-      dataSchema: org.apache.spark.sql.types.StructType, keys: Seq[String],
-      orderCol: String, nBuckets: Int, keepVersions: Int,
-      keepAgeMs: Option[Long], tombstoneCol: Option[String],
-      nowMs: Long, bucketCols: Seq[String],
-      commit: CommitPrimitive = CreateExclusive,
-      props: Map[String, String] = Map.empty,
-      mergeRule: Option[(DataFrame, DataFrame) => DataFrame] = None)
-      : Unit = {
+  /** The copy-on-write rewrite shared by [[upsertBatchSnapshot]] and
+    * [[mergeInto]]: the buckets `withBucket` touches are rewritten from
+    * `rule(existing rows of those buckets, batch)` as one clustered file
+    * each, and every other bucket carries by reference. `next` is the
+    * version's header with the head's files. None when the batch
+    * touches no bucket. */
+  private def rewriteTouched(root: Path, head: Option[Snapshot],
+      withBucket: DataFrame, next: Snapshot,
+      rule: (DataFrame, DataFrame) => DataFrame): Option[Snapshot] = {
     val spark = withBucket.sparkSession
-    val dataCols = dataSchema.fieldNames.toSeq
-    val populated: Set[Int] =
-      cur.map(c => c.files.keySet ++ c.deltas.keySet).getOrElse(Set.empty)
     val touched = withBucket.select("kb").distinct()
       .collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return
-
+    if (touched.isEmpty) return None
     // existing rows of the touched buckets, by explicit manifest paths
     // (structural pruning: no directory discovery at all), read under
     // the EVOLVED schema (pre-evolution files simply lack the newer
@@ -2178,89 +2005,24 @@ object SnapshotUpsert {
     // layers folded in — a CoW rewrite of a delta-bearing bucket is
     // its compaction; kb is not stored in the files (partitionBy
     // strips it) but is a pure function of the keys, so re-derive it
-    val presentTouched = touched.filter(populated)
+    val presentTouched = touched.filter(b =>
+      next.files.contains(b) || next.deltas.contains(b))
     val existing =
       if (presentTouched.nonEmpty)
-        readMergedImage(spark, root, cur.get, Some(presentTouched),
-            Some(dataSchema))
-          .withColumn("kb", UpsertSink.bucketOfLayout(bucketCols, nBuckets,
-            cur.map(_.depths).getOrElse(Map.empty)))
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(dataSchema.fields :+
-            org.apache.spark.sql.types.StructField("kb",
-              org.apache.spark.sql.types.IntegerType)))
-
-    val version = cur.map(_.version + 1).getOrElse(1L)
-    val versionDir = newVersionDir(root, version)
-
-    // declared clustering (ClusterColsProp, effective THIS commit):
-    // staged files sort within each bucket — tight row-group stats for
-    // the scan's own pushdown — and record per-file ranges below
-    val effProps = cur.map(_.props).getOrElse(Map.empty) ++ props
-    val cluster = effProps.get(ClusterColsProp)
-      .map(_.split(",", -1).toSeq).getOrElse(Seq.empty)
-    cluster.foreach(c => require(dataSchema.fieldNames.contains(c),
-      s"upsert: clustering column '$c' ($ClusterColsProp) is not a " +
-        "table column"))
-
-    // one clustered file per touched bucket, written to an immutable
-    // fresh directory — no live path is read and overwritten, so no
-    // lineage truncation is needed and the merge is evaluated ONCE.
-    // The row rule is pluggable (mergeInto supplies MERGE-action
-    // semantics); the default is the keyed latest-state winner rule.
-    val winners = mergeRule.map(rule => rule(existing, withBucket))
-      .getOrElse(UpsertSink.selectWinners(existing, withBucket, dataCols,
-        keys, orderCol, tombstoneCol))
-      .repartition(touched.length, col("kb"))
-    ClusterLayout.sorted(winners, cluster, effProps)
-      .write.options(ClusterLayout.writerOptions(effProps))
-      .partitionBy("kb").parquet(versionDir.toString)
-
-    // staged buckets from the job's committed output; the carry set
-    // excludes every TOUCHED bucket, not just the staged ones — a
-    // touched bucket can legitimately stage NO file when tombstones
-    // removed its every key, and carrying its old file forward would
-    // resurrect them
-    val touchedSet = touched.toSet
-    val staged = stagedFiles(fs, versionDir)
-    val carried = cur.map(_.files).getOrElse(Map.empty)
-      .filterNot { case (b, _) => touchedSet(b) }
-    val manifest = carried ++ staged.files
-    // a touched bucket's delta layers were FOLDED into its rewrite
-    // above, so they are dropped here — the CoW commit doubles as that
-    // bucket's compaction; untouched buckets keep their layers
-    val carriedDeltas = cur.map(_.deltas).getOrElse(Map.empty)
-      .filterNot { case (b, _) => touchedSet(b) }
-    // ALWAYS recorded (not only for proper prefixes): a reader probing
-    // a keys-bucketed table by a prefix must be refused too — without
-    // the record, readKeys on a pre-prefix-era layout would hash probe
-    // columns that never laid the table out and silently miss rows
-    // properties CARRY FORWARD like the schema: a commit that sets
-    // none keeps the table's existing ones, a commit that sets some
-    // overrides those keys only — so a maintenance merge can never
-    // silently drop another writer's committed cursor/metadata
-    // bucket columns always recorded alongside the clustering columns
-    // (r12): per-file key ranges power layered-bucket fold pruning and
-    // key-range skipping through the SQL relation
-    val stats = cur.map(_.stats).getOrElse(Map.empty) ++
-      computeStats(spark, versionDir, (cluster ++ bucketCols).distinct,
-        dataSchema)
-    val vsets = mergedValueSets(spark, versionDir,
-      effProps.get(ValueSetColsProp).map(_.split(",", -1).toSeq)
-        .getOrElse(Seq.empty),
-      cur.map(_.valueSets).getOrElse(Map.empty), dataSchema)
-    val blms = mergedBlooms(spark, root, versionDir, effProps,
-      cur.map(_.blooms).getOrElse(Map.empty), dataSchema)
-    commitManifest(fs, root, version, nBuckets, dataSchema, manifest, nowMs,
-      Some(bucketCols), commit, cur.map(_.depths).getOrElse(Map.empty),
-      effProps, carriedDeltas, Some(keys), Some(orderCol), stats,
-      cur.map(_.lens).getOrElse(Map.empty) ++ staged.lens, vsets, blms)
-    gc(fs, root, version,
-      refsWithBlooms(manifest.valuesIterator.flatten.toSet ++
-        carriedDeltas.valuesIterator.flatten, blms),
-      cur, keepVersions, keepAgeMs, nowMs)
+        readMergedImage(spark, root, head.get, Some(presentTouched),
+            Some(next.schema))
+          .withColumn("kb", UpsertSink.bucketOfLayout(next.bucketCols.get,
+            next.nBuckets, next.depths))
+      else emptyWithKb(spark, next.schema)
+    // the carry set excludes every TOUCHED bucket, not just the staged
+    // ones — a touched bucket can legitimately stage NO file when
+    // tombstones removed its every key, and carrying its old file
+    // forward would resurrect them; its delta layers are folded into
+    // the rewrite, so they are dropped too
+    val (staged, n) = stageSlice(root, head,
+      rule(existing, withBucket).repartition(touched.length, col("kb")),
+      next.copy(files = next.files -- touched, deltas = next.deltas -- touched))
+    Some(n.copy(files = n.files ++ staged))
   }
 
   /** Drop versions outside the retention bounds and delete the files
@@ -2276,26 +2038,17 @@ object SnapshotUpsert {
     * surviving manifest references them and GC never revisits
     * unreferenced files), while leaving it listed would present a
     * partially-deleted version as readable/retained to time travel and
-    * the cursor's age-out check. */
-  /** The just-committed version's FULL reference set for GC
-    * protection: its data files plus those files' bloom sidecars (the
-    * committed manifest's B lines are filtered the same way). Without
-    * the sidecars in `newRefs`, a sidecar first written in a version
-    * being dropped — but carried forward by the current commit —
-    * would be reaped out from under the live manifest. */
-  private def refsWithBlooms(dataRefs: Set[String],
-      blooms: Map[String, Map[String, String]]): Set[String] =
-    dataRefs ++ blooms.iterator
-      .filter { case (rel, _) => dataRefs(rel) }
-      .flatMap(_._2.valuesIterator)
-
+    * the cursor's age-out check. `next` is the just-committed version;
+    * its [[Snapshot.allRefs]] (data files plus their bloom sidecars —
+    * a sidecar first written by a dropped version but carried forward
+    * must survive) are protected. */
   private def gcRetryPath(root: Path, v: Long): Path =
     new Path(root, f"$ManifestDir/.v$v%012d.gcretry")
 
-  private def gc(fs: FileSystem, root: Path, version: Long,
-      newRefs: Set[String], prev: Option[Snapshot],
+  private def gc(fs: FileSystem, root: Path, next: Snapshot,
+      prev: Option[Snapshot],
       keepVersions: Int, keepAgeMs: Option[Long], nowMs: Long): Unit = {
-    val oldestByCount = version - keepVersions + 1
+    val oldestByCount = next.version - keepVersions + 1
     val all = listVersions(fs, root)
     // memoized: with age-based retention many versions sit beyond the
     // count window for a long time, and each is consulted here by the
@@ -2303,7 +2056,7 @@ object SnapshotUpsert {
     // memo that is several manifest reads per version per commit (a
     // GET each on an object store) inside the serial commit section.
     // A manifest can legitimately VANISH between the listing and the
-    // read (r11: concurrent writers both run gc after their commits,
+    // read (concurrent writers both run gc after their commits,
     // and the other writer's reap may win the race) — None here, and
     // each consumer below decides: a missing DROPPED manifest is
     // already-reaped work, a missing RETAINED manifest aborts this gc
@@ -2332,7 +2085,7 @@ object SnapshotUpsert {
       keepAgeMs.forall(a => manifestOf(v).forall(_.commitTsMs <= nowMs - a)))
     if (dropped.isEmpty && parked.isEmpty) return
     val droppedSet = dropped.toSet
-    val retained = all.filterNot(droppedSet).filter(_ != version)
+    val retained = all.filterNot(droppedSet).filter(_ != next.version)
       .map(v => manifestOf(v))
     // a RETAINED manifest vanished between listing and read: another
     // writer is concurrently mutating retention state and the kept-set
@@ -2340,7 +2093,7 @@ object SnapshotUpsert {
     // the commit is already durable and the next commit's gc retries
     if (retained.exists(_.isEmpty)) return
     val kept: Set[String] =
-      retained.flatMap(_.get.allRefs).toSet ++ newRefs
+      retained.flatMap(_.get.allRefs).toSet ++ next.allRefs
     def reap(d: Long, manifest: Path, park: Boolean): Unit = {
       val snap =
         try readManifestAt(fs, root, manifest, d)
@@ -2769,7 +2522,9 @@ object SnapshotUpsert {
     * when a refresh produced no data changes (e.g. the consumed slice
     * was empty after a base rebucket) — the advance is still a real
     * atomic commit, subject to the same version race and `expectProps`
-    * CAS as a data commit. Returns the committed version. */
+    * CAS as a data commit; it makes one attempt, so a lost race
+    * surfaces [[ConcurrentCommitException]]. Returns the committed
+    * version. */
   def setProps(spark: SparkSession, targetDir: String,
       props: Map[String, String],
       expectProps: Map[String, String] = Map.empty,
@@ -2777,22 +2532,15 @@ object SnapshotUpsert {
       nowMs: Long = System.currentTimeMillis(),
       commit: CommitPrimitive = CreateExclusive): Long = {
     require(props.nonEmpty, "setProps: props must be non-empty")
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentSnapshot(fs, root).getOrElse(
-      sys.error(s"setProps: no committed version at $targetDir — " +
-        "properties live in version manifests; commit data first"))
-    checkExpectProps(Some(cur), root, expectProps)
-    val version = cur.version + 1
-    commitManifest(fs, root, version, cur.nBuckets, cur.schema, cur.files,
-      math.max(nowMs, cur.commitTsMs), cur.bucketCols, commit, cur.depths,
-      cur.props ++ props,
-      cur.deltas, cur.mergeKeys, cur.orderCol, cur.stats, cur.lens,
-      cur.valueSets, cur.blooms)
-    gc(fs, root, version, cur.allRefs.toSet, Some(cur), keepVersions,
-      keepAgeMs, nowMs)
-    version
+    publish(fs, root, expectProps, commit, 1, keepVersions, keepAgeMs,
+        nowMs) { head =>
+      val cur = head.getOrElse(
+        sys.error(s"setProps: no committed version at $targetDir — " +
+          "properties live in version manifests; commit data first"))
+      Some(cur.copy(props = cur.props ++ props))
+    }.get.version
   }
 
   /** Time-based time travel: the table as of wall-clock `tsMs` — the

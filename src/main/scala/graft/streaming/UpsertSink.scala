@@ -189,11 +189,11 @@ object UpsertSink {
     * sees) stays lazy: its extra collect pass column-prunes to the
     * keys, measured ~2x cheaper than materializing every column (seed
     * of 100M rows: 70.5 s snapshotted vs 34-40 s lazy). */
-  private[streaming] def withPreparedBatch(batch: DataFrame,
+  private[streaming] def withPreparedBatch[T](batch: DataFrame,
       keys: Seq[String], nBuckets: Int, populatedTable: Boolean,
       bucketCols: Seq[String] = Seq.empty,
       depths: Map[Int, Int] = Map.empty)(
-      use: DataFrame => Unit): Unit = {
+      use: DataFrame => T): T = {
     validateBatch(batch, keys, None)
     val bc = if (bucketCols.isEmpty) keys else bucketCols
     val withBucket0 = batch.withColumn("kb", bucketOfLayout(bc, nBuckets, depths))

@@ -46,9 +46,9 @@ class SnapshotHardeningSpec extends SparkSpec {
       val t = new Thread(() => {
         start.await()
         try {
-          SnapshotUpsert.commitManifest(fs, root, 2L, 4, schema,
-            Map(0 -> Seq(s"batches/v2-writer$i/kb=0/part-w$i.parquet")),
-            1000L + i)
+          SnapshotUpsert.commitManifest(fs, root,
+            SnapshotUpsert.Snapshot(2L, 4, 1000L + i, schema,
+              Map(0 -> Seq(s"batches/v2-writer$i/kb=0/part-w$i.parquet"))))
           wins.incrementAndGet()
         } catch { case e: RuntimeException => errors.add(e.getMessage) }
       })
