@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, shiftright, when}
 import org.apache.spark.sql.types.StructType
@@ -169,6 +170,11 @@ object TableIO {
     * @param partitions  >0: repartition to exactly n output files
     *                    (reference behavior with n=1); 0: keep the
     *                    plan's partitioning (scale default).
+    * @param sortBy      row order of the written files (default: none).
+    *                    n = 1: one shuffle plus a local sort, so the
+    *                    single file is in order with no sampling job;
+    *                    n > 1: range-partitioned then locally sorted,
+    *                    file by file; 0: a global `orderBy`.
     */
   def writeTable(
       df: DataFrame,
@@ -179,9 +185,15 @@ object TableIO {
       partitions: Int = 0,
       format: Format = Parquet,
       options: Map[String, String] = Map.empty,
+      sortBy: Seq[Column] = Nil,
   ): Unit = {
     val cast = castToSchema(df, schema)
-    val sized = if (partitions > 0) cast.repartition(partitions) else cast
+    val sized =
+      if (sortBy.isEmpty) { if (partitions > 0) cast.repartition(partitions) else cast }
+      else if (partitions == 1) cast.repartition(1).sortWithinPartitions(sortBy: _*)
+      else if (partitions > 1)
+        cast.repartitionByRange(partitions, sortBy: _*).sortWithinPartitions(sortBy: _*)
+      else cast.orderBy(sortBy: _*)
     val w = sized.write.mode(mode).partitionBy(partitionKeys: _*)
       .options(options)
     format match {
@@ -228,9 +240,8 @@ object TableIO {
   ): Unit = {
     require(sortCols.nonEmpty && partitions > 0,
       "range layout needs sort columns and a partition count")
-    df.repartitionByRange(partitions, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(mode).parquet(path)
+    writeTable(df, path, df.schema, mode, partitions = partitions,
+      sortBy = sortCols.map(col))
   }
 
   /** Z-ORDER (Morton-curve) layout write: the MULTI-column complement
@@ -288,31 +299,54 @@ object TableIO {
     * pays with it), so periodic compaction is table hygiene, not an
     * optimization. Sizing uses the CURRENT on-disk bytes (so the
     * output matches the actual compression ratio), the rewrite goes to
-    * a temp dir first and swaps in via rename — readers never observe
-    * a half-written directory. Returns the output file count. */
+    * a temp dir first and swaps in via [[swapIn]]. Returns the output
+    * file count. */
   def compact(
       spark: SparkSession,
       path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
   ): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.listStatus(hPath)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
+    val tmp = path + "__compact_tmp"
     spark.read.parquet(path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    if (!fs.rename(hPath, bak)) sys.error(s"compact: cannot move $path aside")
-    if (!fs.rename(tmp, hPath)) { // restore on failure
-      fs.rename(bak, hPath)
-      sys.error(s"compact: cannot swap in compacted $path")
-    }
-    fs.delete(bak, true)
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    swapIn(spark, tmp, path)
     n
+  }
+
+  /** Publish the directory `staged` as `target` by rename: the current
+    * `target` (if any) moves aside to `target__old`, `staged` takes its
+    * place, and the old copy is deleted. A reader sees the old or the
+    * new directory, never a half-written one. If `staged` is missing or
+    * cannot be moved in, the old directory stays (or is moved back) and
+    * the call raises. A `target__old` left by an interrupted swap is
+    * deleted when `target` exists; when `target` is missing it holds the
+    * last published copy, so the call raises instead of dropping it. */
+  def swapIn(spark: SparkSession, staged: String, target: String): Unit = {
+    val src = new Path(staged)
+    val dst = new Path(target)
+    val bak = new Path(target + "__old")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(src)) sys.error(s"swap: staged directory $staged does not exist")
+    val hadOld = fs.exists(dst)
+    if (fs.exists(bak)) {
+      if (!hadOld) sys.error(s"swap: $target is missing and $bak holds an " +
+        "interrupted swap's copy; move it back first")
+      fs.delete(bak, true)
+    }
+    if (hadOld) { if (!fs.rename(dst, bak)) sys.error(s"swap: cannot move $target aside") }
+    else fs.mkdirs(dst.getParent)
+    if (!fs.rename(src, dst)) {
+      if (hadOld) fs.rename(bak, dst)
+      sys.error(s"swap: cannot move $staged into $target")
+    }
+    if (hadOld) fs.delete(bak, true)
   }
 
   /** Execute SQL then write — the state-machine stage's primary path

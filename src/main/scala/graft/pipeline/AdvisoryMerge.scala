@@ -166,15 +166,22 @@ object AdvisoryMerge {
       .select("cve_id", "package", "status", "previous_status", "fixed_version",
         "internal_status", "data_source", "priority", "enrichment_timestamp",
         "transition_valid", "transition_reason", "change_type")
-    if (!sorted) classified
-    else classified.orderBy(
-      when(col("change_type") === "new", 1)
-        .when(col("change_type") === "status_changed", 2)
-        .when(col("change_type") === "blocked", 3)
-        .when(col("change_type") === "enriched_unchanged", 4)
-        .otherwise(5),
-      col("cve_id"))
+    if (sorted) classified.orderBy(processedOrder: _*) else classified
   }
+
+  /** The reference's row order of the processed table: change-type rank
+    * (new, status_changed, blocked, enriched_unchanged, then the rest),
+    * then `cve_id`. */
+  val processedOrder: Seq[Column] = Seq(
+    when(col("change_type") === "new", 1)
+      .when(col("change_type") === "status_changed", 2)
+      .when(col("change_type") === "blocked", 3)
+      .when(col("change_type") === "enriched_unchanged", 4)
+      .otherwise(5),
+    col("cve_id"))
+
+  /** The reference's row order of the upserted prod table. */
+  val prodOrder: Seq[Column] = Seq(col("cve_id"), col("package"))
 
   /** Overwrite-as-upsert: processed rows win, prod-only rows survive via
     * anti join (upsert_data.py:18-86). Not a MERGE — the whole table is
@@ -185,7 +192,7 @@ object AdvisoryMerge {
     val prodOnly = prod.join(
       processed.select("cve_id", "package"), Seq("cve_id", "package"), "left_anti")
     val combined = processed.union(prodOnly.select(cols: _*))
-    if (sorted) combined.orderBy(col("cve_id"), col("package")) else combined
+    if (sorted) combined.orderBy(prodOrder: _*) else combined
   }
 
   /** CVEs needing upstream enrichment: case-insensitive left join of the

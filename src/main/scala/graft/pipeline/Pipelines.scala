@@ -5,6 +5,7 @@ import graft.io.TableIO
 import graft.schemas.AdvisorySchemas
 import graft.statemachine.TransitionFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import java.time.temporal.ChronoUnit
@@ -16,6 +17,12 @@ import java.time.temporal.ChronoUnit
   * views, mirroring the reference's materialization barriers (a cheap
   * lineage cut; at scale, each stage's output is also independently
   * redriveable).
+  *
+  * Each intermediate is computed once: enrichment materializes the
+  * pending keys in one eager pass; the reference's row orders are
+  * applied by the single-file writes (`TableIO.writeTable(sortBy = …)`),
+  * not by global range sorts; and overwrite-mode prod is published by
+  * renaming the staged upsert into place (`TableIO.swapIn`).
   */
 object Pipelines {
 
@@ -69,38 +76,47 @@ object Pipelines {
   ): DataFrame = {
     val toEnrich = AdvisoryMerge.packagesToEnrich(echo, overrides)
 
-    val cache = EnrichmentCache.loadCache(spark, config.cachePath).persist()
     val cutoffMicros = now.minus((config.cacheTtlHours * 3600).toLong,
       ChronoUnit.SECONDS)
     val cutoff: Column = lit(java.sql.Timestamp.from(cutoffMicros))
-    val needed =
-      if (config.incrementalEnabled)
-        EnrichmentCache.filterRecentlyEnriched(toEnrich, cache, "nvd", cutoff)
-      else toEnrich
+    val cache = EnrichmentCache.loadCache(spark, config.cachePath).persist()
+    var needed: DataFrame = null
+    try {
+      // One eager materialization: the emptiness check, the NVD fetch and
+      // the cache merge below all read this copy, so the pending-key plan
+      // (echo scan, override join, cache anti join) runs once.
+      needed = (if (config.incrementalEnabled)
+          EnrichmentCache.filterRecentlyEnriched(toEnrich, cache, "nvd", cutoff)
+        else toEnrich).localCheckpoint(eager = true)
 
-    val normalized =
-      if (needed.isEmpty) TableIO.emptyTable(spark, AdvisorySchemas.normalizedEnrichment)
-      else {
-        val raw = NvdClient.enrichFromNvd(spark, needed, transport, nvdConfig,
-          Option(nowIso).getOrElse(() => now.toString))
-        val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
-        TableIO.writeTable(raw, rawPath, AdvisorySchemas.rawNvd,
-          partitions = config.outputPartitions)
-        val rawBack = TableIO.readTable(spark, rawPath, AdvisorySchemas.rawNvd)
-        val norm = AdvisoryMerge.normalizeNvd(rawBack, priority = 5)
-        val normPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/normalized/enrichment_source=nvd"
-        TableIO.writeTable(norm, normPath, AdvisorySchemas.normalizedEnrichment,
-          partitions = config.outputPartitions)
+      val normalized =
+        if (needed.isEmpty) TableIO.emptyTable(spark, AdvisorySchemas.normalizedEnrichment)
+        else {
+          val raw = NvdClient.enrichFromNvd(spark, needed, transport, nvdConfig,
+            Option(nowIso).getOrElse(() => now.toString))
+          val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
+          TableIO.writeTable(raw, rawPath, AdvisorySchemas.rawNvd,
+            partitions = config.outputPartitions)
+          val rawBack = TableIO.readTable(spark, rawPath, AdvisorySchemas.rawNvd)
+          val norm = AdvisoryMerge.normalizeNvd(rawBack, priority = 5)
+          val normPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/normalized/enrichment_source=nvd"
+          TableIO.writeTable(norm, normPath, AdvisorySchemas.normalizedEnrichment,
+            partitions = config.outputPartitions)
 
-        val merged = EnrichmentCache.mergedCacheEntries(
-          needed, Some(cache), "nvd",
-          now = lit(java.sql.Timestamp.from(now)))
-        EnrichmentCache.writeCache(spark, merged, config.cachePath)
-        TableIO.readTable(spark, normPath, AdvisorySchemas.normalizedEnrichment)
-      }
-    cache.unpersist()
-    normalized.createOrReplaceGlobalTempView("normalized_enrichment")
-    normalized
+          val merged = EnrichmentCache.mergedCacheEntries(
+            needed, Some(cache), "nvd",
+            now = lit(java.sql.Timestamp.from(now)))
+          EnrichmentCache.writeCache(spark, merged, config.cachePath)
+          TableIO.readTable(spark, normPath, AdvisorySchemas.normalizedEnrichment)
+        }
+      normalized.createOrReplaceGlobalTempView("normalized_enrichment")
+      normalized
+    } finally {
+      // released whether the stage succeeds or throws
+      if (needed != null)
+        needed.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist() }
+      cache.unpersist()
+    }
   }
 
   /** Stage 3 — merge + FSM + upsert into prod
@@ -122,11 +138,13 @@ object Pipelines {
       } else
         TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
 
-    val processed = AdvisoryMerge.mapNewInfo(echo, normalized, prod)
+    // the reference's row order is applied by the single-file write (one
+    // shuffle), not by a global sort that the write's shuffle discards
+    val processed = AdvisoryMerge.mapNewInfo(echo, normalized, prod, sorted = false)
     val processedPath =
       s"${config.stagingPath}/run_id=${config.runId}/state_machine/processed"
     TableIO.writeTable(processed, processedPath, AdvisorySchemas.cveStateMachine,
-      partitions = config.outputPartitions)
+      partitions = config.outputPartitions, sortBy = AdvisoryMerge.processedOrder)
     val processedBack =
       TableIO.readTable(spark, processedPath, AdvisorySchemas.cveStateMachine)
     processedBack.createOrReplaceGlobalTempView("processed_cve_state_machine")
@@ -167,15 +185,14 @@ object Pipelines {
         TableIO.emptyTable(spark, AdvisorySchemas.cveStateMachine)
       else graft.streaming.SnapshotUpsert.readSnapshot(spark, prodPath)
     } else {
-      val upserted = AdvisoryMerge.upsert(processedBack, prod)
-      // Read prod fully before overwriting it (the upsert's anti join
-      // must not stream from the path being rewritten).
+      // The upsert reads prod in full into the staged copy, which then
+      // replaces prod by directory rename: no second write of the table,
+      // and a reader sees the old prod or the new one, never a torn one.
+      val upserted = AdvisoryMerge.upsert(processedBack, prod, sorted = false)
       val upsertTmp = s"${config.stagingPath}/run_id=${config.runId}/state_machine/upserted"
       TableIO.writeTable(upserted, upsertTmp, AdvisorySchemas.cveStateMachine,
-        partitions = config.outputPartitions)
-      val finalDf = TableIO.readTable(spark, upsertTmp, AdvisorySchemas.cveStateMachine)
-      TableIO.writeTable(finalDf, prodPath, AdvisorySchemas.cveStateMachine,
-        partitions = config.outputPartitions)
+        partitions = config.outputPartitions, sortBy = AdvisoryMerge.prodOrder)
+      TableIO.swapIn(spark, upsertTmp, prodPath)
       TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
     }
   }

@@ -270,6 +270,19 @@ class TableIOSpec extends SparkSpec {
     assert(new java.io.File(dir).listFiles().map(_.getName).toSet == Set("t"))
   }
 
+  test("swapIn: a missing staged directory raises and leaves the target intact") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-swap").toString
+    Seq(1, 2, 3).toDF("v").write.parquet(s"$dir/prod")
+    intercept[RuntimeException](TableIO.swapIn(spark, s"$dir/staged", s"$dir/prod"))
+    assert(spark.read.parquet(s"$dir/prod").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    // the staged copy replaces the target, leaving nothing else behind
+    Seq(4, 5).toDF("v").write.parquet(s"$dir/staged")
+    TableIO.swapIn(spark, s"$dir/staged", s"$dir/prod")
+    assert(spark.read.parquet(s"$dir/prod").as[Int].collect().sorted.toSeq == Seq(4, 5))
+    assert(new java.io.File(dir).listFiles().map(_.getName).toSet == Set("prod"))
+  }
+
   test("parquet aggregate pushdown: MIN/MAX/COUNT answered from footer metadata") {
     import org.apache.spark.sql.functions._
     // pushdown is a DataSource V2 feature — parquet defaults to the V1

@@ -8,6 +8,7 @@ import org.apache.spark.sql.Row
 import java.nio.file.Files
 import java.time.Instant
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 object AdvisoryPipelineSpec {
   val advisoryJson: String =
@@ -40,6 +41,32 @@ object AdvisoryPipelineSpec {
         else (200, nvdResponse("Awaiting Analysis", None))
       }
   }
+}
+
+/** Walks executed plans through adaptive query stages and subqueries. */
+object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+/** Records every executed plan, tagged with the pipeline stage it ran in. */
+class PlanLog extends org.apache.spark.sql.util.QueryExecutionListener {
+  private val log = new java.util.concurrent.ConcurrentLinkedQueue[
+    (String, String, org.apache.spark.sql.execution.SparkPlan)]()
+  @volatile private var stage = ""
+
+  def during[T](name: String)(body: => T): T = {
+    stage = name
+    try body
+    finally org.apache.spark.graftspark.ListenerDrain.drain(
+      org.apache.spark.sql.SparkSession.active.sparkContext)
+  }
+
+  def all: Seq[(String, String, org.apache.spark.sql.execution.SparkPlan)] =
+    log.asScala.toSeq
+
+  def onSuccess(funcName: String,
+      qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+    log.add((stage, funcName, qe.executedPlan))
+  def onFailure(funcName: String,
+      qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
 }
 
 /** End-to-end golden test of the three-stage pipeline with a stubbed
@@ -148,6 +175,104 @@ class AdvisoryPipelineSpec extends SparkSpec {
       now = Instant.parse("2026-02-01T00:00:00Z"))
     assert(prod.count() == 0L)
     assert(prod.columns.contains("cve_id"))
+  }
+
+  test("re-driving a run_id in overwrite mode swaps in the same prod and " +
+      "leaves no backup or temp directories") {
+    val b = Files.createTempDirectory("advisory-e2e-redrive").toString
+    def runOnce(runId: String, at: String) =
+      Pipelines.run(spark, PipelineConfig.fromDefaults(runId, b), new StubTransport,
+        NvdConfig(partitions = 2), "http://stub", overridesDf, now = Instant.parse(at))
+        .collect().map(_.toSeq.toVector: Seq[Any]).toSet
+    runOnce("d1", "2026-02-01T00:00:00Z")
+    val first = runOnce("d2", "2026-02-01T00:01:00Z")
+    val again = runOnce("d2", "2026-02-01T00:01:00Z")
+    assert(first.size == 4)
+    assert(again == first)
+    assert(again.forall(_.last == "unchanged")) // change_type
+    val leftovers = Files.walk(java.nio.file.Paths.get(b)).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith("__old") || n.contains("__compact_")).toList
+    assert(leftovers.isEmpty, s"swap left directories behind: $leftovers")
+  }
+
+  test("enrichment releases the cache and the pending keys when a write throws") {
+    val b = Files.createTempDirectory("advisory-e2e-leak").toString
+    val cfg = PipelineConfig.fromDefaults("l1", b)
+    val echo = Pipelines.runIngest(spark, cfg, new StubTransport, "http://stub",
+      Some(overridesDf))
+    // a regular file where the staging directory should be: the raw NVD
+    // write cannot create its output directory
+    val blocker = Files.createFile(java.nio.file.Paths.get(b, "blocker")).toString
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    intercept[Exception] {
+      Pipelines.runEnrichment(spark, cfg.copy(stagingPath = blocker), new StubTransport,
+        NvdConfig(partitions = 2), echo, overridesDf,
+        now = Instant.parse("2026-02-01T00:00:00Z"))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("plan shape: no range exchange, the pending keys are computed once, " +
+      "and the single-file writes are in the reference order") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val b = Files.createTempDirectory("advisory-e2e-plans").toString
+    def cfg(runId: String) =
+      PipelineConfig.fromDefaults(runId, b).copy(outputPartitions = 1)
+    Pipelines.run(spark, cfg("p1"), new StubTransport, NvdConfig(partitions = 2),
+      "http://stub", overridesDf, now = Instant.parse("2026-02-01T00:00:00Z"))
+
+    // run 2, past the cache TTL: both pending keys are enriched again, so
+    // processed mixes enriched_unchanged and unchanged rows
+    val plans = new PlanLog
+    spark.listenerManager.register(plans)
+    val config = cfg("p2")
+    val now = Instant.parse("2026-02-01T01:00:00Z")
+    val transport = new StubTransport
+    try {
+      // the three calls Pipelines.run makes, with the stage noted between them
+      val echo = plans.during("ingest") {
+        Pipelines.runIngest(spark, config, transport, "http://stub", Some(overridesDf)) }
+      val normalized = plans.during("enrichment") {
+        Pipelines.runEnrichment(spark, config, transport, NvdConfig(partitions = 2),
+          echo, overridesDf, now) }
+      plans.during("statemachine") {
+        Pipelines.runStateMachine(spark, config, echo, normalized) }
+    } finally spark.listenerManager.unregister(plans)
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = PlanWalk.collectWithSubqueries(p) { case n => n }
+    val ranged = plans.all.filter { case (_, _, p) => nodes(p).exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false } }
+    assert(ranged.isEmpty, s"range exchanges in: ${ranged.map(_._2)}")
+
+    val echoDir = "run_id=p2/sources/data"
+    val echoScans = plans.all.filter { case (stage, _, p) =>
+      stage == "enrichment" && nodes(p).exists {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.toString.contains(echoDir))
+        case _ => false } }
+    assert(echoScans.map(_._2) == Seq("localCheckpoint"),
+      s"plans scanning the echo staging table during enrichment: ${echoScans.map(_._2)}")
+
+    def fileRows(dir: String): Seq[Row] =
+      new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+        .toSeq.sorted.flatMap(f => spark.read.parquet(f).collect().toSeq)
+    def rank(ct: String) = Seq("new", "status_changed", "blocked",
+      "enriched_unchanged").indexOf(ct) match { case -1 => 5; case i => i + 1 }
+    val staging = s"$b/output/staging/run_id=p2/state_machine"
+    val processed = fileRows(s"$staging/processed")
+      .map(r => (rank(r.getAs[String]("change_type")), r.getAs[String]("cve_id")))
+    assert(processed.map(_._1).toSet == Set(4, 5))
+    assert(processed == processed.sorted, s"processed is out of order: $processed")
+    val prod = fileRows(s"$b/output/prod/state_machine/cve_state_machine")
+      .map(r => (r.getAs[String]("cve_id"), r.getAs[String]("package")))
+    assert(prod.size == 4)
+    assert(prod == prod.sorted, s"prod is out of order: $prod")
   }
 
   test("distributed flatten matches driver-side flatten") {
