@@ -1,6 +1,7 @@
 package graft.enrichment
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.TableIO
 import graft.schemas.AdvisorySchemas
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -47,13 +48,14 @@ final case class NvdConfig(
   * src/advisory_pipeline/enrichment/apis/nvd/nvd_client.py:51-284),
   * re-architected for Spark's execution model: instead of `collect()`ing
   * every key to the driver and fanning out a thread pool there (which
-  * caps at one machine's sockets and memory), the key Dataset is
-  * repartitioned to `cfg.partitions` and each EXECUTOR partition runs
-  * its own rate-limited fetch loop via `mapPartitions`. The global rate
-  * is partitions x perPartitionRate, so the per-partition limiter is
-  * derated accordingly. At 100 TB / millions of keys this is the only
-  * shape that scales; on local[n] it behaves like the reference's
-  * 3-worker pool.
+  * caps at one machine's sockets and memory), the key Dataset is spread
+  * over `cfg.partitions` fetch partitions by `TableIO.withPartitions`
+  * (1: coalesced, no exchange; n > 1: repartitioned; 0: as planned) and
+  * each EXECUTOR partition runs its own rate-limited fetch loop via
+  * `mapPartitions`. The global rate is partitions x perPartitionRate,
+  * so the per-partition limiter is derated by the fetch's partition
+  * count. At 100 TB / millions of keys this is the only shape that
+  * scales; on local[n] it behaves like the reference's 3-worker pool.
   */
 object NvdClient {
 
@@ -127,10 +129,9 @@ object NvdClient {
       cfg: NvdConfig,
       nowIso: () => String = defaultNowIso,
   ): DataFrame = {
-    val perPartitionRate = cfg.rateLimitPerSec / math.max(cfg.partitions, 1)
-    val schema = AdvisorySchemas.rawNvd
-    val keyRows = cvesDf.select("cve_id", "package")
-    val enriched = keyRows.repartition(cfg.partitions).rdd.mapPartitions { it =>
+    val keys = TableIO.withPartitions(cvesDf.select("cve_id", "package"), cfg.partitions).rdd
+    val perPartitionRate = cfg.rateLimitPerSec / math.max(keys.getNumPartitions, 1)
+    val enriched = keys.mapPartitions { it =>
       val limiter = new RateLimiter(perPartitionRate)
       it.map { row =>
         val cveId = row.getString(0)
@@ -140,7 +141,7 @@ object NvdClient {
         Row(cveId, pkg, found, fixed.orNull, status.orNull, nowIso())
       }
     }
-    spark.createDataFrame(enriched, schema)
+    spark.createDataFrame(enriched, AdvisorySchemas.rawNvd)
   }
 
   private def defaultNowIso: () => String = () =>
@@ -149,15 +150,21 @@ object NvdClient {
 }
 
 /** Minimal blocking token-per-interval limiter (the reference used a
-  * `threading.Lock` + last-request timestamp; same shape). */
+  * `threading.Lock` + last-request timestamp; same shape). Spacing is
+  * measured on the monotonic `System.nanoTime`, so a wall-clock step
+  * (an NTP correction) neither stalls a fetch nor skips the spacing. */
 final class RateLimiter(permitsPerSec: Double) extends Serializable {
-  private val intervalMs: Long =
-    if (permitsPerSec <= 0) 0 else (1000.0 / permitsPerSec).toLong
-  private var lastAt = 0L
+  private val intervalNs: Long =
+    if (permitsPerSec <= 0) 0 else (1e9 / permitsPerSec).toLong
+  private var lastAt: Option[Long] = None
   def acquire(): Unit = synchronized {
-    val now = System.currentTimeMillis()
-    val waitMs = lastAt + intervalMs - now
-    if (waitMs > 0) Thread.sleep(waitMs)
-    lastAt = System.currentTimeMillis()
+    lastAt.foreach { last =>
+      var waitNs = last + intervalNs - System.nanoTime()
+      while (waitNs > 0) {
+        Thread.sleep((waitNs + 999999) / 1000000)
+        waitNs = last + intervalNs - System.nanoTime()
+      }
+    }
+    lastAt = Some(System.nanoTime())
   }
 }

@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.StructType
   *      `source_name=` directory reads keep their partition column.
   *
   * Scale departures from the reference (deliberate): `repartition(1)` is
-  * not hard-coded — the partition count is a parameter, `0` meaning
-  * "leave Spark's planning alone" (AQE coalescing decides); writers use
-  * dynamic partition overwrite so a 1000-executor cluster overwrites
-  * only the partitions it touched.
+  * never used — the partition count is a parameter ([[withPartitions]]),
+  * `1` coalescing without an exchange and `0` meaning "leave Spark's
+  * planning alone" (AQE coalescing decides); writers use dynamic
+  * partition overwrite so a 1000-executor cluster overwrites only the
+  * partitions it touched.
   */
 object TableIO {
 
@@ -39,6 +40,20 @@ object TableIO {
     * type — the universal schema-enforcement idiom. */
   def castToSchema(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+
+  /** The partition-count rule of every n-file writer and of the NVD
+    * fan-out. 1: `coalesce(1)`, no exchange; n > 1: round-robin
+    * `repartition(n)`; 0: the plan is left alone.
+    *
+    * The trade-off of 1: whatever runs after the plan's last exchange
+    * (or the whole plan, if it has none) runs in the single output task
+    * instead of in parallel ahead of a shuffle. For the advisory writes
+    * that is a scan, a few broadcast-hash-join probes and projections;
+    * a plan whose tail is expensive should be repartitioned first. */
+  def withPartitions(df: DataFrame, partitions: Int): DataFrame =
+    if (partitions == 1) df.coalesce(1)
+    else if (partitions > 1) df.repartition(partitions)
+    else df
 
   def emptyTable(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](), schema)
@@ -167,14 +182,17 @@ object TableIO {
     * so `format("avro")` cannot resolve here; ORC covers the
     * second-columnar-format role.
     *
-    * @param partitions  >0: repartition to exactly n output files
-    *                    (reference behavior with n=1); 0: keep the
+    * @param partitions  n > 0: exactly n output files (reference
+    *                    behavior with n = 1), by [[withPartitions]]: one
+    *                    file is a `coalesce(1)`, no exchange, so the
+    *                    plan's tail runs in the writer task; 0: keep the
     *                    plan's partitioning (scale default).
     * @param sortBy      row order of the written files (default: none).
-    *                    n = 1: one shuffle plus a local sort, so the
-    *                    single file is in order with no sampling job;
-    *                    n > 1: range-partitioned then locally sorted,
-    *                    file by file; 0: a global `orderBy`.
+    *                    n = 1: no exchange, `coalesce(1)` plus a local
+    *                    sort, so the single file is in order; n > 1:
+    *                    range-partitioned then locally sorted, file by
+    *                    file; 0: a global `orderBy`. Unsorted single
+    *                    files keep the input's partition order.
     */
   def writeTable(
       df: DataFrame,
@@ -189,8 +207,8 @@ object TableIO {
   ): Unit = {
     val cast = castToSchema(df, schema)
     val sized =
-      if (sortBy.isEmpty) { if (partitions > 0) cast.repartition(partitions) else cast }
-      else if (partitions == 1) cast.repartition(1).sortWithinPartitions(sortBy: _*)
+      if (sortBy.isEmpty) withPartitions(cast, partitions)
+      else if (partitions == 1) withPartitions(cast, 1).sortWithinPartitions(sortBy: _*)
       else if (partitions > 1)
         cast.repartitionByRange(partitions, sortBy: _*).sortWithinPartitions(sortBy: _*)
       else cast.orderBy(sortBy: _*)

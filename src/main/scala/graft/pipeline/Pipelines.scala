@@ -19,10 +19,11 @@ import java.time.temporal.ChronoUnit
   * redriveable).
   *
   * Each intermediate is computed once: enrichment materializes the
-  * pending keys in one eager pass; the reference's row orders are
-  * applied by the single-file writes (`TableIO.writeTable(sortBy = …)`),
-  * not by global range sorts; and overwrite-mode prod is published by
-  * renaming the staged upsert into place (`TableIO.swapIn`).
+  * pending keys in one eager pass; the single-file writes coalesce
+  * rather than shuffle, and apply the reference's row orders with a
+  * local sort (`TableIO.writeTable(sortBy = …)`), not a global range
+  * sort; and overwrite-mode prod is published by renaming the staged
+  * upsert into place (`TableIO.swapIn`).
   */
 object Pipelines {
 
@@ -62,7 +63,8 @@ object Pipelines {
     * (enrichment/pipeline.py:122-178). Returns the normalized output
     * (also written under `enrichment/normalized/enrichment_source=`).
     *
-    * The `count() == 0` short-circuit is kept: when the TTL cache
+    * The reference's `count() == 0` short-circuit is kept, as
+    * `isEmpty` on the materialized pending keys: when the TTL cache
     * covers everything, no API call and no downstream work happens. */
   def runEnrichment(
       spark: SparkSession,
@@ -92,8 +94,14 @@ object Pipelines {
       val normalized =
         if (needed.isEmpty) TableIO.emptyTable(spark, AdvisorySchemas.normalizedEnrichment)
         else {
-          val raw = NvdClient.enrichFromNvd(spark, needed, transport, nvdConfig,
+          val fetched = NvdClient.enrichFromNvd(spark, needed, transport, nvdConfig,
             Option(nowIso).getOrElse(() => now.toString))
+          // a single-file write coalesces, which would run the rate-limited
+          // loops of a fetch spread over several partitions one after another
+          // in the writer task: gather its output (a row per key) by exchange
+          val raw =
+            if (config.outputPartitions == 1 && nvdConfig.partitions != 1) fetched.repartition(1)
+            else fetched
           val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
           TableIO.writeTable(raw, rawPath, AdvisorySchemas.rawNvd,
             partitions = config.outputPartitions)
@@ -138,8 +146,8 @@ object Pipelines {
       } else
         TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
 
-    // the reference's row order is applied by the single-file write (one
-    // shuffle), not by a global sort that the write's shuffle discards
+    // the reference's row order is applied by the single-file write (a
+    // coalesce and a local sort), not by a separate global sort
     val processed = AdvisoryMerge.mapNewInfo(echo, normalized, prod, sorted = false)
     val processedPath =
       s"${config.stagingPath}/run_id=${config.runId}/state_machine/processed"

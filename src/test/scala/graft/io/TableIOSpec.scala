@@ -32,6 +32,32 @@ class TableIOSpec extends SparkSpec {
     assert(back.count() == 2)
   }
 
+  test("a one-file write coalesces: no exchange, every row in one file, in order " +
+      "when sorted") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val schema = StructType(Seq(StructField("id", LongType), StructField("k", LongType)))
+    // four input partitions, k not in input order
+    val df = spark.range(0, 1000, 1, 4).select(col("id"), pmod(col("id") * 7919, lit(1000)).as("k"))
+    assert(df.rdd.getNumPartitions == 4)
+    for (sortBy <- Seq(Nil, Seq(col("k")))) {
+      val out = s"$tmp/one_file_${sortBy.size}"
+      val plans = new graft.pipeline.PlanLog
+      spark.listenerManager.register(plans)
+      try plans.during("write") { TableIO.writeTable(df, out, schema, partitions = 1, sortBy = sortBy) }
+      finally spark.listenerManager.unregister(plans)
+      val exchanges = plans.all.flatMap { case (_, _, p) =>
+        graft.pipeline.PlanWalk.collectWithSubqueries(p) { case e: ShuffleExchangeExec => e } }
+      assert(plans.all.nonEmpty && exchanges.isEmpty, s"sortBy=$sortBy: $exchanges")
+      val files = new java.io.File(out).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"sortBy=$sortBy: ${files.toSeq}")
+      val rows = spark.read.parquet(files.head).collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.map(_._1).sorted.toSeq == (0L until 1000L))
+      if (sortBy.nonEmpty) assert(rows.map(_._2).toSeq == (0L until 1000L))
+      else assert(rows.map(_._1).toSeq == (0L until 1000L)) // the input's partition order
+    }
+  }
+
   test("multipath read unions partition dirs; missing paths skipped") {
     val df = TableIO.readTableMultipath(spark,
       Seq(s"$tmp/echo", s"$tmp/nope"), AdvisorySchemas.echoAdvisory)

@@ -29,13 +29,16 @@ object AdvisoryPipelineSpec {
 
   /** Top-level (serializable) stub — executors call it from
     * mapPartitions, so it must not capture the test suite. Calls are
-    * counted in a static so the driver can assert on them. */
+    * counted in a static so the driver can assert on them, together with
+    * the task count of the stage each NVD call ran in. */
   val nvdCalls = new AtomicInteger(0)
+  val nvdStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
   class StubTransport extends HttpTransport {
     def get(url: String, headers: Map[String, String]): (Int, String) =
       if (url.contains("data.json")) (200, advisoryJson)
       else {
         nvdCalls.incrementAndGet()
+        Option(org.apache.spark.TaskContext.get()).foreach(t => nvdStageTasks.add(t.numPartitions()))
         if (url.contains("CVE-2024-3"))
           (200, nvdResponse("Analyzed", Some("3.0.14")))
         else (200, nvdResponse("Awaiting Analysis", None))
@@ -217,7 +220,9 @@ class AdvisoryPipelineSpec extends SparkSpec {
 
   test("plan shape: no range exchange, the pending keys are computed once, " +
       "and the single-file writes are in the reference order") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     val b = Files.createTempDirectory("advisory-e2e-plans").toString
@@ -233,6 +238,8 @@ class AdvisoryPipelineSpec extends SparkSpec {
     val config = cfg("p2")
     val now = Instant.parse("2026-02-01T01:00:00Z")
     val transport = new StubTransport
+    nvdCalls.set(0)
+    nvdStageTasks.clear()
     try {
       // the three calls Pipelines.run makes, with the stage noted between them
       val echo = plans.during("ingest") {
@@ -249,6 +256,23 @@ class AdvisoryPipelineSpec extends SparkSpec {
       case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
       case _ => false } }
     assert(ranged.isEmpty, s"range exchanges in: ${ranged.map(_._2)}")
+
+    // one output file is reached by coalescing; the only single-partition
+    // exchange gathers the 2-way NVD fetch for the raw write, so the
+    // fetch's two rate-limited loops still run as two tasks
+    def writtenPath(p: SparkPlan): String = nodes(p).collectFirst {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+        c.outputPath.toString }.getOrElse("")
+    val singles = plans.all.flatMap { case (_, _, p) => nodes(p).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.numPartitions == 1 =>
+        (writtenPath(p), e.child) } }
+    assert(singles.map(_._1.split("run_id=p2/").last) == Seq("enrichment/raw/nvd"),
+      s"single-partition exchanges in the writes of: ${singles.map(_._1)}")
+    assert(singles.forall(s => nodes(s._2).exists(_.isInstanceOf[RDDScanExec])),
+      s"the single-partition exchange is not over the NVD fetch: ${singles.map(_._2)}")
+    assert(nvdCalls.get() == 2)
+    assert(nvdStageTasks.asScala.toSeq == Seq(2, 2),
+      s"task counts of the stages the NVD calls ran in: ${nvdStageTasks.asScala}")
 
     val echoDir = "run_id=p2/sources/data"
     val echoScans = plans.all.filter { case (stage, _, p) =>
