@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Benchmark main: times every registered query end to end and prints
   * ONE JSON line. Queries execute through the `noop` sink rather than
@@ -11,28 +13,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.local("graft-bench", defaultCpus = 32)
     // SPARK_GRAFT_INIT_PARTITIONS: AQE's initial shuffle partition
     // count (coalesced down after the fact). The scale knob for runs
     // decades above the tuned sf: 32 initial partitions at 60M-row
     // shuffles means multi-GB sort partitions that spill; a larger
     // initial count keeps partitions memory-sized and AQE merges the
     // small ones back — exactly what a real cluster config would do.
-    val initParts = sys.env.get("SPARK_GRAFT_INIT_PARTITIONS")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.getOrElse(cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default 100 thrashes across ~47 queries x several codegen units:
-      // by the time the rescue sweep revisits a query its generated
-      // classes would have been evicted and recompiled
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
+        spark.conf.get("spark.sql.shuffle.partitions")))
+    // the _serial_oracle twins' global windows are deliberate: mute their warning
+    Configurator.setLevel(classOf[WindowExec].getName, Level.ERROR)
 
     // Warm the JVM + file-system metadata so the first timed query does
     // not absorb session startup. (docsOnly scale dirs carry no

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Wire up with `spark.sql.extensions=graft.GraftExtensions` (cluster
   * config — every session gets the functions, including ones the
-  * application code never touches) or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * application code never touches) or the session builder's
+  * `withExtensions(new GraftExtensions)`.
   * The imperative registrars ([[graft.functions.VectorExpressions.register]],
   * [[graft.statemachine.TransitionFunctions.registerUdfs]]) remain for
   * sessions created without extension config.

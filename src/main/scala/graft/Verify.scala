@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.execution.window.WindowExec
+
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +16,9 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-verify", defaultCpus = 4)
+    // the _serial_oracle twins' global windows are deliberate: mute their warning
+    Configurator.setLevel(classOf[WindowExec].getName, Level.ERROR)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

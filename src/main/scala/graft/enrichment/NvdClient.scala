@@ -106,15 +106,18 @@ object NvdClient {
     var attempt = 0
     while (attempt < cfg.maxRetries) {
       limiter.acquire()
-      try {
-        val (code, body) = transport.get(url, headers)
-        if (code == 200) return parseResponse(body)
-        else if (code == 403) sleep(cfg.forbiddenWaitMs)
-        else sleep(cfg.retryBackoffMs)
-      } catch {
-        case _: Exception => sleep(cfg.retryBackoffMs)
-      }
+      val waitMs =
+        try {
+          val (code, body) = transport.get(url, headers)
+          if (code == 200) return parseResponse(body)
+          else if (code == 403) cfg.forbiddenWaitMs
+          else cfg.retryBackoffMs
+        } catch {
+          case _: Exception => cfg.retryBackoffMs
+        }
       attempt += 1
+      // wait only when another attempt follows
+      if (attempt < cfg.maxRetries) sleep(waitMs)
     }
     (false, None, None)
   }

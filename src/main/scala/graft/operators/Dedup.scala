@@ -86,7 +86,7 @@ object Dedup {
   def shingleSets(df: DataFrame, textCol: String, idCol: String, n: Int = 3): DataFrame =
     // Fan.out: the shingle+md5 projection is the family's dominant
     // cost and fuses into the scan stage — on the single-split bench
-    // files that stage is one task (tools/ScanFanout: 2x after the
+    // files that stage is one task (tools/ScanFanout@3a89fdd: 2x after the
     // fan-out; identity when the scan already arrives in many splits)
     Fan.out(df.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"), words(col("__t")).as("__ws"))
@@ -210,7 +210,7 @@ object Dedup {
     val sets = shingleSets(df, textCol, idCol, n)
       .select(col("id"), col("s"), size(col("s")).as("sz"))
     // Join strategy: conf spark.graft.dedup.pairJoin (an experiment /
-    // deployment override — tools/DedupHintCompare flips it through
+    // deployment override — tools/DedupHintCompare@3a89fdd flips it through
     // the REGISTERED queries) > explicit `verifyJoin` (the callsite
     // default) > size-adaptive default (below).
     //  - "merge": sort-merge puts hashpartitioning(id) Exchanges under
@@ -221,7 +221,7 @@ object Dedup {
     //    set per hop) shuffle — candidates ≪ corpus.
     //  - "auto": leave the choice to the planner's size estimates.
     // The right mode depends on the PAIRS side and the corpus size
-    // (measured, tools/DedupHintCompare — interleaved, order-rotated
+    // (measured, tools/DedupHintCompare@3a89fdd — interleaved, order-rotated
     // per round — at sf0.1 and 10x docs, re-measured after the
     // shingle Fan.out landed):
     //  - minhash-derived pairs: merge's extra pair-side sorts + AQE
@@ -701,7 +701,7 @@ object Dedup {
   def winnowedWindowHashes(df: DataFrame, textCol: String, idCol: String,
       k: Int, stride: Int): DataFrame = {
     require(k >= 1 && stride >= 1, "k and stride must be >= 1")
-    // Fan.out tried here and REVERTED (tools/FanCompare, sf0.1, 4
+    // Fan.out tried here and REVERTED (tools/FanCompare@3a89fdd, sf0.1, 4
     // rotated rounds): q_substring_dups 0.97 -> 1.15 med,
     // q_substring_dup_pairs 0.96 -> 1.31, q_decontaminate_substring
     // 0.52 -> 0.82 — the rolling kernel is O(1) per position (unlike

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * partial aggregation, decimal products) — runs as ONE task until
   * the first exchange, idling the other cores on exactly the stages
   * that dominate the text/dedup family (measured in
-  * tools/ScanFanout: the shingle+md5 kernel is 2x faster after a
+  * tools/ScanFanout@3a89fdd: the shingle+md5 kernel is 2x faster after a
   * fan-out; a CHEAP projection is ~1.5x slower, because the shuffle
   * then outweighs the work — so this is applied per-operator, only in
   * front of provably expensive projections, never in QueryDef.load).
@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   * real scale inputs come in many splits and this is the identity —
   * no constant tuned for local[32] leaks into cluster plans.
   * `spark.graft.scan.fanout=off` disables it globally (the
-  * measurement override used by tools/FanCompare).
+  * measurement override used by tools/FanCompare@3a89fdd).
   */
 object Fan {
   def out(df: DataFrame): DataFrame = {
@@ -44,7 +44,7 @@ object Fan {
     * scan arrives as a single split. Unlike [[out]] this is not about
     * split counts — the exchange is justified at any scale by (1)+(2),
     * so it is unconditional; `spark.graft.scan.fanout=off` remains the
-    * measurement override (tools/FanCompare A/B's the original shape). */
+    * measurement override (tools/FanCompare@3a89fdd A/B's the original shape). */
   def stage(df: DataFrame, c: org.apache.spark.sql.Column): DataFrame =
     if (df.sparkSession.conf.getOption("spark.graft.scan.fanout")
         .contains("off")) df

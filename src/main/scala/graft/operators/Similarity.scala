@@ -247,10 +247,9 @@ object Similarity {
   def autoCells(n: Long, floor: Int = 16): Int =
     math.max(floor, math.round(math.sqrt(n.toDouble)).toInt)
 
-  /** The probe+score stage of [[ivfTopK]], exposed for candidate-count
-    * instrumentation (the scale rehearsal's box-load-immune metric):
-    * every (query, neighbor) pair that reaches the exact cosine. */
-  private[graft] def ivfScored(assigned: DataFrame, centroids: DataFrame,
+  /** The probe+score stage of [[ivfTopK]]: every (query, neighbor) pair
+    * that reaches the exact cosine. */
+  private def ivfScored(assigned: DataFrame, centroids: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String,
       nProbe: Int): DataFrame =
     ivfScoredProbes(assigned,

@@ -232,7 +232,7 @@ object TextAnalysis {
   def unigramSurprise(df: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String): org.apache.spark.sql.DataFrame = {
     // Fan.stage(doc_id) on the token stream tried here and REVERTED
-    // (tools/FanCompare, sf0.1, 4 rotated rounds): 0.69 -> 0.85 med —
+    // (tools/FanCompare@3a89fdd, sf0.1, 4 rotated rounds): 0.69 -> 0.85 med —
     // shuffling the exploded token rows costs more than the shared
     // evaluation + local per-doc sum save (the bigram case wins the
     // same trade only because its pair stream feeds a vocab^2-sized
@@ -248,7 +248,7 @@ object TextAnalysis {
     // for null-text docs, which must not inflate the corpus total
     val total = toks.agg(count(col("term")).as("n"))
     // Folding termCounts x total into one broadcast model (the bigram
-    // recipe) tried and REVERTED (tools/ShapeVariants, row-identical,
+    // recipe) tried and REVERTED (tools/ShapeVariants@3a89fdd, row-identical,
     // rotated, sf0.1): 0.48 -> 0.51 med — the planner already
     // broadcasts both small sides here, and the crossJoin fold only
     // adds a build step before the probe can start.
@@ -299,7 +299,7 @@ object TextAnalysis {
     * explicit broadcast the third docs decade (5M docs, 923k distinct
     * bigrams) tipped Catalyst's estimate into SortMergeJoin, shuffling
     * the 265M-row occurrence stream a second time. Measured
-    * (tools/LmVariants, interleaved + rotated): staged+folded 0.89 s
+    * (tools/LmVariants@3a89fdd, interleaved + rotated): staged+folded 0.89 s
     * median vs 1.54 s current at sf0.1; neutral at 10x docs (1.44 vs
     * 1.38 — the staged shuffle of narrow (doc_id, a, b) rows costs
     * about what the avoided second tokenize pass saves there). If a
@@ -308,7 +308,7 @@ object TextAnalysis {
     * broadcast and take the shuffle join — same results. */
   def bigramSurprise(df: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String): org.apache.spark.sql.DataFrame = {
-    // Fan.out tried here and REVERTED (tools/FanCompare, sf0.1):
+    // Fan.out tried here and REVERTED (tools/FanCompare@3a89fdd, sf0.1):
     // q_lm_perplexity 1.71 -> 2.09 med — the staged doc_id exchange
     // below already parallelizes everything past the split, and the
     // fan shuffle only adds a barrier before it.
@@ -350,7 +350,7 @@ object TextAnalysis {
     * vocabulary never sits on one node. */
   def tfIdf(df: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String): org.apache.spark.sql.DataFrame = {
-    // Fan.out tried here and REVERTED (tools/FanCompare, sf0.1, 4
+    // Fan.out tried here and REVERTED (tools/FanCompare@3a89fdd, sf0.1, 4
     // rotated rounds): q_text_tfidf 0.96 -> 1.46 med — the text
     // shuffle outweighs the parallelized tokenize because the
     // (doc,term) partial aggregation barely collapses (terms are
@@ -494,7 +494,7 @@ object TextAnalysis {
       textCol: String, idCol: String,
       restrictTerms: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
-    // Fan.out tried here and REVERTED (tools/FanCompare, sf0.1):
+    // Fan.out tried here and REVERTED (tools/FanCompare@3a89fdd, sf0.1):
     // q_text_bm25 1.31 -> 1.37 med, q_hybrid_retrieval 2.04 -> 2.51 —
     // the count_eq kernel made this projection cheap, and the staged
     // doc_id exchange downstream already parallelizes the heavy part,

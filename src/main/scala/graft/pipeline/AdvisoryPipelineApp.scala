@@ -1,9 +1,9 @@
 package graft.pipeline
 
+import graft.Sessions
 import graft.enrichment.{JdkHttpTransport, NvdConfig}
 import graft.io.TableIO
 import graft.schemas.AdvisorySchemas
-import org.apache.spark.sql.SparkSession
 
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
@@ -22,22 +22,12 @@ object AdvisoryPipelineApp {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: <basePath> <advisoryUrl> [jdbcUrl jdbcTable]")
     val Array(basePath, advisoryUrl) = args.take(2)
-    val spark = SparkSession.builder()
-      .appName("advisory-pipeline")
-      // spark-submit injects the master on a cluster; default to local
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("advisory-pipeline", defaultCpus = 32)
 
     val runId = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss"))
     val config = PipelineConfig.fromDefaults(runId, basePath)
+    Pipelines.configure(spark, config)
     val transport = new JdkHttpTransport()
     val overrides =
       if (args.length >= 4) {

@@ -1,9 +1,10 @@
 package graft.pipeline
 
+import graft.Sessions
 import graft.operators.{Corpus, Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Runnable driver for the training-data corpus build — the corpus
   * counterpart of [[AdvisoryPipelineApp]]. Reads a documents table,
@@ -56,17 +57,8 @@ object CorpusPipelineApp {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: <docsParquet> <outDir> [evalParquet]")
     val Array(docsPath, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .appName("corpus-pipeline")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("corpus-pipeline", defaultCpus = 32)
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val docs = spark.read.parquet(docsPath)
     val evalSet = args.lift(2)

@@ -12,7 +12,6 @@ final case class PipelineConfig(
     cacheTtlHours: Double = 0.05,
     incrementalEnabled: Boolean = true,
     outputPartitions: Int = 1,
-    batchSize: Int = 1000,
     // SURVEY §2 M7: the reference configures a checkpoint dir it never
     // uses (ap/dependencies.py:44-45). Kept as an optional knob: when
     // set, [[Pipelines.configure]] applies it so RDD/eager checkpoints

@@ -25,14 +25,14 @@ object AdvisoryQueries {
 
   // ---- shared, dialect-neutral derivation fragments ----
 
-  private[graft] val echoCols = Seq(
+  private val echoCols = Seq(
     "'CVE-' || CAST(o_orderkey AS STRING) AS cve_id",
     "'pkg-' || CAST(o_orderkey % 40 AS STRING) AS package_name",
     "CASE WHEN o_orderstatus = 'F' THEN '1.0.' || CAST(o_orderkey % 10 AS STRING) " +
       "WHEN o_orderstatus = 'P' THEN '' ELSE NULL END AS fixed_version",
   )
 
-  private[graft] def normCols(dateExpr: String) = Seq(
+  private def normCols(dateExpr: String) = Seq(
     "'CVE-' || CAST(l_orderkey AS STRING) AS cve_id",
     "'pkg-' || CAST(l_orderkey % 40 AS STRING) AS package",
     "CASE WHEN l_returnflag = 'R' THEN '2.0.' || CAST(l_linenumber AS STRING) " +
@@ -48,7 +48,7 @@ object AdvisoryQueries {
     "l_suppkey",
   )
 
-  private[graft] def prodCols(dateExpr: String) = Seq(
+  private def prodCols(dateExpr: String) = Seq(
     "'CVE-' || CAST(o_orderkey AS STRING) AS cve_id",
     "'pkg-' || CAST(o_orderkey % 40 AS STRING) AS package",
     "CASE o_orderkey % 7 WHEN 0 THEN 'unknown' WHEN 1 THEN 'pending_upstream' " +
@@ -106,29 +106,18 @@ object AdvisoryQueries {
   private def echoDf(s: SparkSession, d: String) =
     QueryDef.load(s, d, "orders").selectExpr(echoCols: _*)
 
-  private def normalizedDf(s: SparkSession, d: String) =
-    QueryDef.load(s, d, "lineitem")
-      .selectExpr(normCols("date_format(l_shipdate, 'yyyy-MM-dd')"): _*)
-
   private def prodDf(s: SparkSession, d: String) =
     QueryDef.load(s, d, "orders").filter("o_orderkey % 3 = 0")
       .selectExpr(prodCols("date_format(o_orderdate, 'yyyy-MM-dd')"): _*)
 
-  /** The exact dedup tiebreak q_advisory_merge runs with — shared with
-    * the scale rehearsal ([[graft.tools.BucketedMergeAtScale]]) so the
-    * bucketed and unbucketed variants time the identical computation. */
-  private[graft] def mergeTiebreak: Seq[org.apache.spark.sql.Column] =
+  /** The dedup tiebreak q_advisory_merge runs with. */
+  private def mergeTiebreak: Seq[org.apache.spark.sql.Column] =
     Seq(col("l_linenumber").desc, col("l_returnflag").desc,
       col("l_partkey").desc, col("l_suppkey").desc)
 
-  /** The merge's derived inputs (echo, normalized, prod) — exposed for
-    * the bucketed-at-scale rehearsal. */
-  private[graft] def mergeInputs(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
-    (echoDf(s, d), normalizedDf(s, d), prodDf(s, d))
-
   /** The best-enrichment dedup of q_advisory_merge, run on RAW lineitem
     * rows before any string derivation — measured 2x the ranking-window-
-    * on-derived-strings shape (tools/AdvisoryVariants: 1.63 s -> 0.83 s
+    * on-derived-strings shape (tools/AdvisoryVariants@3a89fdd: 1.63 s -> 0.83 s
     * at sf0.1) because (a) the per-key winner comes from a sort-free
     * map-side max_by aggregation on the numeric key instead of a
     * two-sort window over two derived string keys, and (b) the derived
@@ -157,12 +146,12 @@ object AdvisoryQueries {
     *     Verified: exceptAll 0/0 vs the window form at sf0.1
     *     (AdvisoryVariants) and oracle hash PASS at sf0.001+sf0.01.
     *     A reduced packed-BIGINT key (priority, shipdate, linenumber
-    *     only — tools/AdvisoryVariants variant F) is NOT equivalent
+    *     only — tools/AdvisoryVariants@3a89fdd variant F) is NOT equivalent
     *     for exactly this reason (29 extra rows from 84 tied groups)
     *     and was rejected; it also only measured ~0.1 s faster before
     *     paying for a tie fix-up. */
-  private[graft] def bestEnrichmentDf(s: SparkSession, d: String): DataFrame = {
-    // Fan.out tried on this scan and REVERTED twice (tools/FanCompare
+  private def bestEnrichmentDf(s: SparkSession, d: String): DataFrame = {
+    // Fan.out tried on this scan and REVERTED twice (tools/FanCompare@3a89fdd
     // with clearCache between builds): off med 1.06 vs auto 1.35 at
     // sf0.1 on the old full-payload shape, and off 0.92 vs auto 1.61
     // re-measured AFTER the narrowing below — even at 6 columns the
@@ -178,7 +167,7 @@ object AdvisoryQueries {
     // the 6 ordering fields (guide §2.3 "narrower types" / §6 column
     // pruning). Tie groups are unaffected: rows tying on the ENTIRE
     // tuple are literally the same struct value. Row-identical
-    // (tools/ShapeVariants); oracle green at sf0.001 + sf0.01.
+    // (tools/ShapeVariants@3a89fdd); oracle green at sf0.001 + sf0.01.
     val raw = QueryDef.load(s, d, "lineitem")
     val ordStruct = struct((col("l_linenumber") % 3).cast("int").as("__prio"),
       col("l_shipdate").as("l_shipdate"),
@@ -201,7 +190,7 @@ object AdvisoryQueries {
     // range-partition pass.
     // preRanked without mergeKey: joining on the numeric __mk instead
     // of the (cve_id, package) strings measured consistently SLOWER at
-    // sf0.1 (tools/AdvisoryMergeCompare, interleaved + order-rotated:
+    // sf0.1 (tools/AdvisoryMergeCompare@3a89fdd, interleaved + order-rotated:
     // P min 1.058 s vs PK 1.280 s vs OLD 1.997 s) — AQE broadcast-joins
     // the small sides either way, so the narrower key only adds plan
     // nodes here. At sf1 the ordering flips (PK 1.754 < P 2.008 <

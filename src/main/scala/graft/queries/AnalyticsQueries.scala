@@ -846,7 +846,7 @@ object AnalyticsQueries {
       // set's n flips 0 -> NULL sum — lineitem is never empty at any
       // SF; oracle-gated.) Measured: 0.95 -> 0.33 s bench.
       // (Fan.out on the pre-aggregate input tried and REVERTED —
-      // tools/FanCompare: 0.73 -> 1.29 med at sf0.1; the fan shuffle
+      // tools/FanCompare@3a89fdd: 0.73 -> 1.29 med at sf0.1; the fan shuffle
       // dwarfs the single-task 3-column sum.)
       (s, d) => load(s, d, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))

@@ -297,7 +297,7 @@ object CoreQueries {
     // exact decimal sums, count, min/max.
     QueryDef(
       "q_agg_groupby",
-      // Fan.out tried and REVERTED (tools/FanCompare: 1.07 -> 1.32 med
+      // Fan.out tried and REVERTED (tools/FanCompare@3a89fdd: 1.07 -> 1.32 med
       // at sf0.1) — shuffling 600k 6-col rows costs more than the
       // single-task decimal sums save.
       (s, d) => load(s, d, "lineitem")
@@ -351,7 +351,7 @@ object CoreQueries {
       // (1 scan + 1 exchange read by both branches vs 4 scans + the
       // distinct/set-op exchanges). Each key emits at most one row per
       // branch, exactly the set-operator multiplicity. Row-identical
-      // (tools/ShapeVariants); oracle unchanged.
+      // (tools/ShapeVariants@3a89fdd); oracle unchanged.
       (s, d) => {
         val counts = load(s, d, "lineitem")
           .filter(col("l_returnflag").isin("R", "A"))

@@ -808,7 +808,7 @@ object CorpusQueries {
     QueryDef(
       "q_ngram_top",
       (s, d) => {
-        // Fan.out tried here and REVERTED (tools/FanCompare, sf0.1, 4
+        // Fan.out tried here and REVERTED (tools/FanCompare@3a89fdd, sf0.1, 4
         // rotated rounds): 0.82 -> 0.90 med — the (lang,bigram)
         // partial count collapses the exploded stream well enough
         // that the text shuffle costs more than the parallelized

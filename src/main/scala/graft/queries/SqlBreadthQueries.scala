@@ -106,7 +106,7 @@ object SqlBreadthQueries {
       "q_array_hof",
       // Folding n_big / doubled_sum into the groupBy as direct
       // aggregates (count-if / 2*sum — exact integer identities of the
-      // HOF reductions) tried and REVERTED (tools/ShapeVariants,
+      // HOF reductions) tried and REVERTED (tools/ShapeVariants@3a89fdd,
       // row-identical, interleaved + rotated, sf0.1): 0.58 -> 0.65
       // med — two extra aggregation buffers through the shuffle cost
       // more than the per-row HOF passes over the (tiny, ~4-element)

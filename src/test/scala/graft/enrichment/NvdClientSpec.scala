@@ -66,8 +66,20 @@ class NvdClientSpec extends AnyFunSuite {
 
   test("always 500 gives up after maxRetries attempts, not found") {
     val t = new Scripted(Some(500 -> ""))
-    assert(query(t) == ((false, None, None), Seq(5000L, 5000L, 5000L)))
+    assert(query(t) == ((false, None, None), Seq(5000L, 5000L)))
     assert(t.urls.size == cfg.maxRetries)
+  }
+
+  test("always 403 waits between attempts only, not found") {
+    val t = new Scripted(Some(403 -> ""))
+    assert(query(t) == ((false, None, None), Seq(30000L, 30000L)))
+    assert(t.urls.size == 3)
+  }
+
+  test("an always-throwing transport waits between attempts only, not found") {
+    val t = new Scripted(None)
+    assert(query(t) == ((false, None, None), Seq(5000L, 5000L)))
+    assert(t.urls.size == 3)
   }
 
   test("rate limiter: the first acquire is immediate, later ones are spaced") {

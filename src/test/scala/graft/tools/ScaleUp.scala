@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Purpose: the sf1 scale rehearsal. Every 100 TB posture claim is
   * plan-audited at sf0.1; this executes the full registry one decade
   * up. Usage:
-  *   runMain graft.tools.ScaleUp [srcDir] [dstDir] [factor]
+  *   Test/runMain graft.tools.ScaleUp [srcDir] [dstDir] [factor]
   * then Bench with SPARK_GRAFT_SF_DIR=dstDir.
   *
   * Keys offset per replica r: orderkey, custkey (orders+customer
