@@ -108,7 +108,6 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def assignName(key: Expression): String = key match {
     case a: Attribute => a.name
-    case u: UnresolvedAttribute if u.nameParts.length == 1 => u.name
     case other => sys.error("graft catalog DML: only top-level columns " +
       s"can be assigned, got '$other'")
   }

@@ -1,24 +1,23 @@
 package graft.enrichment
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.io.TableIO
-import graft.schemas.AdvisorySchemas
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
+import java.util.concurrent.Executors
 import scala.jdk.CollectionConverters._
 
 /** Transport abstraction so enrichment is testable offline and the rate
   * limiter / retry policy is independent of the HTTP stack. */
-trait HttpTransport extends Serializable {
+trait HttpTransport {
   /** Returns (statusCode, body). Throws on transport-level failure. */
   def get(url: String, headers: Map[String, String]): (Int, String)
 }
 
 /** java.net.http-based transport (the JDK's built-in client). */
 final class JdkHttpTransport(timeoutSeconds: Long = 60) extends HttpTransport {
-  @transient private lazy val client = java.net.http.HttpClient.newBuilder()
+  private lazy val client = java.net.http.HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds)).build()
   def get(url: String, headers: Map[String, String]): (Int, String) = {
     var b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
@@ -38,24 +37,24 @@ final case class NvdConfig(
     maxRetries: Int = 3,
     retryBackoffMs: Long = 5000,
     forbiddenWaitMs: Long = 30000,
+    /** Number of fetch threads (the reference's 3 workers). */
     partitions: Int = 3,
 ) {
+  require(partitions >= 1, s"NVD fetch needs at least one thread, got partitions = $partitions")
+
   /** 1.5 req/s with a key, 0.15 without — NVD's published limits. */
   def rateLimitPerSec: Double = if (apiKey.isDefined) 1.5 else 0.15
 }
 
 /** NVD REST API enrichment source (reference:
-  * src/advisory_pipeline/enrichment/apis/nvd/nvd_client.py:51-284),
-  * re-architected for Spark's execution model: instead of `collect()`ing
-  * every key to the driver and fanning out a thread pool there (which
-  * caps at one machine's sockets and memory), the key Dataset is spread
-  * over `cfg.partitions` fetch partitions by `TableIO.withPartitions`
-  * (1: coalesced, no exchange; n > 1: repartitioned; 0: as planned) and
-  * each EXECUTOR partition runs its own rate-limited fetch loop via
-  * `mapPartitions`. The global rate is partitions x perPartitionRate,
-  * so the per-partition limiter is derated by the fetch's partition
-  * count. At 100 TB / millions of keys this is the only shape that
-  * scales; on local[n] it behaves like the reference's 3-worker pool.
+  * src/advisory_pipeline/enrichment/apis/nvd/nvd_client.py:51-284). As
+  * in the reference, the pending keys are fetched on the driver by a
+  * small fixed pool of threads (`cfg.partitions`, the reference's 3
+  * workers) that share one rate limiter: NVD limits requests per API
+  * key, so spreading the fetch over more machines adds no throughput.
+  * The bound on one run is the API rate, not the table size: at 1.5
+  * req/s a run fetches about 130k keys a day, and holding that many
+  * keys on the driver is cheap.
   */
 object NvdClient {
 
@@ -122,29 +121,27 @@ object NvdClient {
     (false, None, None)
   }
 
-  /** Distributed enrichment: one fetch loop per partition, each with a
-    * derated rate limiter so the cluster-wide request rate stays at
-    * `cfg.rateLimitPerSec`. Returns rows in the rawNvd schema. */
+  /** Fetches `keys` (cve_id, package) on `cfg.partitions` threads that
+    * share one rate limiter, so every request is spaced at
+    * `cfg.rateLimitPerSec`. Returns rows in the rawNvd schema, in key
+    * order. */
   def enrichFromNvd(
-      spark: SparkSession,
-      cvesDf: DataFrame,
+      keys: Seq[(String, String)],
       transport: HttpTransport,
       cfg: NvdConfig,
       nowIso: () => String = defaultNowIso,
-  ): DataFrame = {
-    val keys = TableIO.withPartitions(cvesDf.select("cve_id", "package"), cfg.partitions).rdd
-    val perPartitionRate = cfg.rateLimitPerSec / math.max(keys.getNumPartitions, 1)
-    val enriched = keys.mapPartitions { it =>
-      val limiter = new RateLimiter(perPartitionRate)
-      it.map { row =>
-        val cveId = row.getString(0)
-        val pkg = row.getString(1)
-        val (found, status, fixed) =
-          queryCve(cveId, transport, cfg, limiter)
-        Row(cveId, pkg, found, fixed.orNull, status.orNull, nowIso())
+  ): Seq[Row] = {
+    val limiter = new RateLimiter(cfg.rateLimitPerSec)
+    val pool = Executors.newFixedThreadPool(cfg.partitions)
+    try {
+      val fetches = keys.map { case (cveId, pkg) =>
+        pool.submit[Row] { () =>
+          val (found, status, fixed) = queryCve(cveId, transport, cfg, limiter)
+          Row(cveId, pkg, found, fixed.orNull, status.orNull, nowIso())
+        }
       }
-    }
-    spark.createDataFrame(enriched, AdvisorySchemas.rawNvd)
+      fetches.map(_.get())
+    } finally pool.shutdownNow()
   }
 
   private def defaultNowIso: () => String = () =>
@@ -156,7 +153,7 @@ object NvdClient {
   * `threading.Lock` + last-request timestamp; same shape). Spacing is
   * measured on the monotonic `System.nanoTime`, so a wall-clock step
   * (an NTP correction) neither stalls a fetch nor skips the spacing. */
-final class RateLimiter(permitsPerSec: Double) extends Serializable {
+final class RateLimiter(permitsPerSec: Double) {
   private val intervalNs: Long =
     if (permitsPerSec <= 0) 0 else (1e9 / permitsPerSec).toLong
   private var lastAt: Option[Long] = None

@@ -41,9 +41,9 @@ object TableIO {
   def castToSchema(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
 
-  /** The partition-count rule of every n-file writer and of the NVD
-    * fan-out. 1: `coalesce(1)`, no exchange; n > 1: round-robin
-    * `repartition(n)`; 0: the plan is left alone.
+  /** The partition-count rule of every n-file writer. 1: `coalesce(1)`,
+    * no exchange; n > 1: round-robin `repartition(n)`; 0: the plan is
+    * left alone.
     *
     * The trade-off of 1: whatever runs after the plan's last exchange
     * (or the whole plan, if it has none) runs in the single output task

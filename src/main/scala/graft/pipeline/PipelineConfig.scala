@@ -12,11 +12,6 @@ final case class PipelineConfig(
     cacheTtlHours: Double = 0.05,
     incrementalEnabled: Boolean = true,
     outputPartitions: Int = 1,
-    // SURVEY §2 M7: the reference configures a checkpoint dir it never
-    // uses (ap/dependencies.py:44-45). Kept as an optional knob: when
-    // set, [[Pipelines.configure]] applies it so RDD/eager checkpoints
-    // (and any future streaming use) have a location.
-    checkpointDir: Option[String] = None,
     // Commit the prod state-machine table through the snapshot-manifest
     // layer instead of a whole-table overwrite. The reference's prod
     // write (state_machine/pipeline.py:77-85) deletes-and-rewrites the

@@ -5,10 +5,10 @@ import graft.io.TableIO
 import graft.schemas.AdvisorySchemas
 import graft.statemachine.TransitionFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import java.time.temporal.ChronoUnit
+import scala.jdk.CollectionConverters._
 
 /** The three sequential sub-pipelines (reference: run.py:29-74 plus
   * ingest/ingestion_pipeline.py, enrichment/pipeline.py,
@@ -18,22 +18,20 @@ import java.time.temporal.ChronoUnit
   * lineage cut; at scale, each stage's output is also independently
   * redriveable).
   *
-  * Each intermediate is computed once: enrichment materializes the
-  * pending keys in one eager pass; the single-file writes coalesce
-  * rather than shuffle, and apply the reference's row orders with a
-  * local sort (`TableIO.writeTable(sortBy = …)`), not a global range
-  * sort; and overwrite-mode prod is published by renaming the staged
-  * upsert into place (`TableIO.swapIn`).
+  * Each intermediate is computed once: enrichment collects the pending
+  * keys to the driver once and fetches them there, as the reference
+  * does; the single-file writes coalesce rather than shuffle, and apply
+  * the reference's row orders with a local sort
+  * (`TableIO.writeTable(sortBy = …)`), not a global range sort; and
+  * overwrite-mode prod is published by renaming the staged upsert into
+  * place (`TableIO.swapIn`).
   */
 object Pipelines {
 
   /** Session-level pipeline configuration (reference:
-    * ap/dependencies.py:38-45): dynamic partition overwrite + the
-    * (optional, unused-by-the-reference) checkpoint dir. */
-  def configure(spark: SparkSession, config: PipelineConfig): Unit = {
+    * ap/dependencies.py:38-45): dynamic partition overwrite. */
+  def configure(spark: SparkSession, config: PipelineConfig): Unit =
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    config.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-  }
 
   /** Stage 1 — ingest the advisory feed (and optionally the Postgres
     * override table; callers without a database stage overrides from a
@@ -64,7 +62,7 @@ object Pipelines {
     * (also written under `enrichment/normalized/enrichment_source=`).
     *
     * The reference's `count() == 0` short-circuit is kept, as
-    * `isEmpty` on the materialized pending keys: when the TTL cache
+    * `isEmpty` on the collected pending keys: when the TTL cache
     * covers everything, no API call and no downstream work happens. */
   def runEnrichment(
       spark: SparkSession,
@@ -82,29 +80,24 @@ object Pipelines {
       ChronoUnit.SECONDS)
     val cutoff: Column = lit(java.sql.Timestamp.from(cutoffMicros))
     val cache = EnrichmentCache.loadCache(spark, config.cachePath).persist()
-    var needed: DataFrame = null
     try {
-      // One eager materialization: the emptiness check, the NVD fetch and
-      // the cache merge below all read this copy, so the pending-key plan
-      // (echo scan, override join, cache anti join) runs once.
-      needed = (if (config.incrementalEnabled)
+      // One collect: the emptiness check, the NVD fetch and the cache merge
+      // below all read these keys, so the pending-key plan (echo scan,
+      // override join, cache anti join) runs once.
+      val pending = if (config.incrementalEnabled)
           EnrichmentCache.filterRecentlyEnriched(toEnrich, cache, "nvd", cutoff)
-        else toEnrich).localCheckpoint(eager = true)
+        else toEnrich
+      val needed = pending.collect().toSeq
 
       val normalized =
         if (needed.isEmpty) TableIO.emptyTable(spark, AdvisorySchemas.normalizedEnrichment)
         else {
-          val fetched = NvdClient.enrichFromNvd(spark, needed, transport, nvdConfig,
+          val fetched = NvdClient.enrichFromNvd(
+            needed.map(r => (r.getString(0), r.getString(1))), transport, nvdConfig,
             Option(nowIso).getOrElse(() => now.toString))
-          // a single-file write coalesces, which would run the rate-limited
-          // loops of a fetch spread over several partitions one after another
-          // in the writer task: gather its output (a row per key) by exchange
-          val raw =
-            if (config.outputPartitions == 1 && nvdConfig.partitions != 1) fetched.repartition(1)
-            else fetched
           val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
-          TableIO.writeTable(raw, rawPath, AdvisorySchemas.rawNvd,
-            partitions = config.outputPartitions)
+          TableIO.writeTable(spark.createDataFrame(fetched.asJava, AdvisorySchemas.rawNvd),
+            rawPath, AdvisorySchemas.rawNvd, partitions = config.outputPartitions)
           val rawBack = TableIO.readTable(spark, rawPath, AdvisorySchemas.rawNvd)
           val norm = AdvisoryMerge.normalizeNvd(rawBack, priority = 5)
           val normPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/normalized/enrichment_source=nvd"
@@ -112,19 +105,14 @@ object Pipelines {
             partitions = config.outputPartitions)
 
           val merged = EnrichmentCache.mergedCacheEntries(
-            needed, Some(cache), "nvd",
+            spark.createDataFrame(needed.asJava, pending.schema), Some(cache), "nvd",
             now = lit(java.sql.Timestamp.from(now)))
           EnrichmentCache.writeCache(spark, merged, config.cachePath)
           TableIO.readTable(spark, normPath, AdvisorySchemas.normalizedEnrichment)
         }
       normalized.createOrReplaceGlobalTempView("normalized_enrichment")
       normalized
-    } finally {
-      // released whether the stage succeeds or throws
-      if (needed != null)
-        needed.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist() }
-      cache.unpersist()
-    }
+    } finally cache.unpersist() // released whether the stage succeeds or throws
   }
 
   /** Stage 3 — merge + FSM + upsert into prod

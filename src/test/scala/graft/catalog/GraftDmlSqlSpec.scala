@@ -170,4 +170,20 @@ class GraftDmlSqlSpec extends SparkSpec {
         e3.getMessage.contains("every source column"), e3.getMessage)
     }
   }
+
+  test("UPDATE of a struct field is refused: only top-level columns " +
+      "can be assigned") {
+    withExtSession { s =>
+      val root = Files.createTempDirectory("graft-dmlsql").toString
+      install(s, root)
+      import s.implicits._
+      SnapshotUpsert.upsertBatchSnapshot(
+        Seq((1L, "a")).toDF("id", "f").selectExpr("id", "named_struct('f', f) AS st"),
+        s"$root/st", Seq("id"), "", nBuckets = 2, keepVersions = 10)
+      val e = intercept[Exception](s.sql("UPDATE graft.st SET st.f = 'b'"))
+      assert(e.getMessage.contains("only top-level columns can be assigned"),
+        e.getMessage)
+      assert(s.sql("SELECT st.f FROM graft.st").head.getString(0) == "a")
+    }
+  }
 }

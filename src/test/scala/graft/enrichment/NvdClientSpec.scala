@@ -2,11 +2,13 @@ package graft.enrichment
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 /** `NvdClient.queryCve`'s retry and wait policy under injected faults
-  * (scripted transport, recording sleep, no rate limit), and the
-  * `RateLimiter`'s spacing on the monotonic clock. */
+  * (scripted transport, recording sleep, no rate limit), the
+  * `RateLimiter`'s spacing on the monotonic clock, and
+  * `enrichFromNvd`'s driver-side fetch pool. */
 class NvdClientSpec extends AnyFunSuite {
 
   private val found =
@@ -91,6 +93,36 @@ class NvdClientSpec extends AnyFunSuite {
     val returns = first +: (1 to 4).map { _ => limiter.acquire(); System.nanoTime() }
     returns.sliding(2).foreach { case Seq(a, b) =>
       assert(b - a >= 50000000L, s"acquires ${(b - a) / 1e6} ms apart")
+    }
+  }
+
+  test("enrichFromNvd: cfg.partitions threads share one limiter, rows in key order") {
+    val inFlight = new AtomicInteger(0)
+    val maxInFlight = new AtomicInteger(0)
+    val slow = new HttpTransport {
+      def get(url: String, headers: Map[String, String]): (Int, String) = {
+        maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try { Thread.sleep(1000); (200, found) }
+        finally inFlight.decrementAndGet()
+      }
+    }
+    val pool = cfg.copy(apiKey = Some("key"), partitions = 3) // one permit per 0.667 s
+    val keys = Seq("CVE-2024-1" -> "a", "CVE-2024-2" -> "b", "CVE-2024-3" -> "c")
+    val t0 = System.nanoTime()
+    val rows = NvdClient.enrichFromNvd(keys, slow, pool, () => "now")
+    val took = System.nanoTime() - t0
+    assert(rows.map(r => (r.getString(0), r.getString(1))) == keys)
+    assert(rows.forall(r => r.getBoolean(2) && r.getString(3) == "1.2.3" &&
+      r.getString(4) == "Analyzed" && r.getString(5) == "now"))
+    val intervalNs = (1e9 / pool.rateLimitPerSec).toLong
+    assert(took >= 2 * intervalNs, s"fetch took ${took / 1e6} ms")
+    assert(maxInFlight.get >= 2 && maxInFlight.get <= 3, s"${maxInFlight.get} calls in flight")
+  }
+
+  test("enrichFromNvd needs at least one fetch thread") {
+    intercept[IllegalArgumentException] {
+      NvdClient.enrichFromNvd(Seq("CVE-2024-1" -> "a"), new Scripted(Some(200 -> found)),
+        cfg.copy(partitions = 0))
     }
   }
 }
