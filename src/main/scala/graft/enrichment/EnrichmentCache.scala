@@ -68,15 +68,18 @@ object EnrichmentCache {
     }
   }
 
-  /** Overwrite this source's partition only. The dynamic-overwrite mode
-    * is WRITER-SCOPED (a DataFrameWriter option), not set session-wide:
-    * the reference sets the session conf once at startup
-    * (ap/dependencies.py:40), but a session-wide flip would silently
-    * change the semantics of every later overwrite write in the same
-    * session — scoping it here keeps parity for THIS write only. */
+  /** Overwrite this source's partition only, as ONE file: the reference
+    * writes one file at every call site, and the API rate caps the cache
+    * at about 130k new keys a day, so one file holds at any scale (a
+    * plan-sized write would re-fragment the partition every run). The
+    * dynamic-overwrite mode is WRITER-SCOPED (a DataFrameWriter option),
+    * not set session-wide: the reference sets the session conf once at
+    * startup (ap/dependencies.py:40), but a session-wide flip would
+    * silently change the semantics of every later overwrite write in the
+    * same session — scoping it here keeps parity for THIS write only. */
   def writeCache(spark: SparkSession, merged: DataFrame, cachePath: String): Unit = {
     TableIO.writeTable(merged, cachePath, AdvisorySchemas.enrichmentCache,
       mode = SaveMode.Overwrite, partitionKeys = Seq("source_name"),
-      options = Map("partitionOverwriteMode" -> "dynamic"))
+      partitions = 1, options = Map("partitionOverwriteMode" -> "dynamic"))
   }
 }

@@ -592,7 +592,7 @@ object IncrementalAnn {
       nBuckets: Int = 64, keepVersions: Int = 2,
       drainOnce: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.UpsertSink.startForeachBatch(vectors, checkpoint,
+    graft.streaming.SnapshotUpsert.startForeachBatch(vectors, checkpoint,
       "append", drainOnce)(b =>
       ingest(b, indexDir, centroids, idCol, vecCol, nBuckets, keepVersions))
 

@@ -107,7 +107,7 @@ object IncrementalDedup {
       n: Int = 3, nBuckets: Int = 64, keepVersions: Int = 2,
       drainOnce: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.UpsertSink.startForeachBatch(docs, checkpoint,
+    graft.streaming.SnapshotUpsert.startForeachBatch(docs, checkpoint,
       "append", drainOnce) { b =>
       ingest(b, indexDir, textCol, idCol, k, bands, n, nBuckets,
         keepVersions)

@@ -161,7 +161,7 @@ object IncrementalText {
       textCol: String, idCol: String, nBuckets: Int = 64,
       keepVersions: Int = 2, drainOnce: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.UpsertSink.startForeachBatch(docs, checkpoint,
+    graft.streaming.SnapshotUpsert.startForeachBatch(docs, checkpoint,
       "append", drainOnce)(b =>
       ingest(b, indexDir, textCol, idCol, nBuckets, keepVersions))
 

@@ -23,8 +23,8 @@ import scala.jdk.CollectionConverters._
   * does; the single-file writes coalesce rather than shuffle, and apply
   * the reference's row orders with a local sort
   * (`TableIO.writeTable(sortBy = …)`), not a global range sort; and
-  * overwrite-mode prod is published by renaming the staged upsert into
-  * place (`TableIO.swapIn`).
+  * prod is published by renaming the staged upsert into place
+  * (`TableIO.swapIn`).
   */
 object Pipelines {
 
@@ -126,13 +126,7 @@ object Pipelines {
   ): DataFrame = {
     TransitionFunctions.registerUdfs(spark)
     val prodPath = s"${config.prodPath}/state_machine/cve_state_machine"
-    val prod =
-      if (config.prodSnapshot) {
-        if (graft.streaming.SnapshotUpsert.versions(spark, prodPath).isEmpty)
-          TableIO.emptyTable(spark, AdvisorySchemas.cveStateMachine)
-        else graft.streaming.SnapshotUpsert.readSnapshot(spark, prodPath)
-      } else
-        TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
+    val prod = TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
 
     // the reference's row order is applied by the single-file write (a
     // coalesce and a local sort), not by a separate global sort
@@ -145,52 +139,15 @@ object Pipelines {
       TableIO.readTable(spark, processedPath, AdvisorySchemas.cveStateMachine)
     processedBack.createOrReplaceGlobalTempView("processed_cve_state_machine")
 
-    if (config.prodSnapshot) {
-      // Snapshot-committed prod: the manifest merge IS the upsert
-      // (arrival order — processed rows replace by key, prod-only rows
-      // are carried by reference), committed atomically. No staging
-      // round-trip is needed: the merge never overwrites a path it
-      // reads, so there is no torn-read window to stage around, and
-      // each run stays time-travel-readable as its own version.
-      //
-      // Multiplicity guard: the keyed merge keeps ONE row per
-      // (cve_id, package), while the legacy upsert path preserves
-      // duplicate key pairs — if mapNewInfo ever emitted duplicates,
-      // flipping prodSnapshot would silently change row multiplicity.
-      // mapNewInfo is key-unique today (its window dedup guarantees
-      // it); this assert turns a future regression into a loud error
-      // instead of a silent drop. processedBack is the staged run
-      // output (freshly written, run-sized), so the check is one cheap
-      // aggregate over it.
-      val dupKeys = processedBack.groupBy("cve_id", "package")
-        .count().where(col("count") > 1).limit(5)
-        .collect().map(r => s"(${r.get(0)}, ${r.get(1)})")
-      require(dupKeys.isEmpty,
-        "prodSnapshot: processed output carries duplicate " +
-          s"(cve_id, package) keys (e.g. ${dupKeys.mkString(", ")}); the " +
-          "snapshot merge would keep one row per key where the legacy " +
-          "path preserves duplicates — fix the upstream merge instead of " +
-          "silently changing multiplicity")
-      graft.streaming.SnapshotUpsert.upsertBatchSnapshot(processedBack,
-        prodPath, keys = Seq("cve_id", "package"), orderCol = "",
-        nBuckets = config.prodBuckets)
-      // an all-empty bootstrap (quiet day one: zero advisories) commits
-      // no version at all — return the empty prod the overwrite mode
-      // would have written instead of failing the read
-      if (graft.streaming.SnapshotUpsert.versions(spark, prodPath).isEmpty)
-        TableIO.emptyTable(spark, AdvisorySchemas.cveStateMachine)
-      else graft.streaming.SnapshotUpsert.readSnapshot(spark, prodPath)
-    } else {
-      // The upsert reads prod in full into the staged copy, which then
-      // replaces prod by directory rename: no second write of the table,
-      // and a reader sees the old prod or the new one, never a torn one.
-      val upserted = AdvisoryMerge.upsert(processedBack, prod, sorted = false)
-      val upsertTmp = s"${config.stagingPath}/run_id=${config.runId}/state_machine/upserted"
-      TableIO.writeTable(upserted, upsertTmp, AdvisorySchemas.cveStateMachine,
-        partitions = config.outputPartitions, sortBy = AdvisoryMerge.prodOrder)
-      TableIO.swapIn(spark, upsertTmp, prodPath)
-      TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
-    }
+    // The upsert reads prod in full into the staged copy, which then
+    // replaces prod by directory rename: no second write of the table,
+    // and a reader sees the old prod or the new one, never a torn one.
+    val upserted = AdvisoryMerge.upsert(processedBack, prod, sorted = false)
+    val upsertTmp = s"${config.stagingPath}/run_id=${config.runId}/state_machine/upserted"
+    TableIO.writeTable(upserted, upsertTmp, AdvisorySchemas.cveStateMachine,
+      partitions = config.outputPartitions, sortBy = AdvisoryMerge.prodOrder)
+    TableIO.swapIn(spark, upsertTmp, prodPath)
+    TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
   }
 
   /** Full run: ingest -> enrich -> state machine. */

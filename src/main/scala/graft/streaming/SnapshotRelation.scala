@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   - **bucket pruning**: equality / IN predicates covering the
   *     table's recorded bucket columns are hashed through the SAME
   *     column expression the writer buckets by
-  *     ([[UpsertSink.bucketOfLayout]], split-layout aware), and only
+  *     ([[SnapshotUpsert.bucketOfLayout]], split-layout aware), and only
   *     the hit buckets' files are listed to the scan;
   *   - **range pruning**: comparison predicates on the declared
   *     clustering columns ([[SnapshotUpsert.ClusterColsProp]]) are
@@ -490,7 +490,7 @@ final class SnapshotFileIndex private[streaming] (
     val schema = StructType(bc.map(c => snap.schema(c).copy(nullable = true)))
     val rows: java.util.List[Row] = tuples.map(Row.fromSeq).asJava
     spark.createDataFrame(rows, schema)
-      .select(UpsertSink.bucketOfLayout(bc, snap.nBuckets, snap.depths)
+      .select(SnapshotUpsert.bucketOfLayout(bc, snap.nBuckets, snap.depths)
         .as("kb"))
       .collect().map(_.getInt(0)).toSet
   }

@@ -7,15 +7,28 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import scala.collection.immutable.SortedMap
 
-/** Snapshot-committed variant of [[UpsertSink]]: same keyed latest-state
-  * merge (rule shared via [[UpsertSink.selectWinners]]), but each batch
-  * commits by ATOMIC MANIFEST CREATION instead of dynamic partition
-  * overwrite — the lakehouse table-format idea (immutable data files +
-  * a versioned manifest), reduced to what a latest-state table needs.
+/** Keyed latest-state table maintained from a stream of row versions —
+  * the streaming deployment shape of the reference's advisory upsert
+  * (reference: src/advisory_pipeline/state_machine/pipeline.py:120-145,
+  * which rewrites the whole prod table per batch run). Each batch
+  * commits by ATOMIC MANIFEST CREATION — the lakehouse table-format
+  * idea (immutable data files + a versioned manifest), reduced to what
+  * a latest-state table needs. The registry's `q_snapshot_*` entries
+  * oracle-check what the tables read back; the commit protocol itself
+  * is verified by spec (I/O is not DuckDB-expressible).
   *
-  * Why: the overwrite commit has two honest caveats at 100 TB. Inside
-  * the per-partition overwrite there is a delete-before-rename window
-  * in which a bucket's prior rows exist nowhere durable (data loss on a
+  * Merge rule ([[selectWinners]]): per key, the row with the highest
+  * `orderCol` wins; on an exact `orderCol` tie the INCOMING row beats
+  * the existing one (an upsert re-stating a row must take effect), and
+  * ties inside one batch break on a deterministic whole-row hash, so a
+  * replayed batch reproduces the identical table. The table is
+  * hash-bucketed by the key (`kb = pmod(xxhash64(keys), nBuckets)`, see
+  * [[bucketOf]]), so one batch rewrites only the buckets its keys touch.
+  *
+  * Why a manifest and not an in-place bucket overwrite: a dynamic
+  * partition overwrite has two honest caveats at 100 TB. Inside the
+  * per-partition overwrite there is a delete-before-rename window in
+  * which a bucket's prior rows exist nowhere durable (data loss on a
   * store without atomic rename), and a reader racing the rewrite can
   * see a torn snapshot (some buckets pre-batch, some post). Here data
   * files are IMMUTABLE — each merge writes its output to a fresh
@@ -30,8 +43,7 @@ import scala.collection.immutable.SortedMap
   *   - `batches/v{N}-{attempt}/kb={b}/part-*.parquet` — the buckets
   *     version N rewrote (untouched buckets are carried forward BY
   *     REFERENCE in the manifest, so incremental merges write only the
-  *     touched slice, same cost shape as the overwrite sink's pruned
-  *     regime); the attempt suffix is unique per commit attempt
+  *     touched slice); the attempt suffix is unique per commit attempt
   *   - `_manifests/v{N}.txt` — `#nbuckets=`/`#ts=`/`#schema=` header
   *     lines (the version's layout, commit wall-clock, and data schema,
   *     so rebucket and additive schema evolution commit atomically with
@@ -39,7 +51,6 @@ import scala.collection.immutable.SortedMap
   *     and a final `#eof` trailer; the create-exclusive WRITE of this
   *     file IS the commit point, and the trailer makes a torn write
   *     (writer killed mid-commit) detectable instead of readable
-  *   - `_graft_buckets` — the shared nBuckets layout pin
   * Do NOT read `targetDir` with a bare `spark.read.parquet` — it would
   * mix every retained version; go through [[readSnapshot]] /
   * [[readVersion]], which read the manifest's file list.
@@ -92,9 +103,9 @@ import scala.collection.immutable.SortedMap
   * version N+1 with identical logical content. There is no state in
   * which a reader can observe a half-committed batch, and no point
   * where a live file is deleted before its replacement is referenced —
-  * the two failure modes the overwrite commit documents are gone, at
-  * the cost of a GC pass (bounded by the dropped versions' touched
-  * buckets, computed from manifest diffs — never a full table listing).
+  * neither overwrite failure mode can occur, at the cost of a GC pass
+  * (bounded by the dropped versions' touched buckets, computed from
+  * manifest diffs — never a full table listing).
   */
 object SnapshotUpsert {
 
@@ -108,6 +119,44 @@ object SnapshotUpsert {
     * unlike the CoW merge it cannot apply one at write time). */
   private val DeltaVCol = "__dv"
   private val DeltaTombCol = "__tomb"
+
+  /** Deterministic hash bucket of the key columns. */
+  def bucketOf(keys: Seq[String], nBuckets: Int): Column =
+    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
+
+  /** Layout-aware bucket routing under LINEAR-HASHING splits
+    * ([[splitBucket]]): an active bucket of depth `d` holds the keys
+    * with `pmod(xxhash64(keys), nBuckets * 2^d) == id`. `depths` maps
+    * bucket id -> depth for every active bucket deeper than 0 (ids stay
+    * plain ints: among ACTIVE buckets an id value is unique across
+    * depths — a value active at depth d makes its shallower ancestor of
+    * the same value split, hence inactive). Routing evaluates the
+    * residue at each populated depth and picks the one matching an
+    * active id; the conditions are mutually exclusive (a key whose
+    * depth-0 residue is active cannot also hit a deeper active id — that
+    * id's ancestor would be the depth-0 residue itself, which would then
+    * be split, not active), so the CASE order is immaterial. With no
+    * splits this IS [[bucketOf]] — the single-pmod fast path. Heavy
+    * splitting grows the IN lists (one per depth); past a few hundred
+    * splits, graduate the table to [[rebucket]]. */
+  def bucketOfLayout(keys: Seq[String], nBuckets: Int,
+      depths: Map[Int, Int]): Column = {
+    if (depths.isEmpty) return bucketOf(keys, nBuckets)
+    val h = xxhash64(keys.map(col): _*)
+    val maxD = depths.valuesIterator.max
+    val byDepth: Seq[(Int, Seq[Int])] = (0 to maxD).map { d =>
+      d -> (if (d == 0)
+        (0 until nBuckets).filterNot(v => depths.contains(v))
+      else depths.collect { case (v, dd) if dd == d => v }.toSeq.sorted)
+    }
+    val cases = byDepth.collect { case (d, vals) if vals.nonEmpty =>
+      val rd = pmod(h, lit(nBuckets.toLong << d))
+      (rd.isin(vals.map(_.toLong): _*), rd)
+    }
+    cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+      case (acc, (cond, v)) => acc.when(cond, v)
+    }.cast("int")
+  }
 
   /** Table property declaring the clustering columns: staged files are
     * sorted by them within each bucket (tight parquet row-group stats
@@ -384,6 +433,20 @@ object SnapshotUpsert {
       while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
       new String(bytes.toByteArray, "UTF-8")
     } finally in.close()
+  }
+
+  /** Atomic-replace write of a small file (tmp + Rename.OVERWRITE): a
+    * delete-then-rename pair would leave a crash window with no file at
+    * all. */
+  private def writeFileAtomic(fs: FileSystem, target: Path,
+      content: String): Unit = {
+    val parent = target.getParent
+    fs.mkdirs(parent)
+    val tmp = new Path(parent, s".${target.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, fs.getConf)
+      .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   private[streaming] def readManifest(fs: FileSystem, root: Path, v: Long): Snapshot =
@@ -1215,10 +1278,118 @@ object SnapshotUpsert {
     }
   }
 
-  /** Merge one batch of row versions as a new committed version. Same
-    * semantics as [[UpsertSink.upsertBatch]]; see object doc for the
-    * commit difference. Retention: `keepVersions` >= 2 controls how many
-    * committed versions stay readable; a version is garbage-collected
+  /** Column names the keyed writers own: `kb` (layout), `__src`/`__rn`
+    * (merge internals), `__old`/`_change` (change-feed internals —
+    * reserved so a table is always feed-compatible), `__dv`/`__tomb`
+    * (delta-layer metadata). */
+  private val Reserved =
+    Seq("kb", "__src", "__rn", "__old", "_change", DeltaVCol, DeltaTombCol)
+
+  /** Full batch validation, run once per call BEFORE any side effect, so
+    * a rejected first batch leaves no trace. The reserved-name check is
+    * case-INSENSITIVE like Spark's own resolution — `withColumn("kb")`
+    * would silently REPLACE a case-variant `KB` data column with bucket
+    * ids before any later duplicate-column error surfaced. An optional
+    * tombstone marker column must be in the batch, BOOLEAN, and not a
+    * key (the marker is merge metadata, never stored in the table). */
+  private def validateBatch(batch: DataFrame, keys: Seq[String],
+      tombstoneCol: Option[String]): Unit = {
+    require(keys.nonEmpty, "upsert needs at least one key column")
+    val clash = batch.columns.toSeq
+      .filter(c => Reserved.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty,
+      s"batch must not carry reserved columns ${Reserved.mkString("/")} " +
+        s"(any case); found: ${clash.mkString(",")}")
+    tombstoneCol.foreach { t =>
+      val f = batch.schema.fields.find(_.name == t).getOrElse(
+        sys.error(s"upsert: tombstone column '$t' is not in the batch"))
+      require(f.dataType == org.apache.spark.sql.types.BooleanType,
+        s"upsert: tombstone column '$t' must be BOOLEAN, got " +
+          f.dataType.simpleString)
+      require(!keys.contains(t), s"upsert: tombstone column '$t' cannot be a key")
+    }
+  }
+
+  /** Shared batch preamble of the keyed writers (the caller has already
+    * run [[validateBatch]]): runs `use` on the bucket-stamped batch under
+    * the single-evaluation rule — once the table holds rows
+    * (`populatedTable`), the batch is materialized eagerly so the
+    * touched-bucket collect and the write see ONE evaluation (a
+    * re-evaluated non-deterministic batch could emit a row into a bucket
+    * absent from `touched`, which the commit then replaces without
+    * having merged its existing rows). Incremental batches are the small
+    * side by design, so the snapshot is cheap. A FIRST write has no
+    * existing rows to lose — every emitted row lands whether or not its
+    * bucket was pre-collected — so the seed batch (the one table-sized
+    * input a keyed table ever sees) stays lazy: its extra collect pass
+    * column-prunes to the keys, measured ~2x cheaper than materializing
+    * every column (seed of 100M rows: 70.5 s snapshotted vs 34-40 s
+    * lazy). */
+  private def withPreparedBatch[T](batch: DataFrame, nBuckets: Int,
+      populatedTable: Boolean, bucketCols: Seq[String],
+      depths: Map[Int, Int])(use: DataFrame => T): T = {
+    val withBucket0 =
+      batch.withColumn("kb", bucketOfLayout(bucketCols, nBuckets, depths))
+    val withBucket =
+      if (populatedTable) withBucket0.localCheckpoint(true) else withBucket0
+    try use(withBucket)
+    finally if (populatedTable) withBucket.unpersist(false)
+  }
+
+  /** The merge rule: per key the highest `orderCol` wins, incoming
+    * (`__src`=1) beats existing on an exact tie, in-batch ties break on
+    * a deterministic whole-row hash. `orderCol = ""` selects ARRIVAL
+    * order: no data column ranks the versions, the incoming row always
+    * replaces the existing one (the reference's prod upsert semantics,
+    * upsert_data.py:18-86). Both inputs carry `dataCols` plus `kb`;
+    * `existing` rows are live by definition, so when a `tombstoneCol` is
+    * in play only `incoming` carries it (normalized NULL->false) and a
+    * key whose WINNING version is a tombstone is dropped from the output
+    * — deletion is applied at merge time and the marker itself is never
+    * stored, so a later upsert with a higher (or arrival-later) order
+    * resurrects the key as a fresh insert.
+    *
+    * `keepTombstones` (merge-on-read staging): instead of APPLYING a
+    * winning tombstone (dropping the key), emit it — the output keeps
+    * one row per key including tombstone winners, with the normalized
+    * marker appended as `__tomb` (false when no `tombstoneCol` is in
+    * play). A delta layer cannot apply a delete at write time — it
+    * never sees the existing rows — so it must STATE it for the
+    * read-time fold. */
+  private def selectWinners(existing: DataFrame,
+      incoming: DataFrame, dataCols: Seq[String], keys: Seq[String],
+      orderCol: String, tombstoneCol: Option[String] = None,
+      keepTombstones: Boolean = false): DataFrame = {
+    // the tie-break hash covers the tombstone flag too: a delete and a
+    // re-statement of the same row in ONE batch must resolve
+    // deterministically, not by partition-local row order
+    val hashCols = dataCols ++ tombstoneCol
+    val ordering =
+      (if (orderCol.nonEmpty) Seq(col(orderCol).desc) else Seq.empty) ++
+        Seq(col("__src").desc, xxhash64(struct(hashCols.map(col): _*)).asc)
+    val rank = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(ordering: _*)
+    val ex = tombstoneCol.foldLeft(existing.withColumn("__src", lit(0)))(
+      (d, t) => d.withColumn(t, lit(false)))
+    val in = tombstoneCol.foldLeft(incoming.withColumn("__src", lit(1)))(
+      (d, t) => d.withColumn(t, coalesce(col(t), lit(false))))
+    val winners = ex.unionByName(in)
+      .withColumn("__rn", row_number().over(rank))
+      .where(col("__rn") === 1)
+    if (keepTombstones)
+      winners
+        .withColumn(DeltaTombCol,
+          tombstoneCol.map(col).getOrElse(lit(false)))
+        .select((dataCols :+ "kb" :+ DeltaTombCol).map(col): _*)
+    else
+      tombstoneCol.foldLeft(winners)((d, t) => d.where(!col(t)))
+        .select((dataCols :+ "kb").map(col): _*)
+  }
+
+  /** Merge one batch of row versions as a new committed version (see the
+    * object doc for the merge rule and the commit protocol). Retention:
+    * `keepVersions` >= 2 controls how many committed versions stay
+    * readable; a version is garbage-collected
     * only when it is BOTH beyond the count window AND (when `keepAgeMs`
     * is set) older than that age — "keep 7 days" composes with "keep N
     * versions". The count minimum is 2 because a reader pinned to the
@@ -1265,21 +1436,20 @@ object SnapshotUpsert {
     val root = new Path(targetDir)
     val fs = root.getFileSystem(
       batch.sparkSession.sparkContext.hadoopConfiguration)
-    // FULL validation before any side effect (layout pin): a rejected
-    // first batch must not pin the table to its bucket count
-    UpsertSink.validateBatch(batch, keys, tombstoneCol)
+    // FULL validation before any side effect
+    validateBatch(batch, keys, tombstoneCol)
     // each attempt stages into its own directory and evaluates the batch
     // ONCE (re-checkpointed per attempt for a populated table), so
     // whichever attempt commits is internally consistent
     publish(fs, root, expectProps, commit, maxCommitAttempts, keepVersions,
         keepAgeMs, nowMs) { head =>
-      val next = batchHeader(fs, root, head, batch, keys, orderCol, nBuckets,
+      val next = batchHeader(root, head, batch, keys, orderCol, nBuckets,
         tombstoneCol, bucketCols, props)
-      UpsertSink.withPreparedBatch(batch, keys, nBuckets,
+      withPreparedBatch(batch, nBuckets,
         populatedTable = head.exists(_.files.nonEmpty),
-        bucketCols = bucketCols, depths = next.depths) { withBucket =>
+        bucketCols = next.bucketCols.get, depths = next.depths) { withBucket =>
         rewriteTouched(root, head, withBucket, next,
-          UpsertSink.selectWinners(_, _, next.schema.fieldNames.toSeq, keys,
+          selectWinners(_, _, next.schema.fieldNames.toSeq, keys,
             orderCol, tombstoneCol))
       }
     }
@@ -1332,22 +1502,21 @@ object SnapshotUpsert {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    UpsertSink.validateBatch(batch, keys, tombstoneCol)
+    validateBatch(batch, keys, tombstoneCol)
     publish(fs, root, expectProps, commit, maxCommitAttempts, keepVersions,
         keepAgeMs, nowMs) { head =>
-      val next = batchHeader(fs, root, head, batch, keys, orderCol, nBuckets,
+      val next = batchHeader(root, head, batch, keys, orderCol, nBuckets,
         tombstoneCol, bucketCols, props)
       // ONE action (the staging write), so the batch needs no pinning
       // snapshot — a single evaluation per attempt by construction
-      UpsertSink.withPreparedBatch(batch, keys, nBuckets,
-        populatedTable = false, bucketCols = bucketCols,
-        depths = next.depths) { withBucket =>
+      withPreparedBatch(batch, nBuckets, populatedTable = false,
+        bucketCols = next.bucketCols.get, depths = next.depths) { withBucket =>
         // in-batch winners ONLY (the existing rows are never read — that
         // is the whole point); tombstone winners are kept and STATED in
         // the layer for the read-time fold
-        val layer = UpsertSink.selectWinners(emptyWithKb(spark, next.schema),
+        val layer = selectWinners(emptyWithKb(spark, next.schema),
             withBucket, next.schema.fieldNames.toSeq, keys, orderCol,
-            tombstoneCol, keepTombstones = true, tombOut = DeltaTombCol)
+            tombstoneCol, keepTombstones = true)
           .withColumn(DeltaVCol, lit(nextVersion(head)))
           .repartition(col("kb"))
         val (staged, n) = stageSlice(root, head, layer, next)
@@ -1366,18 +1535,15 @@ object SnapshotUpsert {
 
   /** The next version's header for a keyed batch commit (upsert or
     * delta append) against `head`: the layout validated against the
-    * head (or pinned on a fresh table), the schema evolved additively
+    * head (a fresh table takes the caller's), the schema evolved additively
     * by the batch's data columns, the bucket columns and merge contract
     * recorded, `props` merged over the carried ones. Files and metadata
     * carry from the head. */
-  private def batchHeader(fs: FileSystem, root: Path, head: Option[Snapshot],
+  private def batchHeader(root: Path, head: Option[Snapshot],
       batch: DataFrame, keys: Seq[String], orderCol: String, nBuckets: Int,
       tombstoneCol: Option[String], bucketCols: Seq[String],
       props: Map[String, String]): Snapshot = {
-    head match {
-      case Some(c) => checkLayout(c, root, nBuckets, keys, orderCol, bucketCols)
-      case None => UpsertSink.pinLayout(fs, root, nBuckets)
-    }
+    head.foreach(checkLayout(_, root, nBuckets, keys, orderCol, bucketCols))
     val schema = evolvedSchema(head, org.apache.spark.sql.types.StructType(
       batch.schema.fields.filterNot(f => tombstoneCol.contains(f.name))))
     val base = head.getOrElse(Snapshot(0L, nBuckets, 0L, schema, Map.empty))
@@ -1426,7 +1592,7 @@ object SnapshotUpsert {
       if (compacted.isEmpty) None
       else {
         val folded = readMergedImage(spark, root, cur, Some(compacted))
-          .withColumn("kb", UpsertSink.bucketOfLayout(
+          .withColumn("kb", bucketOfLayout(
             cur.bucketCols.getOrElse(cur.mergeKeys.getOrElse(sys.error(
               s"compactDeltas: no recorded bucket columns at $targetDir"))),
             cur.nBuckets, cur.depths))
@@ -1499,7 +1665,7 @@ object SnapshotUpsert {
     val spark = source.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    UpsertSink.validateBatch(source, keys, None)
+    validateBatch(source, keys, None)
     updateSet.keys.foreach(c => require(source.columns.contains(c),
       s"mergeInto: updateSet assigns unknown column '$c'"))
     // SQL MERGE's cardinality rule: two source rows for one key would
@@ -1528,7 +1694,7 @@ object SnapshotUpsert {
           dataSchema.fieldNames.filterNot(keys.contains)
             .map(c => c -> col(s"s.$c")).toMap
         else updateSet
-      UpsertSink.withPreparedBatch(source, keys, cur.nBuckets,
+      withPreparedBatch(source, cur.nBuckets,
         populatedTable = cur.files.nonEmpty, bucketCols = bc,
         depths = cur.depths) { withBucket =>
         rewriteTouched(root, head, withBucket, cur.copy(schema = dataSchema,
@@ -1687,7 +1853,7 @@ object SnapshotUpsert {
       // evolution lack the newer columns (null-filled here); pending
       // delta layers fold in, so the rewrite doubles as a full compaction
       val rebucketed = readMergedImage(spark, root, cur)
-        .withColumn("kb", UpsertSink.bucketOf(bc, newBuckets))
+        .withColumn("kb", bucketOf(bc, newBuckets))
         .repartition(newBuckets min 4096, col("kb"))
       // nothing is carried: the new layout's manifest is exactly the
       // staged set, and the header flips the layout in the same commit
@@ -1697,9 +1863,6 @@ object SnapshotUpsert {
           orderCol = cur.orderCol))
       Some(n.copy(files = staged))
     }
-    // best-effort marker refresh for humans; the manifest header is
-    // what merges validate against
-    UpsertSink.refreshLayoutMarker(fs, root, newBuckets)
   }
 
   /** Split ONE overfull bucket into two children WITHOUT a table
@@ -1710,7 +1873,7 @@ object SnapshotUpsert {
     * `id + nBuckets*2^d`), every OTHER bucket is carried forward by
     * reference, and the per-bucket depth map commits atomically with
     * the files in the manifest's `#depths` header. Readers route by
-    * the recorded depths ([[UpsertSink.bucketOfLayout]]); bucket ids
+    * the recorded depths ([[bucketOfLayout]]); bucket ids
     * stay plain ints because an id value is unique among ACTIVE
     * buckets (a deeper active id makes its same-valued ancestor split,
     * hence inactive). Cost: one bucket's read + two children's write —
@@ -1752,7 +1915,7 @@ object SnapshotUpsert {
       // other rows are untouched and their buckets carried by reference)
       val splitImg = readMergedImage(spark, root, cur, Some(Seq(bucket)))
         .withColumn("kb",
-          UpsertSink.bucketOfLayout(bc, cur.nBuckets, newDepths))
+          bucketOfLayout(bc, cur.nBuckets, newDepths))
         .repartition(2, col("kb"))
       val (staged, n) = stageSlice(root, head, splitImg, cur.copy(
         files = cur.files - bucket, deltas = cur.deltas - bucket,
@@ -1909,8 +2072,7 @@ object SnapshotUpsert {
 
   /** Layout + merge-contract validation against the CURRENT manifest's
     * header (the layout authority — it changes atomically with the
-    * file set on rebucket; the side marker can lag a crash-interrupted
-    * refresh), shared by the CoW and delta commit paths. */
+    * file set on rebucket), shared by the CoW and delta commit paths. */
   private def checkLayout(c: Snapshot, root: Path, nBuckets: Int,
       keys: Seq[String], orderCol: String, bucketCols: Seq[String]): Unit = {
     require(c.nBuckets == nBuckets,
@@ -2011,7 +2173,7 @@ object SnapshotUpsert {
       if (presentTouched.nonEmpty)
         readMergedImage(spark, root, head.get, Some(presentTouched),
             Some(next.schema))
-          .withColumn("kb", UpsertSink.bucketOfLayout(next.bucketCols.get,
+          .withColumn("kb", bucketOfLayout(next.bucketCols.get,
             next.nBuckets, next.depths))
       else emptyWithKb(spark, next.schema)
     // the carry set excludes every TOUCHED bucket, not just the staged
@@ -2272,7 +2434,7 @@ object SnapshotUpsert {
     * equivalent copy-on-write merge sequence would have produced. Per
     * key the layers (base row at `__dv`=0, then one row-version per
     * delta commit, each stamped with its commit version) are replayed
-    * IN COMMIT ORDER through the same rule [[UpsertSink.selectWinners]]
+    * IN COMMIT ORDER through the same rule [[selectWinners]]
     * applies batch-by-batch: a layer replaces the current winner when
     * its order value is >= (later commit wins exact ties, like
     * `__src`), and a REPLACING tombstone erases the key — after which
@@ -2579,7 +2741,9 @@ object SnapshotUpsert {
         "n_delta_files")
   }
 
-  /** Current table state (same contract as [[UpsertSink.readLatest]]). */
+  /** Current table state: the data columns of the head version (a table
+    * whose every key was tombstone-deleted reads back empty, with the
+    * recorded schema). */
   def readSnapshot(spark: SparkSession, targetDir: String): DataFrame = {
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2673,7 +2837,7 @@ object SnapshotUpsert {
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), projected.schema)
     val kbs = probes
-      .select(UpsertSink.bucketOfLayout(hashKeys, cur.nBuckets, cur.depths)
+      .select(bucketOfLayout(hashKeys, cur.nBuckets, cur.depths)
         .as("kb"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     val present = kbs.filter(b =>
@@ -2892,7 +3056,7 @@ object SnapshotUpsert {
     def advance(): Unit =
       // shared atomic-replace write: the cursor file is never torn, and
       // a crash anywhere before the rename leaves the old cursor (replay)
-      UpsertSink.writeFileAtomic(cfs, cursorPath, current.toString)
+      writeFileAtomic(cfs, cursorPath, current.toString)
     last match {
       case Some(v) if v == current => None
       case Some(v) =>
@@ -2942,7 +3106,9 @@ object SnapshotUpsert {
   }
 
   /** Continuous snapshot-committed upsert under the streaming
-    * checkpoint's replay guarantee (mirror of [[UpsertSink.upsertSink]]). */
+    * checkpoint's replay guarantee. `drainOnce` = process the backlog in
+    * rate-limited micro-batches then stop (the scheduled
+    * table-maintenance shape, same as [[EventStreams.parquetSink]]). */
   def sink(stream: DataFrame, targetDir: String, checkpoint: String,
       keys: Seq[String], orderCol: String, nBuckets: Int = 64,
       keepVersions: Int = 2, drainOnce: Boolean = false,
@@ -2951,7 +3117,7 @@ object SnapshotUpsert {
       bucketCols: Seq[String] = Seq.empty,
       maxCommitAttempts: Int = 5,
       commit: CommitPrimitive = CreateExclusive): StreamingQuery =
-    UpsertSink.startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
+    startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
       b => upsertBatchSnapshot(b, targetDir, keys, orderCol, nBuckets,
         keepVersions, keepAgeMs, tombstoneCol, bucketCols = bucketCols,
         maxCommitAttempts = maxCommitAttempts, commit = commit))
@@ -2970,9 +3136,26 @@ object SnapshotUpsert {
       maxCommitAttempts: Int = 5,
       commit: CommitPrimitive = CreateExclusive,
       compactAt: Int = 8): StreamingQuery =
-    UpsertSink.startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
+    startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
       b => appendDeltaSnapshot(b, targetDir, keys, orderCol, nBuckets,
         keepVersions, keepAgeMs, tombstoneCol, bucketCols = bucketCols,
         maxCommitAttempts = maxCommitAttempts, commit = commit,
         compactAt = compactAt))
+
+  /** Shared foreachBatch wiring for the streaming sinks. outputMode
+    * "update" is the fit for stateful upstreams that emit per-key
+    * revisions (mapGroupsWithState): each micro-batch carries the keys
+    * whose state changed, which is exactly an upsert feed. */
+  private[graft] def startForeachBatch(stream: DataFrame,
+      checkpoint: String, outputMode: String, drainOnce: Boolean)(
+      f: DataFrame => Unit): StreamingQuery = {
+    var w = stream.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+          _: Long) => f(b.toDF()))
+    if (drainOnce)
+      w = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    w.start()
+  }
 }

@@ -258,7 +258,7 @@ class IncrementalMvSpec extends SparkSpec {
     SnapshotUpsert.rebucket(spark, dir, 8, Seq("id"))
     assert(SnapshotUpsert.currentProps(spark, dir)("owner") == "mv-spec")
     val bucket = SnapshotUpsert.readSnapshot(spark, dir)
-      .select(graft.streaming.UpsertSink.bucketOf(Seq("id"), 8).as("kb"))
+      .select(graft.streaming.SnapshotUpsert.bucketOf(Seq("id"), 8).as("kb"))
       .collect().map(_.getInt(0)).head
     SnapshotUpsert.splitBucket(spark, dir, bucket)
     assert(SnapshotUpsert.currentProps(spark, dir)("note") == "updated")

@@ -137,50 +137,44 @@ class AdvisoryPipelineSpec extends SparkSpec {
     assert(m(("CVE-2024-3", "openssl")).getAs[String]("previous_status") == "fixed")
   }
 
-  test("snapshot-committed prod mode matches the overwrite mode exactly " +
-      "and keeps prior runs time-travel-readable") {
-    val owBase = Files.createTempDirectory("advisory-e2e-ow").toString
-    val snBase = Files.createTempDirectory("advisory-e2e-sn").toString
-    def runOnce(b: String, runId: String, snap: Boolean, at: String) = {
-      val cfg = PipelineConfig.fromDefaults(runId, b)
-        .copy(prodSnapshot = snap)
-      Pipelines.run(spark, cfg, new StubTransport, nvd,
-        "http://stub", overridesDf, now = Instant.parse(at))
-    }
-    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
-    // run 1 (bootstrap) and run 2 (TTL-cached, all unchanged) must
-    // produce IDENTICAL prod content in both commit modes
-    val ow1 = rows(runOnce(owBase, "m1", snap = false, "2026-02-01T00:00:00Z"))
-    val sn1 = rows(runOnce(snBase, "m1", snap = true, "2026-02-01T00:00:00Z"))
-    assert(sn1 == ow1, "bootstrap run: snapshot prod must equal overwrite prod")
-    assert(sn1.size == 4)
-    val ow2 = rows(runOnce(owBase, "m2", snap = false, "2026-02-01T00:01:00Z"))
-    val sn2 = rows(runOnce(snBase, "m2", snap = true, "2026-02-01T00:01:00Z"))
-    assert(sn2 == ow2, "second run: snapshot prod must equal overwrite prod")
-    // the snapshot table versioned each pipeline run: run 1 is still
-    // readable as-of its commit after run 2 replaced every row's
-    // change_type — the audit capability the overwrite prod cannot have
-    val prodPath = s"$snBase/output/prod/state_machine/cve_state_machine"
-    assert(graft.streaming.SnapshotUpsert.versions(spark, prodPath) ==
-      Seq(1L, 2L))
-    assert(rows(graft.streaming.SnapshotUpsert
-      .readVersion(spark, prodPath, 1L)) == sn1)
-  }
-
-  test("snapshot prod mode survives an all-empty bootstrap run " +
-      "(zero advisories commit no version; the read must not fail)") {
+  test("an all-empty bootstrap run (zero advisories) writes an empty prod " +
+      "that reads back with its columns") {
     val b = Files.createTempDirectory("advisory-e2e-empty").toString
     class EmptyTransport extends HttpTransport {
       def get(url: String, headers: Map[String, String]): (Int, String) =
         (200, "{}")
     }
-    val cfg = PipelineConfig.fromDefaults("e1", b).copy(prodSnapshot = true)
+    val cfg = PipelineConfig.fromDefaults("e1", b)
     val prod = Pipelines.run(spark, cfg, new EmptyTransport,
       nvd, "http://stub", overridesDf,
       now = Instant.parse("2026-02-01T00:00:00Z"))
     assert(prod.count() == 0L)
     assert(prod.columns.contains("cve_id"))
+  }
+
+  test("the enrichment cache partition is rewritten as one file by a run " +
+      "that fetches") {
+    val b = Files.createTempDirectory("advisory-e2e-cache").toString
+    def runAt(runId: String, at: String) =
+      Pipelines.run(spark, PipelineConfig.fromDefaults(runId, b), new StubTransport,
+        nvd, "http://stub", overridesDf, now = Instant.parse(at))
+    runAt("c1", "2026-02-01T00:00:00Z")
+    // an hour later the TTL has lapsed: both pending keys are fetched and
+    // the nvd partition is merged and rewritten
+    nvdCalls.set(0)
+    runAt("c2", "2026-02-01T01:00:00Z")
+    assert(nvdCalls.get() == 2)
+    val part = new java.io.File(s"$b/output/enrichment_cache/source_name=nvd")
+    val files = part.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.length == 1, s"cache partition files: ${files.mkString(", ")}")
+    val rows = spark.read.parquet(s"$b/output/enrichment_cache").collect()
+      .map(r => (r.getAs[String]("cve_id"), r.getAs[String]("package_name"),
+        r.getAs[String]("source_name"),
+        r.getAs[java.sql.Timestamp]("last_accessed").toInstant))
+      .toSet
+    val at = Instant.parse("2026-02-01T01:00:00Z")
+    assert(rows == Set(("CVE-2024-3", "openssl", "nvd", at),
+      ("CVE-2024-4", "openssl", "nvd", at)))
   }
 
   test("re-driving a run_id in overwrite mode swaps in the same prod and " +

@@ -196,7 +196,7 @@ class SnapshotBloomSpec extends SparkSpec {
     val g1Bucket = {
       import spark.implicits._
       Seq("g1").toDF("grp").select(
-        UpsertSink.bucketOfLayout(Seq("grp"), s0.nBuckets, s0.depths)
+        SnapshotUpsert.bucketOfLayout(Seq("grp"), s0.nBuckets, s0.depths)
           .as("kb")).head.getInt(0)
     }
     SnapshotUpsert.splitBucket(spark, dir, g1Bucket, keepVersions = 10)

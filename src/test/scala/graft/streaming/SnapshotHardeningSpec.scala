@@ -188,33 +188,36 @@ class SnapshotHardeningSpec extends SparkSpec {
     assert(SnapshotUpsert.readSnapshot(spark, dir).count() == 0)
   }
 
-  test("overwrite sink tombstones: deletes apply and an emptied bucket's " +
-      "directory is removed") {
+  test("tombstones on a one-bucket table: deletes apply and an emptied " +
+      "bucket leaves the manifest") {
     import spark.implicits._
     val dir = tmp()
-    UpsertSink.upsertBatch(df((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)),
+    SnapshotUpsert.upsertBatchSnapshot(
+      df((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)),
       dir, Seq("id"), "v", nBuckets = 1)
-    UpsertSink.upsertBatch(
+    SnapshotUpsert.upsertBatchSnapshot(
       Seq((2L, "b", 2L, true)).toDF("id", "status", "v", "_deleted"),
       dir, Seq("id"), "v", nBuckets = 1, tombstoneCol = Some("_deleted"))
-    val left = UpsertSink.readLatest(spark, dir).collect()
+    val left = SnapshotUpsert.readSnapshot(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(left == Set((1L, "a"), (3L, "c")))
-    // empty the whole (single) bucket: the kb=0 directory must go away
-    UpsertSink.upsertBatch(
+    // empty the whole (single) bucket: the head manifest lists no file
+    SnapshotUpsert.upsertBatchSnapshot(
       Seq((1L, "a", 3L, true), (3L, "c", 3L, true))
         .toDF("id", "status", "v", "_deleted"),
       dir, Seq("id"), "v", nBuckets = 1, tombstoneCol = Some("_deleted"))
-    assert(!new java.io.File(s"$dir/kb=0").exists(),
-      "a fully-tombstoned bucket's directory must be deleted")
-    // the table is now physically empty: readLatest must answer with an
-    // empty frame of the recorded schema, not a schema-inference error
-    val empty = UpsertSink.readLatest(spark, dir)
+    val (root, fs) = hfs(dir)
+    val head = SnapshotUpsert.currentSnapshot(fs, root).get
+    assert(head.files.isEmpty, s"a fully-tombstoned bucket must leave the " +
+      s"manifest: ${head.files}")
+    // the table is now empty: the read must answer with an empty frame of
+    // the recorded schema, not a schema-inference error
+    val empty = SnapshotUpsert.readSnapshot(spark, dir)
     assert(empty.columns.toSeq == Seq("id", "status", "v"))
     assert(empty.count() == 0L)
     // a bad marker type is refused with a clear message
     val e = intercept[RuntimeException] {
-      UpsertSink.upsertBatch(
+      SnapshotUpsert.upsertBatchSnapshot(
         Seq((1L, "a", 4L, "yes")).toDF("id", "status", "v", "_deleted"),
         dir, Seq("id"), "v", nBuckets = 1, tombstoneCol = Some("_deleted"))
     }
@@ -726,27 +729,25 @@ class SnapshotHardeningSpec extends SparkSpec {
 
   test("case-variant reserved columns are rejected BEFORE any side effect " +
       "(no layout pin, no schema marker from an invalid first batch)") {
-    import spark.implicits._
-    for (dir <- Seq(tmp(), tmp())) {
-      val bad = df((1L, "a", 1L)).withColumn("KB", lit(9))
-      val e1 = intercept[IllegalArgumentException] {
-        if (dir.hashCode % 2 == 0)
-          UpsertSink.upsertBatch(bad, dir, Seq("id"), "v", nBuckets = 64)
-        else SnapshotUpsert.upsertBatchSnapshot(bad, dir, Seq("id"), "v",
-          nBuckets = 64)
-      }
-      // Spark resolution is case-insensitive: withColumn("kb") would
-      // silently REPLACE the KB data column, so "KB" must be refused
-      assert(e1.getMessage.contains("reserved"), e1.getMessage)
-      assert(!new java.io.File(s"$dir/_graft_buckets").exists(),
-        "a rejected first batch must not pin the table layout")
-      assert(!new java.io.File(s"$dir/_graft_schema").exists(),
-        "a rejected first batch must not record a schema")
-      // the corrected batch can then use ANY bucket count
-      SnapshotUpsert.upsertBatchSnapshot(df((1L, "a", 1L)), dir, Seq("id"),
-        "v", nBuckets = 8)
-      assert(snapSet(dir) == Set((1L, "a", 1L)))
+    val dir = tmp()
+    val bad = df((1L, "a", 1L)).withColumn("KB", lit(9))
+    val e1 = intercept[IllegalArgumentException] {
+      SnapshotUpsert.upsertBatchSnapshot(bad, dir, Seq("id"), "v",
+        nBuckets = 64)
     }
+    // Spark resolution is case-insensitive: withColumn("kb") would
+    // silently REPLACE the KB data column, so "KB" must be refused
+    assert(e1.getMessage.contains("reserved"), e1.getMessage)
+    assert(!new java.io.File(s"$dir/_graft_buckets").exists(),
+      "a rejected first batch must not pin the table layout")
+    assert(!new java.io.File(s"$dir/_graft_schema").exists(),
+      "a rejected first batch must not record a schema")
+    assert(SnapshotUpsert.versions(spark, dir).isEmpty,
+      "a rejected first batch must not commit a version")
+    // the corrected batch can then use ANY bucket count
+    SnapshotUpsert.upsertBatchSnapshot(df((1L, "a", 1L)), dir, Seq("id"),
+      "v", nBuckets = 8)
+    assert(snapSet(dir) == Set((1L, "a", 1L)))
   }
 
   test("diffImages collision avoidance is case-insensitive (__OLD_k data " +
@@ -771,11 +772,6 @@ class SnapshotHardeningSpec extends SparkSpec {
     SnapshotUpsert.upsertBatchSnapshot(df((1L, "second", 3L)), dir, Seq("id"),
       orderCol = "", nBuckets = 4, keepVersions = 10)
     assert(snapSet(dir) == Set((1L, "second", 3L)))
-    val ow = tmp()
-    UpsertSink.upsertBatch(df((1L, "first", 9L)), ow, Seq("id"), orderCol = "")
-    UpsertSink.upsertBatch(df((1L, "second", 3L)), ow, Seq("id"), orderCol = "")
-    assert(UpsertSink.readLatest(spark, ow).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "second")))
   }
 
   test("the default primitive is O_EXCL on local filesystems: exclusive " +

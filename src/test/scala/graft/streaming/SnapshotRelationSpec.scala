@@ -72,7 +72,7 @@ class SnapshotRelationSpec extends SparkSpec {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = SnapshotUpsert.currentSnapshot(fs, root).get
     ids.toDF("id").select(
-      UpsertSink.bucketOfLayout(Seq("id"), cur.nBuckets, cur.depths).as("kb"))
+      SnapshotUpsert.bucketOfLayout(Seq("id"), cur.nBuckets, cur.depths).as("kb"))
       .collect().map(_.getInt(0)).toSet
   }
 
@@ -178,7 +178,7 @@ class SnapshotRelationSpec extends SparkSpec {
         val root = new Path(dir)
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val cur = SnapshotUpsert.currentSnapshot(fs, root).get
-        Seq(3L).toDF("day").select(UpsertSink.bucketOfLayout(
+        Seq(3L).toDF("day").select(SnapshotUpsert.bucketOfLayout(
           Seq("day"), cur.nBuckets, cur.depths).as("kb"))
           .collect().map(_.getInt(0)).toSet
       }).toLong))
@@ -339,7 +339,7 @@ class SnapshotRelationSpec extends SparkSpec {
     val root = new Path(postings)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = SnapshotUpsert.currentSnapshot(fs, root).get
-    val kb = Seq("spark").toDF("term").select(UpsertSink.bucketOfLayout(
+    val kb = Seq("spark").toDF("term").select(SnapshotUpsert.bucketOfLayout(
       Seq("term"), cur.nBuckets, cur.depths).as("kb")).head.getInt(0)
     assert(scannedFiles(q) == cur.files.getOrElse(kb, Seq.empty).size)
     assert(cur.allRefs.size > cur.files.getOrElse(kb, Seq.empty).size,
@@ -431,7 +431,7 @@ class SnapshotRelationSpec extends SparkSpec {
     def bucketOfDay(d: Long) = {
       val c = SnapshotUpsert.currentSnapshot(hfs, root).get
       Seq(d).toDF("day")
-        .select(UpsertSink.bucketOfLayout(
+        .select(SnapshotUpsert.bucketOfLayout(
           Seq("day"), c.nBuckets, c.depths).as("kb"))
         .collect().map(_.getInt(0)).head
     }

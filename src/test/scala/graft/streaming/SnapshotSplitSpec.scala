@@ -28,7 +28,7 @@ class SnapshotSplitSpec extends SparkSpec {
   private def baseBuckets(ids: Seq[Long], n: Int): Map[Long, Int] = {
     import spark.implicits._
     ids.toDF("id")
-      .select(col("id"), UpsertSink.bucketOf(Seq("id"), n).as("kb"))
+      .select(col("id"), SnapshotUpsert.bucketOf(Seq("id"), n).as("kb"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
   }
 
@@ -83,7 +83,7 @@ class SnapshotSplitSpec extends SparkSpec {
     // derive it with the real layout routing
     import spark.implicits._
     val child = (0L until 200L).toDF("id")
-      .select(col("id"), UpsertSink.bucketOfLayout(Seq("id"), 4,
+      .select(col("id"), SnapshotUpsert.bucketOfLayout(Seq("id"), 4,
         Map(0 -> 1, 4 -> 1)).as("kb"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val inSibling = (0L until 200L).find(i => child(i) == 4).get
@@ -107,7 +107,7 @@ class SnapshotSplitSpec extends SparkSpec {
     val filesAfter = manifestFiles(dir)
     // buckets not touched by the merge keep their exact files
     val newKeyBucket = Seq(1000L + inSibling).toDF("id")
-      .select(UpsertSink.bucketOfLayout(Seq("id"), 4, Map(0 -> 1, 4 -> 1)))
+      .select(SnapshotUpsert.bucketOfLayout(Seq("id"), 4, Map(0 -> 1, 4 -> 1)))
       .head().getInt(0)
     val untouched = filesBefore.keySet -- Set(4, 0,
       base(inCarried), newKeyBucket)
@@ -123,7 +123,7 @@ class SnapshotSplitSpec extends SparkSpec {
     import spark.implicits._
     val layout = Map(0 -> 1, 4 -> 1)
     val routed = (0L until 64L).toDF("id")
-      .select(col("id"), UpsertSink.bucketOfLayout(Seq("id"), 4, layout)
+      .select(col("id"), SnapshotUpsert.bucketOfLayout(Seq("id"), 4, layout)
         .as("kb"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // probe one key in a split child and one in a carried bucket
@@ -139,7 +139,7 @@ class SnapshotSplitSpec extends SparkSpec {
     // pruning: scanned files = exactly the probed buckets' manifest rows
     val files = manifestFiles(dir)
     val probes3 = Seq(pSib, pCar, 999999L).toDF("id")
-      .select(UpsertSink.bucketOfLayout(Seq("id"), 4, layout).as("kb"))
+      .select(SnapshotUpsert.bucketOfLayout(Seq("id"), 4, layout).as("kb"))
       .distinct().collect().map(_.getInt(0)).toSet
     val expected = probes3.flatMap(b => files.getOrElse(b, Set.empty))
     val gotFiles = got.inputFiles.toSet
@@ -195,7 +195,7 @@ class SnapshotSplitSpec extends SparkSpec {
     // a merge against the depth-2 layout stays exact
     import spark.implicits._
     val routed = (0L until 128L).toDF("id")
-      .select(col("id"), UpsertSink.bucketOfLayout(Seq("id"), 4,
+      .select(col("id"), SnapshotUpsert.bucketOfLayout(Seq("id"), 4,
         Map(0 -> 1, 4 -> 2, 12 -> 2)).as("kb"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val deep = routed.collectFirst { case (k, b) if b == 12 => k }.get

@@ -34,21 +34,20 @@ class SnapshotUpsertSpec extends SparkSpec {
       .groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2).toSeq }
   }
 
-  test("merge semantics match the overwrite sink across a batch sequence") {
-    val snapDir = tmp()
-    val owDir = tmp()
-    val batches = Seq(
+  test("merge semantics across a batch sequence: latest version per key " +
+      "wins, incoming beats existing on a tie, a stale version is rejected") {
+    val dir = tmp()
+    // update key 1 at a HIGHER version, re-state key 2 at the SAME
+    // version with different payload (the incoming row must win), then
+    // a STALE version of key 1 that must not regress the row
+    Seq(
       df((1L, "new", 1L), (2L, "new", 1L)),
       df((1L, "fixed", 2L), (2L, "revised", 1L), (3L, "new", 1L)),
-      df((1L, "stale", 1L), (4L, "new", 1L)))
-    batches.foreach { b =>
-      SnapshotUpsert.upsertBatchSnapshot(b, snapDir, Seq("id"), "v", nBuckets = 8)
-      UpsertSink.upsertBatch(b, owDir, Seq("id"), "v", nBuckets = 8)
-    }
-    val ow = UpsertSink.readLatest(spark, owDir).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(snapSet(snapDir) == ow)
-    assert(snapSet(snapDir).contains((1L, "fixed", 2L))) // stale rejected
+      df((1L, "stale", 1L), (4L, "new", 1L))
+    ).foreach(b =>
+      SnapshotUpsert.upsertBatchSnapshot(b, dir, Seq("id"), "v", nBuckets = 8))
+    assert(snapSet(dir) == Set((1L, "fixed", 2L), (2L, "revised", 1L),
+      (3L, "new", 1L), (4L, "new", 1L)))
   }
 
   test("untouched buckets are carried forward BY REFERENCE, not rewritten") {
@@ -64,7 +63,7 @@ class SnapshotUpsertSpec extends SparkSpec {
       Seq("id"), "v", nBuckets = 8)
     val v2 = manifestFiles(dir, 2L)
     val touchedKb = df((5L, "x", 1L))
-      .select(UpsertSink.bucketOf(Seq("id"), 8)).head().getInt(0)
+      .select(SnapshotUpsert.bucketOf(Seq("id"), 8)).head().getInt(0)
     assert(v2(touchedKb) != v1(touchedKb))
     assert(v2(touchedKb).forall(_.startsWith("batches/v2-")))
     (v1.keySet - touchedKb).foreach(b => assert(v2(b) == v1(b),
@@ -106,7 +105,7 @@ class SnapshotUpsertSpec extends SparkSpec {
     // simulate: batch v2's data files fully written, manifest never
     // committed (the only multi-file window in the commit path)
     val b2 = df((1L, "a2", 2L), (3L, "c", 1L))
-    b2.withColumn("kb", UpsertSink.bucketOf(Seq("id"), 4))
+    b2.withColumn("kb", SnapshotUpsert.bucketOf(Seq("id"), 4))
       .write.partitionBy("kb").parquet(s"$dir/batches/v2-deadbeef")
     assert(snapSet(dir) == before, "uncommitted files must be invisible")
     assert(SnapshotUpsert.versions(spark, dir) == Seq(1L))
@@ -148,7 +147,7 @@ class SnapshotUpsertSpec extends SparkSpec {
     // gone, its carried files (still referenced by v2/v3) must survive
     assert(SnapshotUpsert.versions(spark, dir) == Seq(2L, 3L))
     val touchedKb = df((5L, "x", 1L))
-      .select(UpsertSink.bucketOf(Seq("id"), 4)).head().getInt(0)
+      .select(SnapshotUpsert.bucketOf(Seq("id"), 4)).head().getInt(0)
     val superseded = v1Files(touchedKb).toSet
     val carried = (v1Files - touchedKb).values.flatten.toSet
     val live = liveFiles()
@@ -189,7 +188,11 @@ class SnapshotUpsertSpec extends SparkSpec {
       s"leaked=${livePaths.diff(referenced)} missing=${referenced.diff(livePaths)}")
   }
 
-  test("nBuckets layout pin is shared with the overwrite sink") {
+  test("merging with a different nBuckets than the table layout is refused") {
+    // the bucket is a function of nBuckets: a mismatched merge would
+    // leave each key's old row in a bucket it neither reads nor
+    // rewrites — duplicate keys with NO error. The head manifest's
+    // recorded layout pins the count.
     val dir = tmp()
     SnapshotUpsert.upsertBatchSnapshot(df((1L, "a", 1L)), dir, Seq("id"), "v",
       nBuckets = 8)
@@ -198,6 +201,10 @@ class SnapshotUpsertSpec extends SparkSpec {
         Seq("id"), "v", nBuckets = 16)
     }
     assert(e.getMessage.contains("nBuckets=8"))
+    // the same count still merges
+    SnapshotUpsert.upsertBatchSnapshot(df((1L, "b", 2L)), dir, Seq("id"), "v",
+      nBuckets = 8)
+    assert(snapSet(dir) == Set((1L, "b", 2L)))
   }
 
   test("the input batch is evaluated exactly once when merging into a populated table") {
@@ -212,6 +219,61 @@ class SnapshotUpsertSpec extends SparkSpec {
       dir, Seq("id"), "v", nBuckets = 8)
     assert(acc.value == 2L,
       s"2-row incremental batch evaluated ${acc.value / 2.0}x")
+  }
+
+  test("write clustering: every bucket holds exactly ONE file after any merge") {
+    val dir = tmp()
+    // repeated merges into the same buckets must not drift into a
+    // small-files table: each touched bucket is staged as a single
+    // clustered file regardless of shuffle partitioning
+    (1L to 5L).foreach { v =>
+      SnapshotUpsert.upsertBatchSnapshot(df((5L, s"v$v", v), (100L + v, "other", 1L)),
+        dir, Seq("id"), "v", nBuckets = 4)
+    }
+    val filesPerBucket = manifestFiles(dir, 5L).map { case (b, fs0) => b -> fs0.size }
+    assert(filesPerBucket.nonEmpty && filesPerBucket.values.forall(_ == 1),
+      s"one file per bucket expected: $filesPerBucket")
+    assert(snapSet(dir) ==
+      ((1L to 5L).map(v => (100L + v, "other", 1L)).toSet + ((5L, "v5", 5L))))
+  }
+
+  test("reserved columns in the batch are rejected, not clobbered") {
+    // __rn in particular would otherwise be silently REPLACED by the
+    // merge's row_number and come out as all-1s in the table; __old and
+    // _change are reserved so any upsert table stays change-feed-safe
+    for (reserved <- Seq("kb", "__src", "__rn", "__old", "_change")) {
+      val bad = df((1L, "a", 1L)).withColumn(reserved, lit(9))
+      val e = intercept[IllegalArgumentException] {
+        SnapshotUpsert.upsertBatchSnapshot(bad, tmp(), Seq("id"), "v", nBuckets = 8)
+      }
+      assert(e.getMessage.contains("reserved"), s"$reserved: ${e.getMessage}")
+    }
+  }
+
+  test("the merge scan PRUNES to the touched buckets (partition filter, not a full read)") {
+    val dir = tmp()
+    SnapshotUpsert.upsertBatchSnapshot(
+      df((0L to 63L).map(i => (i, "seed", 1L)): _*), dir, Seq("id"), "v",
+      nBuckets = 8)
+    assert(manifestFiles(dir, 1L).size == 8, "all 8 buckets seeded")
+    // every record a task reads from a file during a one-key merge: the
+    // merge scan and the commit's stats pass over the staged slice
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          recordsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SnapshotUpsert.upsertBatchSnapshot(df((5L, "upd", 2L)), dir,
+        Seq("id"), "v", nBuckets = 8)
+      org.apache.spark.graftspark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(recordsRead.get > 0L && recordsRead.get < 64L,
+      s"the merge read ${recordsRead.get} records of a 64-row table")
+    assert(snapSet(dir).contains((5L, "upd", 2L)))
   }
 
   test("change feed: inserts and updates between versions, unchanged co-located rows filtered") {
@@ -496,7 +558,7 @@ class SnapshotUpsertSpec extends SparkSpec {
     assert(got.collect().map(_.getLong(0)).toSet == Set(5L, 17L))
     // pruning: the scan's files are EXACTLY the probed buckets' manifest
     // entries — strictly fewer than the full snapshot's
-    val kbs = lookup.select(UpsertSink.bucketOf(Seq("id"), 8).as("kb"))
+    val kbs = lookup.select(SnapshotUpsert.bucketOf(Seq("id"), 8).as("kb"))
       .distinct().collect().map(_.getInt(0)).toSet
     val manifest = manifestFiles(dir, 2L)
     val expectedRel = kbs.filter(manifest.contains).flatMap(manifest).toSet
