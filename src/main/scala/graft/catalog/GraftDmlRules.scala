@@ -146,8 +146,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     val sAttrs = m.sourceTable.outputSet
     val (keys, _) = SnapshotUpsert.currentMergeContract(session, tbl.dir)
       .getOrElse(sys.error(
-        s"graft catalog MERGE: the table at ${tbl.dir} predates the " +
-          "recorded merge contract (#keys); one fresh commit upgrades it"))
+        s"graft catalog MERGE: no committed version at ${tbl.dir}"))
 
     // the ON clause: a conjunction of t.k = s.k over EXACTLY the keys
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -284,11 +283,9 @@ case class GraftInsertCommand(dir: String, sourcePlan: LogicalPlan)
   override def run(spark: SparkSession): Seq[Row] = {
     val (keys, orderCol) = SnapshotUpsert.currentMergeContract(spark, dir)
       .getOrElse(sys.error(
-        s"graft catalog INSERT: the table at $dir predates the recorded " +
-          "merge contract (#keys); one fresh commit upgrades it"))
+        s"graft catalog INSERT: no committed version at $dir"))
     val nBuckets = SnapshotUpsert.currentBuckets(spark, dir).get
-    val bucketCols = SnapshotUpsert.currentBucketCols(spark, dir)
-      .getOrElse(keys)
+    val bucketCols = SnapshotUpsert.currentBucketCols(spark, dir).get
     val schema = SnapshotUpsert.resolvePin(spark, dir).get._2
     val q = GraftSqlBridge.ofRows(spark, sourcePlan)
     require(q.columns.length == schema.fields.length,

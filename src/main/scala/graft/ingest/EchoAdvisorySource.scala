@@ -60,8 +60,9 @@ object EchoAdvisorySource {
       .toDF("package_name", "cve_id", "fixed_version")
   }
 
-  /** Full ingest: fetch `{url}/{tableName}.json`, flatten, write to
-    * run-isolated staging, read back, register the global temp view. */
+  /** Full ingest: fetch `{url}/{tableName}.json`, flatten, write one
+    * file (the reference's `partitions=1`) to run-isolated staging, read
+    * back, register the global temp view. */
   def ingest(
       spark: SparkSession,
       transport: HttpTransport,
@@ -69,7 +70,6 @@ object EchoAdvisorySource {
       stagingPath: String,
       runId: String,
       tableName: String = "data",
-      partitions: Int = 1,
   ): DataFrame = {
     val (code, body) = transport.get(s"$url/$tableName.json", Map.empty)
     require(code == 200, s"advisory feed returned HTTP $code")
@@ -77,7 +77,7 @@ object EchoAdvisorySource {
     val df = spark.createDataFrame(rows.asJava, AdvisorySchemas.echoAdvisory)
     val outputPath = s"$stagingPath/run_id=$runId/sources/$tableName"
     TableIO.writeTable(df, outputPath, AdvisorySchemas.echoAdvisory,
-      partitions = partitions)
+      partitions = 1)
     val back = TableIO.readTable(spark, outputPath, AdvisorySchemas.echoAdvisory)
     back.createOrReplaceGlobalTempView(tableName)
     back

@@ -209,10 +209,8 @@ object Dedup {
       idCol: String, n: Int, verifyJoin: Option[String]): DataFrame = {
     val sets = shingleSets(df, textCol, idCol, n)
       .select(col("id"), col("s"), size(col("s")).as("sz"))
-    // Join strategy: conf spark.graft.dedup.pairJoin (an experiment /
-    // deployment override — tools/DedupHintCompare@3a89fdd flips it through
-    // the REGISTERED queries) > explicit `verifyJoin` (the callsite
-    // default) > size-adaptive default (below).
+    // Join strategy: explicit `verifyJoin` (the callsite default) >
+    // size-adaptive default (below).
     //  - "merge": sort-merge puts hashpartitioning(id) Exchanges under
     //    both `sets` sides; they canonicalize identically, so exchange
     //    reuse computes the shingle sets ONCE and avoids broadcasting
@@ -236,17 +234,15 @@ object Dedup {
     //    default is therefore SIZE-ADAPTIVE: auto while the corpus
     //    table's plan-time size estimate fits the session's broadcast
     //    threshold, merge beyond it.
-    val mode = df.sparkSession.conf.getOption("spark.graft.dedup.pairJoin")
-      .orElse(verifyJoin)
-      .getOrElse {
-        val thresh = scala.util.Try(
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            df.sparkSession.conf
-              .get("spark.sql.autoBroadcastJoinThreshold", "10MB")))
-          .getOrElse(10L << 20)
-        val corpusBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (thresh > 0 && corpusBytes <= thresh) "auto" else "merge"
-      }
+    val mode = verifyJoin.getOrElse {
+      val thresh = scala.util.Try(
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          df.sparkSession.conf
+            .get("spark.sql.autoBroadcastJoinThreshold", "10MB")))
+        .getOrElse(10L << 20)
+      val corpusBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (thresh > 0 && corpusBytes <= thresh) "auto" else "merge"
+    }
     def strat(d: DataFrame) = if (mode == "merge") d.hint("merge") else d
     pairs
       .join(strat(sets.select(col("id").as("id1"), col("s").as("s1"),

@@ -20,19 +20,13 @@ import org.apache.spark.sql.DataFrame
   * the plan's scan arrives in fewer than half the session's cores. At
   * real scale inputs come in many splits and this is the identity —
   * no constant tuned for local[32] leaks into cluster plans.
-  * `spark.graft.scan.fanout=off` disables it globally (the
-  * measurement override used by tools/FanCompare@3a89fdd).
   */
 object Fan {
   def out(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    if (sess.conf.getOption("spark.graft.scan.fanout").contains("off")) df
-    else {
-      val cores = sess.sparkContext.defaultParallelism
-      // .rdd only constructs the physical plan (no job); for a file
-      // scan its partition count is the split count
-      if (df.rdd.getNumPartitions * 2 <= cores) df.repartition(cores) else df
-    }
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    // .rdd only constructs the physical plan (no job); for a file scan
+    // its partition count is the split count
+    if (df.rdd.getNumPartitions * 2 <= cores) df.repartition(cores) else df
   }
 
   /** Keyed STAGING exchange (the bigramSurprise recipe generalized):
@@ -43,10 +37,7 @@ object Fan {
     * projection after the exchange runs on every core even when the
     * scan arrives as a single split. Unlike [[out]] this is not about
     * split counts — the exchange is justified at any scale by (1)+(2),
-    * so it is unconditional; `spark.graft.scan.fanout=off` remains the
-    * measurement override (tools/FanCompare@3a89fdd A/B's the original shape). */
+    * so it is unconditional. */
   def stage(df: DataFrame, c: org.apache.spark.sql.Column): DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.scan.fanout")
-        .contains("off")) df
-    else df.repartition(c)
+    df.repartition(c)
 }

@@ -272,9 +272,9 @@ object IncrementalAnn {
 
   /** Split ONE oversized (or drifted) cell of the standing index in
     * place — the LINEAR-HASHING move applied to centroids, retiring
-    * the layer's last table-sized maintenance event (pre-r12 the only
-    * answer to corpus growth beyond the trained cell count was a full
-    * centroid retrain + index rebuild): the cell's rows are read as a
+    * the layer's last table-sized maintenance event (without it the
+    * only answer to corpus growth beyond the trained cell count is a
+    * full centroid retrain + index rebuild): the cell's rows are read as a
     * point lookup (its buckets only), re-divided between two child
     * centroids, and the MOVED half commits as one atomic batch
     * (tombstone old key + insert new key); every other cell is

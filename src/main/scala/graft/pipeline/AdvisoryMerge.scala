@@ -49,71 +49,46 @@ object AdvisoryMerge {
 
   /** Full merge: echo master list LEFT JOIN best-enrichment LEFT JOIN
     * prior prod state, COALESCE cascades, FSM transition columns, change
-    * classification (map_new_info_with_udf.py:16-179).
+    * classification (map_new_info_with_udf.py:16-179). The reference's
+    * row order ([[processedOrder]]) is applied by the caller's write
+    * (`TableIO.writeTable(sortBy = …)`), not by a global sort here.
     *
     * @param echo       echo advisory (package_name, cve_id, fixed_version)
     * @param normalized normalized enrichment (normalizedEnrichment schema)
     * @param prod       prior prod state (cveStateMachine schema)
-    */
-  /** @param sorted apply the reference's cosmetic global ORDER BY
-    *   (change-type rank, cve_id). It costs a full range-partition
-    *   shuffle and parquet does not preserve it — disable at scale. */
-  /** @param preRanked `normalized` already carries exactly ONE best row
+    * @param preRanked `normalized` already carries exactly ONE best row
     *   per (cve_id, package) — the caller ran the dedup itself (e.g.
     *   against narrower pre-projection columns whose ordering it can
     *   prove equivalent, the way AdvisoryQueries ranks raw lineitem
     *   rows by their numeric key). Skips [[rankEnrichment]]'s window;
     *   only the enrichment-schema re-alias is applied. The caller owns
     *   the one-row-per-key guarantee — duplicate keys here would fan
-    *   out the left join.
-    * @param mergeKey when set, every input additionally carries this
-    *   column and the caller GUARANTEES its equality is equivalent to
-    *   (cve_id, package) equality (an injective derivation — e.g. the
-    *   numeric order key both strings are built from). The two left
-    *   joins then key on it: narrower shuffles, cheap bigint
-    *   sort/hash comparisons, and an enrichment side that is already
-    *   hash-partitioned by the key (its dedup grouped on it) joins
-    *   with NO further exchange. Output is unchanged — cve_id/package
-    *   always come from the echo side, and under a LEFT join a
-    *   non-matching key yields the same NULL columns either way. */
+    *   out the left join. */
   def mapNewInfo(
       echo: DataFrame,
       normalized: DataFrame,
       prod: DataFrame,
       tiebreak: Seq[Column] = Nil,
-      sorted: Boolean = true,
       preRanked: Boolean = false,
-      mergeKey: Option[String] = None,
   ): DataFrame = {
-    require(mergeKey.isEmpty || preRanked,
-      "mergeKey currently requires preRanked: rankEnrichment's window " +
-        "does not carry the key through its projection")
-    val joinKeys = mergeKey.fold(Seq("cve_id", "package"))(Seq(_))
-    // with a mergeKey, the side tables' (cve_id, package) are redundant
-    // (echo provides the output values) — drop them so the join does not
-    // collide column names and the planner prunes their derivation
-    def sideCols(df: DataFrame): DataFrame =
-      mergeKey.fold(df)(_ => df.drop("cve_id", "package"))
-
-    val prodState = sideCols(prod.select(
-      col("cve_id") +: col("package") +: mergeKey.map(col).toSeq ++: Seq(
+    val joinKeys = Seq("cve_id", "package")
+    val prodState = prod.select(
+      col("cve_id"), col("package"),
       coalesce(col("status"), lit("unknown")).as("prod_status"),
       col("fixed_version").as("prod_fixed_version"),
       col("internal_status").as("prod_internal_status"),
       col("priority").as("prod_priority"),
       col("enrichment_timestamp").as("prod_enrichment_timestamp"),
-      lit(true).as("exists_in_prod_marker")): _*))
+      lit(true).as("exists_in_prod_marker"))
 
-    val newEnrichment = sideCols(
-      (if (preRanked) normalized.select(
-          selectEnrichment ++ mergeKey.map(col).toSeq: _*)
+    val newEnrichment =
+      (if (preRanked) normalized.select(selectEnrichment: _*)
        else rankEnrichment(normalized, tiebreak))
-        .withColumn("has_new_enrichment_marker", lit(true)))
+        .withColumn("has_new_enrichment_marker", lit(true))
 
-    val echoAdvisory = echo.select(
-      col("cve_id") +: col("package_name").as("package") +:
-        mergeKey.map(col).toSeq ++:
-        Seq(col("fixed_version").as("echo_fixed_version")): _*)
+    val echoAdvisory = echo.select(col("cve_id"),
+      col("package_name").as("package"),
+      col("fixed_version").as("echo_fixed_version"))
 
     val combined = echoAdvisory
       .join(newEnrichment, joinKeys, "left")
@@ -154,7 +129,7 @@ object AdvisoryMerge {
       .withColumn("transition_reason",
         TransitionFunctions.transitionExplanation("previous_status", "proposed_status"))
 
-    val classified = withTransitions
+    withTransitions
       .withColumn("change_type",
         when(!col("exists_in_prod"), "new")
           .when(!col("transition_valid"), "blocked")
@@ -166,7 +141,6 @@ object AdvisoryMerge {
       .select("cve_id", "package", "status", "previous_status", "fixed_version",
         "internal_status", "data_source", "priority", "enrichment_timestamp",
         "transition_valid", "transition_reason", "change_type")
-    if (sorted) classified.orderBy(processedOrder: _*) else classified
   }
 
   /** The reference's row order of the processed table: change-type rank
@@ -185,14 +159,14 @@ object AdvisoryMerge {
 
   /** Overwrite-as-upsert: processed rows win, prod-only rows survive via
     * anti join (upsert_data.py:18-86). Not a MERGE — the whole table is
-    * rewritten; change detection lives in the change_type column. */
-  def upsert(processed: DataFrame, prod: DataFrame,
-      sorted: Boolean = true): DataFrame = {
+    * rewritten; change detection lives in the change_type column. The
+    * reference's row order ([[prodOrder]]) is applied by the caller's
+    * write. */
+  def upsert(processed: DataFrame, prod: DataFrame): DataFrame = {
     val cols = processed.columns.map(col).toSeq
     val prodOnly = prod.join(
       processed.select("cve_id", "package"), Seq("cve_id", "package"), "left_anti")
-    val combined = processed.union(prodOnly.select(cols: _*))
-    if (sorted) combined.orderBy(prodOrder: _*) else combined
+    processed.union(prodOnly.select(cols: _*))
   }
 
   /** CVEs needing upstream enrichment: case-insensitive left join of the

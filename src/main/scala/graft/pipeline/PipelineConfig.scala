@@ -2,10 +2,10 @@ package graft.pipeline
 
 /** Pipeline configuration (reference:
   * src/advisory_pipeline/config/config.py:1-60), as immutable case
-  * classes. `outputPartitions` generalizes the reference's hard-coded
-  * `partitions=1`; 0 lets AQE decide (the scale default). Prod is one
-  * whole-table overwrite per run, as in the reference
-  * (state_machine/pipeline.py:77-85), published by directory swap. */
+  * classes. Every pipeline table is written as one file, the
+  * reference's `partitions=1`. Prod is one whole-table overwrite per
+  * run, as in the reference (state_machine/pipeline.py:77-85),
+  * published by directory swap. */
 final case class PipelineConfig(
     runId: String,
     stagingPath: String,
@@ -13,7 +13,6 @@ final case class PipelineConfig(
     cachePath: String,
     cacheTtlHours: Double = 0.05,
     incrementalEnabled: Boolean = true,
-    outputPartitions: Int = 1,
 )
 
 object PipelineConfig {

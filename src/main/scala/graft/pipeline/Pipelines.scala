@@ -44,12 +44,11 @@ object Pipelines {
       overrides: Option[DataFrame] = None,
   ): DataFrame = {
     val echo = graft.ingest.EchoAdvisorySource.ingest(
-      spark, transport, advisoryUrl, config.stagingPath, config.runId,
-      partitions = config.outputPartitions)
+      spark, transport, advisoryUrl, config.stagingPath, config.runId)
     overrides.foreach { df =>
       val path = s"${config.stagingPath}/run_id=${config.runId}/sources/not_applicable_cves"
       TableIO.writeTable(df, path, AdvisorySchemas.notApplicableCves,
-        partitions = config.outputPartitions)
+        partitions = 1)
       TableIO.readTable(spark, path, AdvisorySchemas.notApplicableCves)
         .createOrReplaceGlobalTempView("not_applicable_cves")
     }
@@ -97,12 +96,12 @@ object Pipelines {
             Option(nowIso).getOrElse(() => now.toString))
           val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
           TableIO.writeTable(spark.createDataFrame(fetched.asJava, AdvisorySchemas.rawNvd),
-            rawPath, AdvisorySchemas.rawNvd, partitions = config.outputPartitions)
+            rawPath, AdvisorySchemas.rawNvd, partitions = 1)
           val rawBack = TableIO.readTable(spark, rawPath, AdvisorySchemas.rawNvd)
           val norm = AdvisoryMerge.normalizeNvd(rawBack, priority = 5)
           val normPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/normalized/enrichment_source=nvd"
           TableIO.writeTable(norm, normPath, AdvisorySchemas.normalizedEnrichment,
-            partitions = config.outputPartitions)
+            partitions = 1)
 
           val merged = EnrichmentCache.mergedCacheEntries(
             spark.createDataFrame(needed.asJava, pending.schema), Some(cache), "nvd",
@@ -130,11 +129,11 @@ object Pipelines {
 
     // the reference's row order is applied by the single-file write (a
     // coalesce and a local sort), not by a separate global sort
-    val processed = AdvisoryMerge.mapNewInfo(echo, normalized, prod, sorted = false)
+    val processed = AdvisoryMerge.mapNewInfo(echo, normalized, prod)
     val processedPath =
       s"${config.stagingPath}/run_id=${config.runId}/state_machine/processed"
     TableIO.writeTable(processed, processedPath, AdvisorySchemas.cveStateMachine,
-      partitions = config.outputPartitions, sortBy = AdvisoryMerge.processedOrder)
+      partitions = 1, sortBy = AdvisoryMerge.processedOrder)
     val processedBack =
       TableIO.readTable(spark, processedPath, AdvisorySchemas.cveStateMachine)
     processedBack.createOrReplaceGlobalTempView("processed_cve_state_machine")
@@ -142,10 +141,10 @@ object Pipelines {
     // The upsert reads prod in full into the staged copy, which then
     // replaces prod by directory rename: no second write of the table,
     // and a reader sees the old prod or the new one, never a torn one.
-    val upserted = AdvisoryMerge.upsert(processedBack, prod, sorted = false)
+    val upserted = AdvisoryMerge.upsert(processedBack, prod)
     val upsertTmp = s"${config.stagingPath}/run_id=${config.runId}/state_machine/upserted"
     TableIO.writeTable(upserted, upsertTmp, AdvisorySchemas.cveStateMachine,
-      partitions = config.outputPartitions, sortBy = AdvisoryMerge.prodOrder)
+      partitions = 1, sortBy = AdvisoryMerge.prodOrder)
     TableIO.swapIn(spark, upsertTmp, prodPath)
     TableIO.readTable(spark, prodPath, AdvisorySchemas.cveStateMachine)
   }

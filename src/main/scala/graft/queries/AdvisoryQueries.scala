@@ -110,11 +110,6 @@ object AdvisoryQueries {
     QueryDef.load(s, d, "orders").filter("o_orderkey % 3 = 0")
       .selectExpr(prodCols("date_format(o_orderdate, 'yyyy-MM-dd')"): _*)
 
-  /** The dedup tiebreak q_advisory_merge runs with. */
-  private def mergeTiebreak: Seq[org.apache.spark.sql.Column] =
-    Seq(col("l_linenumber").desc, col("l_returnflag").desc,
-      col("l_partkey").desc, col("l_suppkey").desc)
-
   /** The best-enrichment dedup of q_advisory_merge, run on RAW lineitem
     * rows before any string derivation — measured 2x the ranking-window-
     * on-derived-strings shape (tools/AdvisoryVariants@3a89fdd: 1.63 s -> 0.83 s
@@ -180,33 +175,22 @@ object AdvisoryQueries {
       .select(col("l_orderkey"), col("__top.l_shipdate"),
         col("__top.l_linenumber"), col("__top.l_returnflag"),
         col("__top.l_partkey"), col("__top.l_suppkey"))
-      .selectExpr(normCols("date_format(l_shipdate, 'yyyy-MM-dd')") :+
-        "l_orderkey AS __mk": _*)
+      .selectExpr(normCols("date_format(l_shipdate, 'yyyy-MM-dd')"): _*)
   }
 
   private def mergeDf(s: SparkSession, d: String): DataFrame =
-    // sorted=false: the reference's global ORDER BY is cosmetic (parquet
-    // does not preserve it, the compare sorts rows) and costs a full
+    // no global ORDER BY: the reference's is cosmetic (parquet does not
+    // preserve it, the compare sorts rows) and costs a full
     // range-partition pass.
-    // preRanked without mergeKey: joining on the numeric __mk instead
-    // of the (cve_id, package) strings measured consistently SLOWER at
-    // sf0.1 (tools/AdvisoryMergeCompare@3a89fdd, interleaved + order-rotated:
+    // preRanked, joined on the (cve_id, package) strings: joining on the
+    // numeric order key instead measured SLOWER at sf0.1
+    // (tools/AdvisoryMergeCompare@3a89fdd, interleaved + order-rotated:
     // P min 1.058 s vs PK 1.280 s vs OLD 1.997 s) — AQE broadcast-joins
     // the small sides either way, so the narrower key only adds plan
-    // nodes here. At sf1 the ordering flips (PK 1.754 < P 2.008 <
-    // OLD 2.116): once the sides outgrow the broadcast threshold the
-    // bigint join keys and the reused enrichment partitioning win, so
-    // mergeKey is the documented at-scale configuration.
-    AdvisoryMerge.mapNewInfo(
-      QueryDef.load(s, d, "orders")
-        .selectExpr(echoCols :+ "o_orderkey AS __mk": _*),
-      bestEnrichmentDf(s, d),
-      QueryDef.load(s, d, "orders").filter("o_orderkey % 3 = 0")
-        .selectExpr(prodCols("date_format(o_orderdate, 'yyyy-MM-dd')") :+
-          "o_orderkey AS __mk": _*),
-      tiebreak = mergeTiebreak,
-      sorted = false,
-      preRanked = true)
+    // nodes here. At sf1 the ordering flipped (PK 1.754 < P 2.008 <
+    // OLD 2.116); that key-joined variant is in git at 3a89fdd.
+    AdvisoryMerge.mapNewInfo(echoDf(s, d), bestEnrichmentDf(s, d),
+      prodDf(s, d), preRanked = true)
 
   // ---- oracle CTE text (DuckDB date functions) ----
 
@@ -287,8 +271,7 @@ object AdvisoryQueries {
       // persist the merge: its DAG feeds both the union and the anti
       // join; unpersisted it would execute twice (the pipeline proper
       // breaks this with its staging write instead)
-      (s, d) => AdvisoryMerge.upsert(mergeDf(s, d).persist(), prodDf(s, d),
-        sorted = false),
+      (s, d) => AdvisoryMerge.upsert(mergeDf(s, d).persist(), prodDf(s, d)),
       Some(s"""$mergeOracleCtes,
               |prod_only AS (SELECT p.* FROM prod_full p
               |  LEFT JOIN processed pr ON p.cve_id = pr.cve_id AND p.package = pr.package

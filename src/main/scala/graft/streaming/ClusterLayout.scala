@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   * wide-range file — that is what turns the sort into FILE-level
   * skipping (each run records a narrow slice of the layout space in
   * the manifest) rather than only row-group pushdown inside a single
-  * file. Unset = one file per bucket, the pre-r12 behavior.
+  * file. Unset = one file per bucket.
   */
 object ClusterLayout {
 

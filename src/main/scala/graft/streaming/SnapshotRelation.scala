@@ -166,9 +166,8 @@ object SnapshotRelation {
 
 /** Manifest-backed file index over one committed snapshot version.
   * All listing decisions come from the manifest (file set, bucket
-  * layout + split depths, clustering stats); storage is touched once,
-  * to stat the referenced batch directories in parallel — bounded by
-  * the referenced-directory count, never a table walk. */
+  * layout + split depths, clustering stats, file lengths); planning
+  * never touches storage (bloom sidecars aside). */
 final class SnapshotFileIndex private[streaming] (
     spark: SparkSession, root: Path, snap: SnapshotUpsert.Snapshot)
   extends FileIndex {
@@ -187,60 +186,15 @@ final class SnapshotFileIndex private[streaming] (
   override def inputFiles: Array[String] =
     relsByBucket.map { case (_, rel) => new Path(root, rel).toString }.toArray
 
-  /** File statuses for planning. Current-format manifests record every
-    * referenced file's byte length (`L` lines), so planning touches
-    * storage ZERO times — statuses are synthesized from the manifest
-    * (the mod-time is the version's commit stamp; parquet reads use
-    * only path + length). Files a legacy manifest lists without a
-    * length fall back to one parallel stat pass over their parent
-    * directories (same fan-out rationale as the commit path's staged
-    * listing). Missing files mean retention GC'd a version a reader
-    * still holds — fail loudly, like readVersion would. */
-  private lazy val statusByRel: Map[String, FileStatus] = {
-    val all = relsByBucket.map(_._2)
-    val (have, missing) = all.partition(snap.lens.contains)
-    val synth = have.iterator.map { rel =>
+  /** File statuses for planning, synthesized from the manifest: every
+    * referenced file's byte length is recorded (`L` lines), so planning
+    * touches storage ZERO times (the mod-time is the version's commit
+    * stamp; parquet reads use only path + length). */
+  private lazy val statusByRel: Map[String, FileStatus] =
+    relsByBucket.iterator.map { case (_, rel) =>
       rel -> new FileStatus(snap.lens(rel), false, 1, 128L << 20,
         snap.commitTsMs, new Path(root, rel))
     }.toMap
-    if (missing.isEmpty) synth else synth ++ listRels(missing)
-  }
-
-  private def listRels(rels: Seq[String]): Map[String, FileStatus] = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byParent = rels.groupBy(rel => rel.substring(0, rel.lastIndexOf('/')))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = byParent.toSeq.map { case (parent, rs) =>
-      Future {
-        val wanted = rs.toSet
-        fs.listStatus(new Path(root, parent)).iterator
-          .map(st => s"$parent/${st.getPath.getName}" -> st)
-          .filter { case (rel, _) => wanted(rel) }
-          .toSeq
-      }
-    }
-    // bounded: this path only serves pre-`L`-line legacy manifests, and
-    // an unbounded await here would wedge QUERY PLANNING (not a commit)
-    // on one hung store call — fail the plan loudly instead
-    val got =
-      try Await.result(Future.sequence(futs), Duration(5, "min"))
-        .flatten.toMap
-      catch {
-        case _: java.util.concurrent.TimeoutException => sys.error(
-          s"snapshot relation at $root: listing legacy-manifest files " +
-            s"timed out after 5 minutes (${byParent.size} directories); " +
-            "the store is not responding — retry, or rewrite the table " +
-            "once with a current writer to record file lengths (L lines)")
-      }
-    val absent = rels.filterNot(got.contains)
-    require(absent.isEmpty,
-      s"snapshot relation at $root: version ${snap.version} references " +
-        s"files no longer on storage (retention dropped the version? " +
-        s"first: ${absent.take(3).mkString(", ")})")
-    got
-  }
 
   override lazy val sizeInBytes: Long = statusByRel.valuesIterator.map(_.getLen).sum
 
@@ -276,9 +230,8 @@ final class SnapshotFileIndex private[streaming] (
         bounds.exists { case (c, dt, los, his) =>
           snap.stats.get(rel).flatMap(_.get(c)).exists { case (mn, mx) =>
             los.exists(lo =>
-              SnapshotUpsert.statCompareOpt(dt, mx, lo).exists(_ < 0)) ||
-              his.exists(hi =>
-                SnapshotUpsert.statCompareOpt(dt, mn, hi).exists(_ > 0))
+              SnapshotUpsert.statCompare(dt, mx, lo) < 0) ||
+              his.exists(hi => SnapshotUpsert.statCompare(dt, mn, hi) > 0)
           }
         }
       }
@@ -288,18 +241,9 @@ final class SnapshotFileIndex private[streaming] (
       else afterRange.filterNot { rel =>
         vsCands.exists { case (c, cands) =>
           // recorded set present AND disjoint from the candidates =
-          // provably no matching row in the file; no record = keep.
-          // Timestamp sets recorded by a pre-r12 writer are in the
-          // session-zone ISO form, not canonical micros — comparing
-          // them against micros candidates would FALSELY prune, so a
-          // set holding any non-canonical value is treated as absent
-          snap.valueSets.get(rel).flatMap(_.get(c)).exists { rec =>
-            val canonical =
-              snap.schema(c).dataType !=
-                org.apache.spark.sql.types.TimestampType ||
-                rec.forall(_.toLongOption.isDefined)
-            canonical && rec.intersect(cands).isEmpty
-          }
+          // provably no matching row in the file; no record = keep
+          snap.valueSets.get(rel).flatMap(_.get(c))
+            .exists(_.intersect(cands).isEmpty)
         }
       }
     bloomPrune(dataFilters, afterValues)
@@ -416,7 +360,7 @@ final class SnapshotFileIndex private[streaming] (
     * job) — consistent with the written layout by construction,
     * including split depths, exactly like readKeys routes probes. */
   private def bucketCandidates(filters: Seq[Expression]): Option[Set[Int]] =
-    snap.bucketCols.filter(_.forall(snap.schema.fieldNames.contains))
+    Some(snap.bucketCols).filter(_.forall(snap.schema.fieldNames.contains))
       .flatMap { bc =>
       val perCol = bc.map(c => equalityCandidates(c, filters))
       if (perCol.exists(_.isEmpty)) None

@@ -44,13 +44,18 @@ import scala.collection.immutable.SortedMap
   *     version N rewrote (untouched buckets are carried forward BY
   *     REFERENCE in the manifest, so incremental merges write only the
   *     touched slice); the attempt suffix is unique per commit attempt
-  *   - `_manifests/v{N}.txt` — `#nbuckets=`/`#ts=`/`#schema=` header
-  *     lines (the version's layout, commit wall-clock, and data schema,
-  *     so rebucket and additive schema evolution commit atomically with
-  *     their files) followed by `<bucket>\t<relative file path>` lines
-  *     and a final `#eof` trailer; the create-exclusive WRITE of this
-  *     file IS the commit point, and the trailer makes a torn write
-  *     (writer killed mid-commit) detectable instead of readable
+  *   - `_manifests/v{N}.txt` — required header lines `#format=`
+  *     ([[ManifestFormat]]), `#nbuckets=`, `#ts=` (commit wall-clock),
+  *     `#schema=` (data schema), `#bucketcols=`, `#keys=` and
+  *     `#ordercol=` (layout and merge contract), plus `#prop.<key>=`
+  *     table properties and `#depths=` on split tables — so rebucket,
+  *     splits and additive schema evolution commit atomically with
+  *     their files; then `<bucket>\t<relative file path>` base lines,
+  *     `<bucket>\tD\t<rel>` delta lines, per-file `S`/`V`/`L`/`B` lines
+  *     (every live file has an `L` length line) and a final `#eof`
+  *     trailer. The create-exclusive WRITE of this file IS the commit
+  *     point, and the trailer makes a torn write (writer killed
+  *     mid-commit) detectable instead of readable
   * Do NOT read `targetDir` with a bare `spark.read.parquet` — it would
   * mix every retained version; go through [[readSnapshot]] /
   * [[readVersion]], which read the manifest's file list.
@@ -202,19 +207,21 @@ object SnapshotUpsert {
   /** Target false-positive rate for bloom sidecars (default 0.03). */
   val BloomFppProp = "graft.bloom.fpp"
 
-  /** The manifest format revision THIS engine writes and the newest it
-    * reads. Readers REJECT a manifest whose recorded `#format` exceeds
-    * this with a clear upgrade error instead of tripping over a body
-    * line they cannot parse (the pre-r12 failure mode: a `V`/`L` line
-    * hit an old reader's `'V'.toInt` and threw a bare
-    * NumberFormatException). The rule going forward: any new header
-    * (`#key=…`) is ignorable by old readers (headers parse into a map),
-    * but any new BODY line kind requires a format bump so old readers
-    * fail loudly and explainably. History: 1 = bucket file lines only;
-    * 2 = S/L/V stat lines, #depths/#keys/#ordercol/#prop headers (r11,
-    * unstamped); 3 = `#format` stamp itself, B bloom-sidecar lines,
-    * timezone-pinned timestamp canonicalization (r12). */
-  val ManifestFormat = 3
+  /** The manifest format revision this engine writes, and the ONLY one
+    * it reads (one-version reader gate, as in Delta Lake's protocol
+    * versioning). A manifest of this format carries every required
+    * header (see the object doc), an `L` length line for every live
+    * file, and stats in the [[canonicalValue]] form. Readers refuse any
+    * other manifest — unstamped, older or newer, or missing part of the
+    * contract — with an error naming the table, instead of guessing at
+    * its content; a new header or body line kind bumps the number.
+    * History: 1 = bucket file lines only; 2 = S/L/V stat lines and the
+    * contract headers, unstamped; 3 = the `#format` stamp, B bloom
+    * lines and zone-independent timestamp stats, but its writers
+    * carried older stats and length-less files forward under the
+    * stamp; 4 = the same layout, written only by engines that never
+    * carried them. */
+  val ManifestFormat = 4
 
   /** Serializes manifest creation within this JVM (see object doc:
     * cross-process exclusivity comes from create-exclusive — atomic on
@@ -346,16 +353,18 @@ object SnapshotUpsert {
     * file set in the same atomic commit — a side marker could disagree
     * with the file set after a crash between two writes. Files written
     * before an evolution lack the newer columns; readers apply the
-    * version's recorded schema, so those columns surface as NULL. */
+    * version's recorded schema, so those columns surface as NULL. The
+    * bucket columns and the merge contract (`mergeKeys`, `orderCol`;
+    * "" = arrival order) are recorded by every version. */
   case class Snapshot(version: Long, nBuckets: Int, commitTsMs: Long,
       schema: org.apache.spark.sql.types.StructType,
       files: Map[Int, Seq[String]],
-      bucketCols: Option[Seq[String]] = None,
+      bucketCols: Seq[String],
+      mergeKeys: Seq[String],
+      orderCol: String,
       depths: Map[Int, Int] = Map.empty,
       props: Map[String, String] = Map.empty,
       deltas: Map[Int, Seq[String]] = Map.empty,
-      mergeKeys: Option[Seq[String]] = None,
-      orderCol: Option[String] = None,
       stats: Map[String, Map[String, (String, String)]] = Map.empty,
       lens: Map[String, Long] = Map.empty,
       valueSets: Map[String, Map[String, Set[String]]] = Map.empty,
@@ -467,16 +476,18 @@ object SnapshotUpsert {
     val headers = content.takeWhile(_.startsWith("#"))
       .map { h => val Array(k, rest) = h.stripPrefix("#").split("=", 2); k -> rest }
       .toMap
-    require(headers.contains("nbuckets") && headers.contains("schema"),
-      s"malformed manifest v$v at $root: missing #nbuckets/#schema headers")
-    // `#format` (r12): readers refuse manifests from a NEWER format
-    // revision with an actionable error instead of tripping over a body
-    // line kind they cannot parse; manifests without the stamp predate
-    // it and parse as before
-    headers.get("format").map(_.toInt).filter(_ > ManifestFormat)
-      .foreach(f => sys.error(s"manifest v$v at $root was written in " +
-        s"format $f but this reader supports formats <= $ManifestFormat " +
-        "— upgrade the reader before querying this table"))
+    // the one-version gate: only a manifest stamped with THIS engine's
+    // format and carrying the whole contract is read; anything else is
+    // refused, never guessed at (see ManifestFormat)
+    val found = headers.getOrElse("format", "none")
+    def refuse(what: String): Nothing = sys.error(
+      s"manifest v$v at $root (format $found) $what; this engine reads " +
+        s"only format $ManifestFormat manifests — rewrite the table with " +
+        "this engine")
+    if (found != ManifestFormat.toString) refuse("is in another format")
+    Seq("nbuckets", "ts", "schema", "bucketcols", "keys", "ordercol")
+      .find(h => !headers.contains(h))
+      .foreach(h => refuse(s"lacks the required #$h header"))
     // file lines: `<bucket>\t<rel>` is a BASE file (≤1 row per key per
     // bucket — the CoW invariant), `<bucket>\tD\t<rel>` a DELTA file
     // (r11 merge-on-read: batch-sized row-version layers readers fold
@@ -504,8 +515,8 @@ object SnapshotUpsert {
     // — a file's exact distinct values of a declared low-cardinality
     // column (each value base64 over its canonical string form; the
     // list may be EMPTY: an all-null file, prunable by any non-null
-    // equality). Absent = not recorded (cardinality cap, legacy) =
-    // never pruned.
+    // equality). Absent = not recorded (cardinality cap) = never
+    // pruned.
     val valueSets: Map[String, Map[String, Set[String]]] = bodyLines
       .collect { case l if l.startsWith("V\t") =>
         l.split('\t') match {
@@ -522,7 +533,7 @@ object SnapshotUpsert {
     // `L` lines (r11 file lengths): `L\t<rel>\t<bytes>` — the staged
     // listing's sizes travel in the manifest, so a reader can plan
     // splits (the SQL relation's FileIndex) without ANY storage round
-    // trip; absent on legacy manifests (readers fall back to listing)
+    // trip; every live file has one
     val lens: Map[String, Long] = bodyLines
       .collect { case l if l.startsWith("L\t") =>
         l.split('\t') match {
@@ -560,33 +571,29 @@ object SnapshotUpsert {
       .groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2).toSeq }
     val deltas = fileLines.filter(_._3)
       .groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2).toSeq }
-    // #ts is new in this format revision; fall back to the manifest
-    // file's modification time for tables written before it
-    val ts = headers.get("ts").map(_.toLong)
-      .getOrElse(fs.getFileStatus(path).getModificationTime)
-    // #depths (r11): active split buckets as `id.depth` pairs — absent
-    // on unsplit tables, so the pre-split format parses unchanged
+    (files.valuesIterator.flatten ++ deltas.valuesIterator.flatten)
+      .find(rel => !lens.contains(rel))
+      .foreach(rel => refuse(s"lists $rel without its L length line"))
+    // #depths: active split buckets as `id.depth` pairs, absent on
+    // unsplit tables
     val depths: Map[Int, Int] = headers.get("depths")
       .map(_.split(",").iterator.map { e =>
         val Array(id, d) = e.split("\\.")
         id.toInt -> d.toInt
       }.toMap).getOrElse(Map.empty)
-    // #prop.<key> (r11): user-level table properties — committed
-    // atomically with the version like everything else in the header,
-    // carried forward by every later commit, and
-    // ignored by readers from before this revision
+    // #prop.<key>: user-level table properties — committed atomically
+    // with the version like everything else in the header, and carried
+    // forward by every later commit
     val props: Map[String, String] = headers.collect {
       case (k, v) if k.startsWith("prop.") => k.stripPrefix("prop.") -> v
     }
-    Snapshot(v, headers("nbuckets").toInt, ts,
+    Snapshot(v, headers("nbuckets").toInt, headers("ts").toLong,
       org.apache.spark.sql.types.StructType.fromDDL(headers("schema")), files,
-      headers.get("bucketcols").map(_.split(",", -1).toSeq), depths, props,
-      deltas,
-      // #keys / #ordercol (r11): the merge contract readers need to
-      // FOLD delta layers (group-by columns and precedence); recorded
-      // by every data commit since the revision, absent before it
-      headers.get("keys").map(_.split(",", -1).toSeq),
-      headers.get("ordercol"), stats, lens, valueSets, blooms)
+      headers("bucketcols").split(",", -1).toSeq,
+      // #keys / #ordercol: the merge contract readers need to FOLD delta
+      // layers (group-by columns and precedence)
+      headers("keys").split(",", -1).toSeq, headers("ordercol"),
+      depths, props, deltas, stats, lens, valueSets, blooms)
   }
 
   /** Create-exclusive write of a manifest file — THE commit point of
@@ -606,25 +613,19 @@ object SnapshotUpsert {
     * COMPLETE-OR-ABSENT at the target, so this race cannot arise. */
   private[streaming] def commitManifest(fs: FileSystem, root: Path,
       next: Snapshot, commit: CommitPrimitive = CreateExclusive): Unit = {
-    // the merge contract is part of the COMMIT when deltas exist:
-    // without recorded keys/ordercol no reader could fold the layers
     require(next.deltas.valuesIterator.forall(_.nonEmpty),
       "commitManifest: a bucket must not record an empty delta list")
-    require(next.deltas.isEmpty ||
-      (next.mergeKeys.nonEmpty && next.orderCol.nonEmpty),
-      "commitManifest: delta files need the recorded merge contract " +
-        "(#keys/#ordercol) or no reader can fold them")
-    next.mergeKeys.foreach(ks => require(
-      ks.nonEmpty && ks.forall(c => !c.contains(",") && !c.contains("\n")),
-      s"merge key names must be non-empty with no ',' or newlines: $ks"))
-    next.orderCol.foreach(o => require(!o.contains("\n") && !o.contains(","),
-      s"orderCol must not contain ',' or newlines: '$o'"))
+    require(next.mergeKeys.nonEmpty &&
+      next.mergeKeys.forall(c => !c.contains(",") && !c.contains("\n")),
+      "merge key names must be non-empty with no ',' or newlines: " +
+        next.mergeKeys)
+    require(!next.orderCol.contains("\n") && !next.orderCol.contains(","),
+      s"orderCol must not contain ',' or newlines: '${next.orderCol}'")
     // a prefix-bucketed layout is recorded IN the manifest (like
     // nBuckets): a later merge must restate it or its rows would land
     // in buckets the prefix layout never reads
-    next.bucketCols.foreach(bc => require(
-      bc.forall(c => !c.contains(",") && !c.contains("\n")),
-      s"bucketCols names must not contain ',' or newlines: $bc"))
+    require(next.bucketCols.forall(c => !c.contains(",") && !c.contains("\n")),
+      s"bucketCols names must not contain ',' or newlines: ${next.bucketCols}")
     // prop keys parse as `prop.<key>=<value>` split on the FIRST '='
     // (values may contain '='; keys may not) and the manifest is
     // line-oriented, so neither side may contain a newline
@@ -642,13 +643,13 @@ object SnapshotUpsert {
     val target = manifestPath(root, next.version)
     val body = (Iterator(s"#format=$ManifestFormat",
       s"#nbuckets=${next.nBuckets}", s"#ts=${next.commitTsMs}",
-      s"#schema=${next.schema.toDDL}") ++
-      next.bucketCols.iterator.map(bc => s"#bucketcols=${bc.mkString(",")}") ++
+      s"#schema=${next.schema.toDDL}",
+      s"#bucketcols=${next.bucketCols.mkString(",")}",
       // the merge contract: keys and precedence recorded like the
       // bucket layout, so delta folds and later merges validate against
       // the manifest, not the caller's memory
-      next.mergeKeys.iterator.map(ks => s"#keys=${ks.mkString(",")}") ++
-      next.orderCol.iterator.map(o => s"#ordercol=$o") ++
+      s"#keys=${next.mergeKeys.mkString(",")}",
+      s"#ordercol=${next.orderCol}") ++
       SortedMap.from(next.props).iterator
         .map { case (k, v) => s"#prop.$k=$v" } ++
       // split layout travels WITH the file set (like nBuckets): a split
@@ -828,24 +829,16 @@ object SnapshotUpsert {
     case _ => c.cast("string")
   }
 
-  /** Three-way comparison of two canonical strings of `dt`, or None
-    * when either side is not in the CURRENT canonical form — timestamp
-    * stats recorded by a pre-r12 writer are session-zone ISO strings,
-    * not micros, and those strings CARRY FORWARD in later manifests.
-    * Callers treat None as "cannot prove", i.e. keep the file: legacy
-    * stats degrade to reading, never to a false prune. */
-  private[streaming] def statCompareOpt(
-      dt: org.apache.spark.sql.types.DataType,
-      a: String, b: String): Option[Int] = {
+  /** Three-way comparison of two canonical strings of `dt` (the form
+    * [[canonicalValue]] records and every reader canonicalizes to). */
+  private[streaming] def statCompare(
+      dt: org.apache.spark.sql.types.DataType, a: String, b: String): Int = {
     import org.apache.spark.sql.types._
     dt match {
       case ByteType | ShortType | IntegerType | LongType | TimestampType =>
-        for (x <- a.toLongOption; y <- b.toLongOption)
-          yield java.lang.Long.compare(x, y)
-      case BooleanType =>
-        for (x <- a.toBooleanOption; y <- b.toBooleanOption)
-          yield java.lang.Boolean.compare(x, y)
-      case _ => Some(a.compareTo(b))
+        java.lang.Long.compare(a.toLong, b.toLong)
+      case BooleanType => java.lang.Boolean.compare(a.toBoolean, b.toBoolean)
+      case _ => a.compareTo(b)
     }
   }
 
@@ -1076,8 +1069,7 @@ object SnapshotUpsert {
     if (staged.isEmpty) return (Map.empty, next)
     (staged.files, next.copy(
       stats = next.stats ++ computeStats(spark, dir,
-        (next.clusterCols ++ next.bucketCols.getOrElse(Seq.empty)).distinct,
-        next.schema),
+        (next.clusterCols ++ next.bucketCols).distinct, next.schema),
       lens = next.lens ++ staged.lens,
       valueSets = next.valueSets ++
         computeValueSets(spark, dir, next.valueSetCols, next.schema),
@@ -1114,14 +1106,13 @@ object SnapshotUpsert {
     * id-ordered) never overlap old base files — and degrades to the
     * all-or-nothing fold wherever stats are missing or ranges overlap.
     * A file with no recorded stats for the column is never pruned, so
-    * missing/legacy stats degrade to reading, not to wrong answers. */
+    * missing stats degrade to reading, not to wrong answers. */
   private[streaming] def rangePlan(cur: Snapshot, column: String,
       loS: String, hiS: String): (Seq[String], Seq[Int], Set[String]) = {
     val dt = cur.schema(column).dataType
     def disjoint(rel: String): Boolean = cur.stats.get(rel)
       .flatMap(_.get(column)).exists { case (mn, mx) =>
-        statCompareOpt(dt, mx, loS).exists(_ < 0) ||
-          statCompareOpt(dt, mn, hiS).exists(_ > 0)
+        statCompare(dt, mx, loS) < 0 || statCompare(dt, mn, hiS) > 0
       }
     val allB = (cur.files.keySet ++ cur.deltas.keySet).toSeq.sorted
     val plainKept = allB.filterNot(cur.deltas.contains)
@@ -1150,16 +1141,15 @@ object SnapshotUpsert {
     * a file is never claimed pass-through (conservative). */
   private[streaming] def passThroughBase(snap: Snapshot): Set[String] = {
     if (snap.deltas.isEmpty) return Set.empty
-    val keyCol = snap.bucketCols.orElse(snap.mergeKeys).flatMap(_.headOption)
-      .filter(c => snap.schema.fieldNames.contains(c) &&
+    val keyCol = snap.bucketCols.headOption.filter(c =>
+      snap.schema.fieldNames.contains(c) &&
         statsComparable(snap.schema(c).dataType))
     if (keyCol.isEmpty) return Set.empty
     val kdt = snap.schema(keyCol.get).dataType
     def keyRange(rel: String): Option[(String, String)] =
       snap.stats.get(rel).flatMap(_.get(keyCol.get))
     def keyDisjoint(a: (String, String), b: (String, String)): Boolean =
-      statCompareOpt(kdt, a._2, b._1).exists(_ < 0) ||
-        statCompareOpt(kdt, b._2, a._1).exists(_ < 0)
+      statCompare(kdt, a._2, b._1) < 0 || statCompare(kdt, b._2, a._1) < 0
     snap.deltas.keysIterator.flatMap { b =>
       val layerRanges = snap.deltas(b).map(keyRange)
       snap.files.getOrElse(b, Seq.empty).filter { rel =>
@@ -1447,7 +1437,7 @@ object SnapshotUpsert {
         tombstoneCol, bucketCols, props)
       withPreparedBatch(batch, nBuckets,
         populatedTable = head.exists(_.files.nonEmpty),
-        bucketCols = next.bucketCols.get, depths = next.depths) { withBucket =>
+        bucketCols = next.bucketCols, depths = next.depths) { withBucket =>
         rewriteTouched(root, head, withBucket, next,
           selectWinners(_, _, next.schema.fieldNames.toSeq, keys,
             orderCol, tombstoneCol))
@@ -1510,7 +1500,7 @@ object SnapshotUpsert {
       // ONE action (the staging write), so the batch needs no pinning
       // snapshot — a single evaluation per attempt by construction
       withPreparedBatch(batch, nBuckets, populatedTable = false,
-        bucketCols = next.bucketCols.get, depths = next.depths) { withBucket =>
+        bucketCols = next.bucketCols, depths = next.depths) { withBucket =>
         // in-batch winners ONLY (the existing rows are never read — that
         // is the whole point); tombstone winners are kept and STATED in
         // the layer for the read-time fold
@@ -1546,11 +1536,11 @@ object SnapshotUpsert {
     head.foreach(checkLayout(_, root, nBuckets, keys, orderCol, bucketCols))
     val schema = evolvedSchema(head, org.apache.spark.sql.types.StructType(
       batch.schema.fields.filterNot(f => tombstoneCol.contains(f.name))))
-    val base = head.getOrElse(Snapshot(0L, nBuckets, 0L, schema, Map.empty))
-    base.copy(nBuckets = nBuckets, schema = schema,
-      bucketCols = Some(if (bucketCols.isEmpty) keys else bucketCols),
-      props = base.props ++ props, mergeKeys = Some(keys),
-      orderCol = Some(orderCol))
+    val bc = if (bucketCols.isEmpty) keys else bucketCols
+    val base = head.getOrElse(
+      Snapshot(0L, nBuckets, 0L, schema, Map.empty, bc, keys, orderCol))
+    base.copy(nBuckets = nBuckets, schema = schema, bucketCols = bc,
+      mergeKeys = keys, orderCol = orderCol, props = base.props ++ props)
   }
 
   /** An empty frame of `schema` plus the `kb` bucket column. */
@@ -1592,10 +1582,8 @@ object SnapshotUpsert {
       if (compacted.isEmpty) None
       else {
         val folded = readMergedImage(spark, root, cur, Some(compacted))
-          .withColumn("kb", bucketOfLayout(
-            cur.bucketCols.getOrElse(cur.mergeKeys.getOrElse(sys.error(
-              s"compactDeltas: no recorded bucket columns at $targetDir"))),
-            cur.nBuckets, cur.depths))
+          .withColumn("kb",
+            bucketOfLayout(cur.bucketCols, cur.nBuckets, cur.depths))
           .repartition(compacted.length, col("kb"))
         // a compacted bucket whose every key was tombstoned by its
         // layers stages NO file and correctly vanishes from the manifest
@@ -1682,12 +1670,10 @@ object SnapshotUpsert {
       val cur = head.getOrElse(sys.error(
         s"mergeInto: no committed version at $root — MERGE needs an " +
           "existing target; seed the table with upsertBatchSnapshot"))
-      val bc = cur.bucketCols.getOrElse(keys)
       // layout + frozen-contract validation exactly like a CoW merge;
       // the table's own recorded precedence satisfies the delta check
       // (a MERGE rewrite folds and compacts touched layered buckets)
-      val orderCol = cur.orderCol.getOrElse("")
-      checkLayout(cur, root, cur.nBuckets, keys, orderCol, bc)
+      checkLayout(cur, root, cur.nBuckets, keys, cur.orderCol, cur.bucketCols)
       val dataSchema = evolvedSchema(head, source.schema)
       val effectiveSet =
         if (updateAll)
@@ -1695,11 +1681,10 @@ object SnapshotUpsert {
             .map(c => c -> col(s"s.$c")).toMap
         else updateSet
       withPreparedBatch(source, cur.nBuckets,
-        populatedTable = cur.files.nonEmpty, bucketCols = bc,
+        populatedTable = cur.files.nonEmpty, bucketCols = cur.bucketCols,
         depths = cur.depths) { withBucket =>
         rewriteTouched(root, head, withBucket, cur.copy(schema = dataSchema,
-            bucketCols = Some(bc), props = cur.props ++ props,
-            mergeKeys = Some(keys), orderCol = Some(orderCol)),
+            props = cur.props ++ props, mergeKeys = keys),
           mergeActionRule(dataSchema, keys, effectiveSet, updateCond,
             deleteCond, insert, insertCond))
       }
@@ -1762,13 +1747,9 @@ object SnapshotUpsert {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = currentSnapshot(fs, root).getOrElse(sys.error(
       s"predicate DML: no committed version at $targetDir"))
-    val keys = cur.mergeKeys.getOrElse(sys.error(
-      s"predicate DML: the table at $targetDir predates the recorded " +
-        "merge contract (#keys); one new commit upgrades it, or call " +
-        "mergeInto with explicit keys"))
     val rows = SnapshotRelation.readSql(spark, targetDir).where(cond)
       .localCheckpoint(true)
-    (rows, keys)
+    (rows, cur.mergeKeys)
   }
 
   /** The MERGE action decision as one row rule over (existing rows of
@@ -1858,9 +1839,8 @@ object SnapshotUpsert {
       // nothing is carried: the new layout's manifest is exactly the
       // staged set, and the header flips the layout in the same commit
       val (staged, n) = stageSlice(root, head, rebucketed,
-        Snapshot(0L, newBuckets, 0L, cur.schema, Map.empty,
-          bucketCols = Some(bc), props = cur.props, mergeKeys = Some(keys),
-          orderCol = cur.orderCol))
+        Snapshot(0L, newBuckets, 0L, cur.schema, Map.empty, bc, keys,
+          cur.orderCol, props = cur.props))
       Some(n.copy(files = staged))
     }
   }
@@ -1896,9 +1876,6 @@ object SnapshotUpsert {
         nowMs) { head =>
       val cur = head.getOrElse(
         sys.error(s"splitBucket: no committed version at $targetDir"))
-      val bc = cur.bucketCols.getOrElse(sys.error(
-        s"splitBucket: the manifest at $targetDir predates recorded bucket " +
-          "columns; one fresh merge upgrades it"))
       require(cur.files.contains(bucket) || cur.deltas.contains(bucket),
         s"splitBucket: bucket $bucket holds no files at $targetDir " +
           "(unknown id, or empty — nothing to split)")
@@ -1915,7 +1892,7 @@ object SnapshotUpsert {
       // other rows are untouched and their buckets carried by reference)
       val splitImg = readMergedImage(spark, root, cur, Some(Seq(bucket)))
         .withColumn("kb",
-          bucketOfLayout(bc, cur.nBuckets, newDepths))
+          bucketOfLayout(cur.bucketCols, cur.nBuckets, newDepths))
         .repartition(2, col("kb"))
       val (staged, n) = stageSlice(root, head, splitImg, cur.copy(
         files = cur.files - bucket, deltas = cur.deltas - bucket,
@@ -1925,12 +1902,13 @@ object SnapshotUpsert {
   }
 
   /** One maintenance pass of [[splitBucket]]: split every bucket whose
-    * live bytes (summed from the manifest's files — driver-side stats,
-    * no data read) exceed `maxBucketBytes`. Single pass over the
-    * CURRENT manifest: freshly-created children are not re-examined in
-    * the same call (a scheduled caller re-runs; a single hot KEY that
-    * alone exceeds the budget is key skew a layout cannot fix — salt
-    * the key or raise the budget). Returns the split bucket ids. */
+    * live bytes (summed from the manifest's recorded file lengths — no
+    * data read, no storage call) exceed `maxBucketBytes`. Single pass
+    * over the CURRENT manifest: freshly-created children are not
+    * re-examined in the same call (a scheduled caller re-runs; a single
+    * hot KEY that alone exceeds the budget is key skew a layout cannot
+    * fix — salt the key or raise the budget). Returns the split bucket
+    * ids. */
   def splitOverfull(spark: SparkSession, targetDir: String,
       maxBucketBytes: Long, keepVersions: Int = 2,
       keepAgeMs: Option[Long] = None,
@@ -1940,25 +1918,12 @@ object SnapshotUpsert {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = currentSnapshot(fs, root).getOrElse(
       sys.error(s"splitOverfull: no committed version at $targetDir"))
-    // per-file stats fan out in parallel like stagedFiles' listings: a
-    // production manifest holds thousands of files and each getLen is
-    // an RPC on an object store — serial would put minutes of round
-    // trips into a maintenance pass that reads no data at all
-    val sizes: Map[Int, Long] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val byBucket = (cur.files.keySet ++ cur.deltas.keySet).toSeq.map(b =>
+    // bucket sizes from the manifest's recorded file lengths: a
+    // maintenance pass that reads no data makes no storage call either
+    val sizes: Map[Int, Long] =
+      (cur.files.keySet ++ cur.deltas.keySet).iterator.map(b =>
         b -> (cur.files.getOrElse(b, Seq.empty) ++
-          cur.deltas.getOrElse(b, Seq.empty)))
-      Await.result(Future.traverse(byBucket) { case (b, rels) =>
-        Future {
-          b -> scala.concurrent.blocking {
-            rels.map(rel => fs.getFileStatus(new Path(root, rel)).getLen).sum
-          }
-        }
-      }, Duration.Inf).toMap
-    }
+          cur.deltas.getOrElse(b, Seq.empty)).map(cur.lens).sum).toMap
     val overfull = sizes.iterator
       .filter(_._2 > maxBucketBytes).map(_._1).toSeq.sorted
     overfull.foreach(b => splitBucket(spark, targetDir, b, keepVersions,
@@ -2084,30 +2049,26 @@ object SnapshotUpsert {
     // the recorded one) would bucket the batch into buckets the
     // table's layout never reads — silent duplicate keys
     val effectiveBc = if (bucketCols.isEmpty) keys else bucketCols
-    c.bucketCols match {
-      case Some(rec) => require(effectiveBc == rec,
-        s"upsert: table at $root is bucketed by (${rec.mkString(",")}); " +
-          s"merging bucketed by (${effectiveBc.mkString(",")}) would " +
-          "strand rows in stale buckets (use rebucket to change the layout)")
-      case None => require(effectiveBc == keys,
-        s"upsert: table at $root is bucketed by its keys; merging with " +
-          s"bucketCols=(${effectiveBc.mkString(",")}) would strand rows " +
-          "in stale buckets (use rebucket to change the layout)")
-    }
+    require(effectiveBc == c.bucketCols,
+      s"upsert: table at $root is bucketed by " +
+        s"(${c.bucketCols.mkString(",")}); merging bucketed by " +
+        s"(${effectiveBc.mkString(",")}) would " +
+        "strand rows in stale buckets (use rebucket to change the layout)")
     // while delta layers are PENDING the merge contract is frozen:
     // this commit's keys/orderCol are recorded table-wide, and a
     // different contract would silently change how every untouched
     // bucket's layers fold on the next read
     if (c.deltas.nonEmpty) {
-      c.mergeKeys.foreach(rec => require(keys == rec,
+      require(keys == c.mergeKeys,
         s"upsert: table at $root has pending delta layers recorded " +
-          s"under keys (${rec.mkString(",")}); merging with keys " +
+          s"under keys (${c.mergeKeys.mkString(",")}); merging with keys " +
           s"(${keys.mkString(",")}) would re-fold them under a " +
-          "different contract — compact first"))
-      c.orderCol.foreach(rec => require(orderCol == rec,
+          "different contract — compact first")
+      require(orderCol == c.orderCol,
         s"upsert: table at $root has pending delta layers recorded " +
-          s"under orderCol '$rec'; merging with orderCol '$orderCol' " +
-          "would re-fold them under a different contract — compact first"))
+          s"under orderCol '${c.orderCol}'; merging with orderCol " +
+          s"'$orderCol' would re-fold them under a different contract — " +
+          "compact first")
     }
   }
 
@@ -2173,7 +2134,7 @@ object SnapshotUpsert {
       if (presentTouched.nonEmpty)
         readMergedImage(spark, root, head.get, Some(presentTouched),
             Some(next.schema))
-          .withColumn("kb", bucketOfLayout(next.bucketCols.get,
+          .withColumn("kb", bucketOfLayout(next.bucketCols,
             next.nBuckets, next.depths))
       else emptyWithKb(spark, next.schema)
     // the carry set excludes every TOUCHED bucket, not just the staged
@@ -2456,12 +2417,8 @@ object SnapshotUpsert {
       dropBaseRels: Set[String] = Set.empty): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       BooleanType}
-    val keys = snap.mergeKeys.getOrElse(sys.error(
-      s"read at $root: version ${snap.version} carries delta layers but " +
-        "no recorded #keys merge contract — manifest corrupted?"))
-    val orderCol = snap.orderCol.getOrElse(sys.error(
-      s"read at $root: version ${snap.version} carries delta layers but " +
-        "no recorded #ordercol merge contract — manifest corrupted?"))
+    val keys = snap.mergeKeys
+    val orderCol = snap.orderCol
     // dropBaseRels: base files proved key-disjoint from every layer in
     // their bucket — excluding them cannot change any fold decision (no
     // shared keys with any layer), so the caller either proved their
@@ -2488,21 +2445,10 @@ object SnapshotUpsert {
     // stream through shuffle-free (left_anti against the broadcast),
     // and only the affected keys (base left_semi + the layers — a
     // layer-sized set) enter the fold. Decided from the manifest's
-    // delta file sizes (driver stat fan-out, no data read); above the
+    // recorded delta file lengths (no storage call); above the
     // threshold the full fold is the honest plan — a layer set that
     // big means compaction is overdue anyway.
-    val layerBytes = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Await.result(Future.traverse(deltaRels) { rel => Future {
-        scala.concurrent.blocking {
-          try fs.getFileStatus(new Path(root, rel)).getLen
-          catch { case _: java.io.FileNotFoundException => 0L }
-        }
-      }}, Duration.Inf).sum
-    }
+    val layerBytes = deltaRels.map(snap.lens).sum
     val all =
       if (layerBytes <= FoldBroadcastMaxBytes) {
         val lk = layers.select(keys.map(col): _*).distinct()
@@ -2609,10 +2555,10 @@ object SnapshotUpsert {
       "graft.commitTsMs" -> m.commitTsMs.toString,
       "graft.nFiles" -> m.files.valuesIterator.map(_.size).sum.toString,
       "graft.nDeltaFiles" ->
-        m.deltas.valuesIterator.map(_.size).sum.toString) ++
-      m.bucketCols.map(bc => "graft.bucketCols" -> bc.mkString(",")) ++
-      m.mergeKeys.map(ks => "graft.mergeKeys" -> ks.mkString(",")) ++
-      m.orderCol.map(o => "graft.orderCol" -> o)
+        m.deltas.valuesIterator.map(_.size).sum.toString,
+      "graft.bucketCols" -> m.bucketCols.mkString(","),
+      "graft.mergeKeys" -> m.mergeKeys.mkString(","),
+      "graft.orderCol" -> m.orderCol)
   }
 
   /** Bucket count of the current committed version (None for a fresh
@@ -2644,33 +2590,32 @@ object SnapshotUpsert {
   }
 
   /** The current version's recorded bucket columns (None for a fresh
-    * table or a manifest from before the `#bucketcols` record). A
-    * selective reader uses this to decide whether [[readKeys]]' prefix
-    * contract holds for its probe columns. */
+    * table). A selective reader uses this to decide whether
+    * [[readKeys]]' prefix contract holds for its probe columns. */
   def currentBucketCols(spark: SparkSession, targetDir: String)
       : Option[Seq[String]] = {
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).flatMap(_.bucketCols)
+    currentSnapshot(fs, root).map(_.bucketCols)
   }
 
   /** The table's RECORDED merge contract — (#keys, #ordercol) from the
-    * current manifest. What the SQL MERGE rule validates the statement
-    * against: a MERGE joining on anything but the recorded keys would
-    * break the one-row-per-key bucket invariant. */
+    * current manifest (None for a fresh table). What the SQL MERGE rule
+    * validates the statement against: a MERGE joining on anything but
+    * the recorded keys would break the one-row-per-key bucket
+    * invariant. */
   def currentMergeContract(spark: SparkSession, targetDir: String)
       : Option[(Seq[String], String)] = {
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).flatMap(s =>
-      s.mergeKeys.map(ks => (ks, s.orderCol.getOrElse(""))))
+    currentSnapshot(fs, root).map(s => (s.mergeKeys, s.orderCol))
   }
 
-  /** The current version's table properties (empty for a fresh table or
-    * one written before the `#prop.` header revision). Properties commit
-    * atomically with the version's data — a reader that sees a property
-    * value sees every file of the commit that set it — which is what
-    * makes them usable as transactional cursors (see IncrementalMv). */
+  /** The current version's table properties (empty for a fresh
+    * table). Properties commit atomically with the version's data — a
+    * reader that sees a property value sees every file of the commit
+    * that set it — which is what makes them usable as transactional
+    * cursors (see IncrementalMv). */
   def currentProps(spark: SparkSession, targetDir: String)
       : Map[String, String] = {
     val root = new Path(targetDir)
@@ -2792,21 +2737,15 @@ object SnapshotUpsert {
     val cur = currentSnapshot(fs, root).getOrElse(
       sys.error(s"snapshot upsert: no committed version at $targetDir"))
     require(keys.nonEmpty, "readKeys: need at least one key column")
-    // every current-format commit records its bucket columns, so a
-    // probe NOT anchored on that prefix is refused here (its hash
-    // would read the wrong buckets); columns BEYOND the prefix are
-    // legal — they filter within the pruned read. A manifest from
-    // before the record (no #bucketcols header) cannot validate the
-    // probe — one new commit upgrades it.
-    val hashKeys: Seq[String] = cur.bucketCols match {
-      case Some(rec) =>
-        require(keys.take(rec.size) == rec,
-          s"readKeys: table at $root is bucketed by (${rec.mkString(",")}); " +
-            s"probe keys (${keys.mkString(",")}) must start with that " +
-            "prefix — anything else would read the wrong buckets")
-        rec
-      case None => keys
-    }
+    // every commit records its bucket columns, so a probe NOT
+    // anchored on that prefix is refused here (its hash would read the
+    // wrong buckets); columns BEYOND the prefix are legal — they filter
+    // within the pruned read
+    val hashKeys = cur.bucketCols
+    require(keys.take(hashKeys.size) == hashKeys,
+      s"readKeys: table at $root is bucketed by (${hashKeys.mkString(",")}); " +
+        s"probe keys (${keys.mkString(",")}) must start with that " +
+        "prefix — anything else would read the wrong buckets")
     keys.distinct.foreach { k =>
       require(cur.schema.fieldNames.contains(k), {
         val variant = cur.schema.fieldNames

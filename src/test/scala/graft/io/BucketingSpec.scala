@@ -37,8 +37,7 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val merged = graft.pipeline.AdvisoryMerge.mapNewInfo(
-        spark.table("echo_b"), spark.table("norm_b"), spark.table("prod_b"),
-        sorted = false)
+        spark.table("echo_b"), spark.table("norm_b"), spark.table("prod_b"))
       val plan = merged.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed merge must not shuffle:\n$plan")

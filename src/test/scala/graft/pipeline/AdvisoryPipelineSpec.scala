@@ -223,8 +223,7 @@ class AdvisoryPipelineSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     val b = Files.createTempDirectory("advisory-e2e-plans").toString
-    def cfg(runId: String) =
-      PipelineConfig.fromDefaults(runId, b).copy(outputPartitions = 1)
+    def cfg(runId: String) = PipelineConfig.fromDefaults(runId, b)
     Pipelines.run(spark, cfg("p1"), new StubTransport, nvd,
       "http://stub", overridesDf, now = Instant.parse("2026-02-01T00:00:00Z"))
 

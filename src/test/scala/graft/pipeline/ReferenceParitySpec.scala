@@ -52,7 +52,7 @@ class ReferenceParitySpec extends SparkSpec {
         col("internal_status").as("status"),
         col("priority"), col("enrichment_timestamp"))
 
-    val ours = AdvisoryMerge.mapNewInfo(echo, normalized, prodPrev, sorted = false)
+    val ours = AdvisoryMerge.mapNewInfo(echo, normalized, prodPrev)
 
     val cols = expected.columns.sorted.map(col).toSeq
     val diff = ours.select(cols: _*)

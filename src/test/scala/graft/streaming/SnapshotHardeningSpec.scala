@@ -46,9 +46,11 @@ class SnapshotHardeningSpec extends SparkSpec {
       val t = new Thread(() => {
         start.await()
         try {
+          val rel = s"batches/v2-writer$i/kb=0/part-w$i.parquet"
           SnapshotUpsert.commitManifest(fs, root,
             SnapshotUpsert.Snapshot(2L, 4, 1000L + i, schema,
-              Map(0 -> Seq(s"batches/v2-writer$i/kb=0/part-w$i.parquet"))))
+              Map(0 -> Seq(rel)), Seq("id"), Seq("id"), "v",
+              lens = Map(rel -> 1L)))
           wins.incrementAndGet()
         } catch { case e: RuntimeException => errors.add(e.getMessage) }
       })
@@ -65,7 +67,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     val lines = scala.io.Source.fromFile(f"$dir/_manifests/v${2L}%012d.txt",
       "UTF-8").getLines().toVector
     assert(lines.last == "#eof")
-    val refs = lines.filterNot(_.startsWith("#"))
+    val refs = lines.filterNot(l => l.startsWith("#") || l.startsWith("L\t"))
     assert(refs.size == 1 && refs.head.contains("part-w"), refs.toString)
     assert(SnapshotUpsert.versions(spark, dir) == Seq(1L, 2L))
   }

@@ -292,24 +292,6 @@ class SnapshotRelationSpec extends SparkSpec {
     assert(asSet(rel) == asSet(SnapshotUpsert.readSnapshot(spark, dir)))
   }
 
-  test("a legacy manifest without length lines falls back to listing " +
-      "and serves identically") {
-    val dir = tmp()
-    seed(dir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = SnapshotUpsert.versions(spark, dir).last
-    val mf = new java.io.File(f"$dir/_manifests/v$v%012d.txt")
-    val stripped = scala.io.Source.fromFile(mf, "UTF-8").getLines()
-      .filterNot(_.startsWith("L\t")).mkString("\n")
-    val w = new java.io.FileWriter(mf); w.write(stripped); w.close()
-    val cur = SnapshotUpsert.currentSnapshot(fs, root).get
-    assert(cur.lens.isEmpty)
-    val rel = SnapshotRelation.readSql(spark, dir)
-    assert(asSet(rel) == asSet(SnapshotUpsert.readSnapshot(spark, dir)))
-    assert(index(dir).sizeInBytes > 0)
-  }
-
   test("the standing BM25 postings index is SQL-servable: a term " +
       "equality prunes to that term's bucket and matches the bespoke " +
       "probe row-for-row") {

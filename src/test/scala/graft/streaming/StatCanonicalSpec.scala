@@ -13,11 +13,9 @@ import java.nio.file.Files
   * `spark.sql.session.timeZone` — because a table written under one
   * session zone and read under another would otherwise compare two
   * different renderings of the same instant and FALSELY prune files
-  * (advisor finding, r12). Legacy session-zone ISO strings recorded by
-  * pre-r12 writers carry forward in manifests; the parse-guarded
-  * comparators treat them as incomparable = never prune. Also pins the
-  * r12 layered-bucket fold refinement (predicate- AND key-disjoint
-  * base files drop from the fold) and the manifest `#format` gate. */
+  * (r12). Also pins the r12 layered-bucket fold refinement
+  * (predicate- AND key-disjoint base files drop from the fold) and the
+  * manifest's one-format reader gate. */
 class StatCanonicalSpec extends SparkSpec {
 
   private def tmp(): String =
@@ -72,32 +70,28 @@ class StatCanonicalSpec extends SparkSpec {
     }
   }
 
-  test("statCompareOpt parse-guards legacy ISO timestamp stats to " +
-      "'incomparable', and compares canonical micros numerically") {
-    assert(SnapshotUpsert.statCompareOpt(TimestampType,
-      "2024-01-01 00:00:00", "1704067200000000").isEmpty)
-    assert(SnapshotUpsert.statCompareOpt(TimestampType,
-      "1704067200000000", "1704067200000001").contains(-1))
-    assert(SnapshotUpsert.statCompareOpt(LongType, "10", "9").exists(_ > 0))
-    assert(SnapshotUpsert.statCompareOpt(StringType, "a", "b").exists(_ < 0))
+  test("statCompare compares canonical micros and integrals " +
+      "numerically, strings lexicographically") {
+    assert(SnapshotUpsert.statCompare(TimestampType,
+      "1704067200000000", "1704067200000001") == -1)
+    assert(SnapshotUpsert.statCompare(TimestampType,
+      "999999999999999", "1704067200000000") < 0)
+    assert(SnapshotUpsert.statCompare(LongType, "10", "9") > 0)
+    assert(SnapshotUpsert.statCompare(StringType, "a", "b") < 0)
   }
 
-  test("a legacy ISO-form value set on a timestamp column never " +
-      "prunes; a canonical-form set does") {
+  test("a canonical-form value set on a timestamp column prunes a " +
+      "disjoint file and keeps a matching one") {
     val rel = "batches/v1-x/kb=0/f.parquet"
-    val schema = StructType(Seq(StructField("ts", TimestampType)))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("ts", TimestampType)))
     def snapWith(recorded: Set[String]) = SnapshotUpsert.Snapshot(
-      1L, 4, 0L, schema, Map(0 -> Seq(rel)),
+      1L, 4, 0L, schema, Map(0 -> Seq(rel)), Seq("id"), Seq("id"), "",
       props = Map(SnapshotUpsert.ValueSetColsProp -> "ts"),
       valueSets = Map(rel -> Map("ts" -> recorded)))
     val probeMicros = 1704067200000000L
     val filters = Seq(EqualTo(AttributeReference("ts", TimestampType)(),
       Literal(probeMicros, TimestampType)))
-    // legacy form: would not intersect the micros candidate, but the
-    // guard treats the set as absent -> file KEPT
-    val legacy = new SnapshotFileIndex(spark, new Path(tmp()),
-      snapWith(Set("2024-06-05 10:00:00")))
-    assert(legacy.keptRels(filters) == Seq(rel))
     // canonical form, disjoint value -> pruned
     val canon = new SnapshotFileIndex(spark, new Path(tmp()),
       snapWith(Set("1700000000000000")))
@@ -149,8 +143,8 @@ class StatCanonicalSpec extends SparkSpec {
       s"base must stay when keys overlap: kept $kept2 of $total2")
   }
 
-  test("a manifest stamped with a NEWER #format is refused with an " +
-      "upgrade error, not a parse failure") {
+  test("a manifest not in this engine's format, or missing part of its " +
+      "contract, is refused with an error naming the table and the format") {
     import spark.implicits._
     val dir = tmp()
     SnapshotUpsert.upsertBatchSnapshot(
@@ -158,18 +152,31 @@ class StatCanonicalSpec extends SparkSpec {
       keys = Seq("id"), orderCol = "v", nBuckets = 2)
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v1 = new Path(root, "_manifests/v000000000001.txt")
-    val doctored = SnapshotUpsert.readFully(fs, v1).split("\n")
-      .map(l => if (l.startsWith("#format=")) "#format=99" else l)
-      .mkString("\n")
+    val v1 = SnapshotUpsert.readFully(fs,
+      new Path(root, "_manifests/v000000000001.txt")).split("\n").toSeq
+    val firstL = v1.find(_.startsWith("L\t")).get
+    val fmt = s"#format=${SnapshotUpsert.ManifestFormat}"
+    // (case, doctored v1 lines, the format the refusal must name)
+    val cases: Seq[(String, Seq[String], String)] = Seq(
+      ("no #format stamp", v1.filterNot(_ == fmt), "none"),
+      ("#format=3", v1.map(l => if (l == fmt) "#format=3" else l), "3"),
+      ("#format=99", v1.map(l => if (l == fmt) "#format=99" else l), "99"),
+      ("#keys removed", v1.filterNot(_.startsWith("#keys=")), "4"),
+      ("#ts removed", v1.filterNot(_.startsWith("#ts=")), "4"),
+      ("an L line removed", v1.filterNot(_ == firstL), "4"))
     val v2 = new Path(root, "_manifests/v000000000002.txt")
-    val out = fs.create(v2, false)
-    try out.write(doctored.getBytes("UTF-8")) finally out.close()
-    val e = intercept[RuntimeException] {
-      SnapshotUpsert.readSnapshot(spark, dir).collect()
+    cases.foreach { case (what, lines, found) =>
+      val out = fs.create(v2, true)
+      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+      val e = intercept[RuntimeException] {
+        SnapshotUpsert.readSnapshot(spark, dir).collect()
+      }
+      assert(e.getMessage.contains(s"at $root (format $found)") &&
+        e.getMessage.contains("rewrite the table"), s"$what: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("format 99") &&
-      e.getMessage.contains("upgrade"), e.getMessage)
+    // the untouched v1 still reads once the doctored head is gone
+    assert(fs.delete(v2, false))
+    assert(SnapshotUpsert.readSnapshot(spark, dir).count() == 1)
   }
 
   test("a declared value-set column that is HIGH-cardinality in every " +
