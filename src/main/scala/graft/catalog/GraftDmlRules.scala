@@ -281,12 +281,10 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 case class GraftInsertCommand(dir: String, sourcePlan: LogicalPlan)
   extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val (keys, orderCol) = SnapshotUpsert.currentMergeContract(spark, dir)
-      .getOrElse(sys.error(
-        s"graft catalog INSERT: no committed version at $dir"))
-    val nBuckets = SnapshotUpsert.currentBuckets(spark, dir).get
-    val bucketCols = SnapshotUpsert.currentBucketCols(spark, dir).get
-    val schema = SnapshotUpsert.resolvePin(spark, dir).get._2
+    // one manifest read: keys, layout and schema of the same version
+    val head = SnapshotUpsert.currentSnapshot(spark, dir).getOrElse(sys.error(
+      s"graft catalog INSERT: no committed version at $dir"))
+    val schema = head.schema
     val q = GraftSqlBridge.ofRows(spark, sourcePlan)
     require(q.columns.length == schema.fields.length,
       s"graft catalog INSERT: the query provides ${q.columns.length} " +
@@ -296,8 +294,8 @@ case class GraftInsertCommand(dir: String, sourcePlan: LogicalPlan)
       .select(schema.fields.map(f =>
         org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
           .as(f.name)).toSeq: _*)
-    SnapshotUpsert.upsertBatchSnapshot(aligned, dir, keys, orderCol,
-      nBuckets = nBuckets, bucketCols = bucketCols)
+    SnapshotUpsert.upsertBatchSnapshot(aligned, dir, head.mergeKeys, head.orderCol,
+      nBuckets = head.nBuckets, bucketCols = head.bucketCols)
     Seq.empty
   }
 }

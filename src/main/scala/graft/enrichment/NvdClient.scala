@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentHashMap, Executors}
 import scala.jdk.CollectionConverters._
 
 /** Transport abstraction so enrichment is testable offline and the rate
@@ -42,7 +42,9 @@ final case class NvdConfig(
 ) {
   require(partitions >= 1, s"NVD fetch needs at least one thread, got partitions = $partitions")
 
-  /** 1.5 req/s with a key, 0.15 without — NVD's published limits. */
+  /** 1.5 req/s with a key, 0.15 without: the reference's rates. They set
+    * the limiter's capacity, ceil(30 × rate) = 45 or 5 requests per
+    * rolling 30 s, under NVD's published 50 and 5 per rolling 30 s. */
   def rateLimitPerSec: Double = if (apiKey.isDefined) 1.5 else 0.15
 }
 
@@ -59,6 +61,15 @@ final case class NvdConfig(
 object NvdClient {
 
   private val mapper = new ObjectMapper()
+
+  /** One limiter per (apiUrl, apiKey) for the JVM: NVD counts requests
+    * per key, so back-to-back runs in one driver (a re-drive right after
+    * a crash) share one window instead of each bursting a full one. */
+  private val limiters = new ConcurrentHashMap[(String, Option[String]), RateLimiter]()
+
+  private[enrichment] def limiterFor(cfg: NvdConfig): RateLimiter =
+    limiters.computeIfAbsent((cfg.apiUrl, cfg.apiKey),
+      _ => new RateLimiter(cfg.rateLimitPerSec))
 
   /** Fixed-version extraction from the nested
     * configurations->nodes->cpeMatch structure (nvd_client.py:182-206):
@@ -92,14 +103,16 @@ object NvdClient {
     }
   }
 
-  /** One rate-limited, retried CVE query (nvd_client.py:102-154). */
+  /** One rate-limited, retried CVE query (nvd_client.py:102-154): NVD's
+    * answer as (found, status, fixedVersion), or None when every attempt
+    * failed, which the reference reports as not found. */
   def queryCve(
       cveId: String,
       transport: HttpTransport,
       cfg: NvdConfig,
       limiter: RateLimiter,
       sleep: Long => Unit = Thread.sleep,
-  ): (Boolean, Option[String], Option[String]) = {
+  ): Option[(Boolean, Option[String], Option[String])] = {
     val url = s"${cfg.apiUrl}?cveId=$cveId"
     val headers = cfg.apiKey.map(k => Map("apiKey" -> k)).getOrElse(Map.empty)
     var attempt = 0
@@ -108,7 +121,7 @@ object NvdClient {
       val waitMs =
         try {
           val (code, body) = transport.get(url, headers)
-          if (code == 200) return parseResponse(body)
+          if (code == 200) return Some(parseResponse(body))
           else if (code == 403) cfg.forbiddenWaitMs
           else cfg.retryBackoffMs
         } catch {
@@ -118,26 +131,28 @@ object NvdClient {
       // wait only when another attempt follows
       if (attempt < cfg.maxRetries) sleep(waitMs)
     }
-    (false, None, None)
+    None
   }
 
   /** Fetches `keys` (cve_id, package) on `cfg.partitions` threads that
-    * share one rate limiter, so every request is spaced at
-    * `cfg.rateLimitPerSec`. Returns rows in the rawNvd schema, in key
-    * order. */
+    * share the limiter of `cfg`'s (apiUrl, apiKey). Returns, in key
+    * order, each key's row in the rawNvd schema with whether NVD
+    * answered it: a key whose attempts all failed reads not found in
+    * its row, as in the reference, but is no answer to cache. */
   def enrichFromNvd(
       keys: Seq[(String, String)],
       transport: HttpTransport,
       cfg: NvdConfig,
       nowIso: () => String = defaultNowIso,
-  ): Seq[Row] = {
-    val limiter = new RateLimiter(cfg.rateLimitPerSec)
+  ): Seq[(Row, Boolean)] = {
+    val limiter = limiterFor(cfg)
     val pool = Executors.newFixedThreadPool(cfg.partitions)
     try {
       val fetches = keys.map { case (cveId, pkg) =>
-        pool.submit[Row] { () =>
-          val (found, status, fixed) = queryCve(cveId, transport, cfg, limiter)
-          Row(cveId, pkg, found, fixed.orNull, status.orNull, nowIso())
+        pool.submit[(Row, Boolean)] { () =>
+          val answer = queryCve(cveId, transport, cfg, limiter)
+          val (found, status, fixed) = answer.getOrElse((false, None, None))
+          (Row(cveId, pkg, found, fixed.orNull, status.orNull, nowIso()), answer.isDefined)
         }
       }
       fetches.map(_.get())
@@ -149,22 +164,48 @@ object NvdClient {
       .format(DateTimeFormatter.ISO_OFFSET_DATE_TIME)
 }
 
-/** Minimal blocking token-per-interval limiter (the reference used a
-  * `threading.Lock` + last-request timestamp; same shape). Spacing is
-  * measured on the monotonic `System.nanoTime`, so a wall-clock step
-  * (an NTP correction) neither stalls a fetch nor skips the spacing. */
-final class RateLimiter(permitsPerSec: Double) {
-  private val intervalNs: Long =
-    if (permitsPerSec <= 0) 0 else (1e9 / permitsPerSec).toLong
-  private var lastAt: Option[Long] = None
+/** Blocking rolling-window limiter: at most `capacity`, ceil(30 s ×
+  * `permitsPerSec`), permits in any half-open 30 s window, NVD's
+  * documented window (https://nvd.nist.gov/developers/start-here). That
+  * is the most the reference's one-per-interval spacing admits in such
+  * a window, and the long-run rate is the same, but a batch smaller
+  * than the capacity goes out at once. Permit times are taken on the
+  * monotonic `System.nanoTime`, so a wall-clock step (an NTP
+  * correction) neither stalls a fetch nor widens the window. A rate
+  * <= 0 is unlimited. */
+final class RateLimiter private[enrichment] (
+    permitsPerSec: Double,
+    nanoTime: () => Long,
+    sleep: Long => Unit,
+) {
+  def this(permitsPerSec: Double) =
+    this(permitsPerSec, () => System.nanoTime(), ms => Thread.sleep(ms))
+
+  private[enrichment] val capacity: Int =
+    if (permitsPerSec <= 0) 0 else math.ceil(30 * permitsPerSec).toInt
+  // the last `capacity` permit times, a ring: slot `issued % capacity`
+  // holds the oldest once the ring is full
+  private val times = new Array[Long](capacity)
+  private var issued = 0L
+
   def acquire(): Unit = synchronized {
-    lastAt.foreach { last =>
-      var waitNs = last + intervalNs - System.nanoTime()
-      while (waitNs > 0) {
-        Thread.sleep((waitNs + 999999) / 1000000)
-        waitNs = last + intervalNs - System.nanoTime()
+    if (capacity > 0) {
+      val slot = (issued % capacity).toInt
+      if (issued >= capacity) {
+        // wait until the oldest of the last `capacity` permits leaves the window
+        val freeAt = times(slot) + RateLimiter.WindowNs
+        var waitNs = freeAt - nanoTime()
+        while (waitNs > 0) {
+          sleep((waitNs + 999999) / 1000000)
+          waitNs = freeAt - nanoTime()
+        }
       }
+      times(slot) = nanoTime()
+      issued += 1
     }
-    lastAt = Some(System.nanoTime())
   }
+}
+
+object RateLimiter {
+  private[enrichment] val WindowNs: Long = 30L * 1000000000L
 }

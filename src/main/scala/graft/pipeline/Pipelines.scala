@@ -95,7 +95,8 @@ object Pipelines {
             needed.map(r => (r.getString(0), r.getString(1))), transport, nvdConfig,
             Option(nowIso).getOrElse(() => now.toString))
           val rawPath = s"${config.stagingPath}/run_id=${config.runId}/enrichment/raw/nvd"
-          TableIO.writeTable(spark.createDataFrame(fetched.asJava, AdvisorySchemas.rawNvd),
+          TableIO.writeTable(
+            spark.createDataFrame(fetched.map(_._1).asJava, AdvisorySchemas.rawNvd),
             rawPath, AdvisorySchemas.rawNvd, partitions = 1)
           val rawBack = TableIO.readTable(spark, rawPath, AdvisorySchemas.rawNvd)
           val norm = AdvisoryMerge.normalizeNvd(rawBack, priority = 5)
@@ -103,8 +104,11 @@ object Pipelines {
           TableIO.writeTable(norm, normPath, AdvisorySchemas.normalizedEnrichment,
             partitions = 1)
 
+          // only keys NVD answered are cached: a key whose attempts all
+          // failed is asked again by the next run, not hidden for a TTL
+          val answered = needed.zip(fetched).collect { case (key, (_, true)) => key }
           val merged = EnrichmentCache.mergedCacheEntries(
-            spark.createDataFrame(needed.asJava, pending.schema), Some(cache), "nvd",
+            spark.createDataFrame(answered.asJava, pending.schema), Some(cache), "nvd",
             now = lit(java.sql.Timestamp.from(now)))
           EnrichmentCache.writeCache(spark, merged, config.cachePath)
           TableIO.readTable(spark, normPath, AdvisorySchemas.normalizedEnrichment)

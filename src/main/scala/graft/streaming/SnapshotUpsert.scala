@@ -2561,43 +2561,39 @@ object SnapshotUpsert {
       "graft.orderCol" -> m.orderCol)
   }
 
+  /** The current committed version (None for a fresh table), read
+    * once: a caller that needs several of its fields (layout, merge
+    * contract, schema) gets them all from the same version. */
+  def currentSnapshot(spark: SparkSession, targetDir: String): Option[Snapshot] = {
+    val root = new Path(targetDir)
+    currentSnapshot(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
   /** Bucket count of the current committed version (None for a fresh
     * table) — so maintenance callers need not restate the layout the
     * manifest already records. */
-  def currentBuckets(spark: SparkSession, targetDir: String): Option[Int] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(_.nBuckets)
-  }
+  def currentBuckets(spark: SparkSession, targetDir: String): Option[Int] =
+    currentSnapshot(spark, targetDir).map(_.nBuckets)
 
   /** Total data-file count of the current committed version (None for
     * a fresh table) — one manifest read; what adaptive readers use to
     * decide pruned-vs-full without touching data. */
-  def currentFileCount(spark: SparkSession, targetDir: String): Option[Int] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(_.allRefs.size)
-  }
+  def currentFileCount(spark: SparkSession, targetDir: String): Option[Int] =
+    currentSnapshot(spark, targetDir).map(_.allRefs.size)
 
   /** (version, recorded data schema) of the current committed version
     * (None for a fresh table) — one manifest read, no data access; what
     * the change-feed streaming source pins at start. */
   def currentVersionInfo(spark: SparkSession, targetDir: String)
-      : Option[(Long, org.apache.spark.sql.types.StructType)] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(s => (s.version, s.schema))
-  }
+      : Option[(Long, org.apache.spark.sql.types.StructType)] =
+    currentSnapshot(spark, targetDir).map(s => (s.version, s.schema))
 
   /** The current version's recorded bucket columns (None for a fresh
     * table). A selective reader uses this to decide whether
     * [[readKeys]]' prefix contract holds for its probe columns. */
   def currentBucketCols(spark: SparkSession, targetDir: String)
-      : Option[Seq[String]] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(_.bucketCols)
-  }
+      : Option[Seq[String]] =
+    currentSnapshot(spark, targetDir).map(_.bucketCols)
 
   /** The table's RECORDED merge contract — (#keys, #ordercol) from the
     * current manifest (None for a fresh table). What the SQL MERGE rule
@@ -2605,11 +2601,8 @@ object SnapshotUpsert {
     * the recorded keys would break the one-row-per-key bucket
     * invariant. */
   def currentMergeContract(spark: SparkSession, targetDir: String)
-      : Option[(Seq[String], String)] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(s => (s.mergeKeys, s.orderCol))
-  }
+      : Option[(Seq[String], String)] =
+    currentSnapshot(spark, targetDir).map(s => (s.mergeKeys, s.orderCol))
 
   /** The current version's table properties (empty for a fresh
     * table). Properties commit atomically with the version's data — a
@@ -2617,11 +2610,8 @@ object SnapshotUpsert {
     * that set it — which is what makes them usable as transactional
     * cursors (see IncrementalMv). */
   def currentProps(spark: SparkSession, targetDir: String)
-      : Map[String, String] = {
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentSnapshot(fs, root).map(_.props).getOrElse(Map.empty)
-  }
+      : Map[String, String] =
+    currentSnapshot(spark, targetDir).map(_.props).getOrElse(Map.empty)
 
   /** Commit a METADATA-ONLY version: the current file set, schema and
     * layout carried forward verbatim, with `props` merged over the

@@ -2,13 +2,15 @@ package graft.enrichment
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** `NvdClient.queryCve`'s retry and wait policy under injected faults
   * (scripted transport, recording sleep, no rate limit), the
-  * `RateLimiter`'s spacing on the monotonic clock, and
-  * `enrichFromNvd`'s driver-side fetch pool. */
+  * `RateLimiter`'s rolling window on an injected clock, and
+  * `enrichFromNvd`'s driver-side fetch pool and shared limiters. */
 class NvdClientSpec extends AnyFunSuite {
 
   private val found =
@@ -38,61 +40,120 @@ class NvdClientSpec extends AnyFunSuite {
 
   test("200 with a found CVE returns its status and fixed version") {
     val t = new Scripted(Some(200 -> found))
-    assert(query(t) == ((true, Some("Analyzed"), Some("1.2.3")), Nil))
+    assert(query(t) == ((Some((true, Some("Analyzed"), Some("1.2.3"))), Nil)))
     assert(t.urls == Seq("http://nvd?cveId=CVE-2024-1"))
   }
 
   test("200 with empty vulnerabilities is not found") {
     val t = new Scripted(Some(200 -> """{"vulnerabilities": []}"""))
-    assert(query(t) == ((false, None, None), Nil))
+    assert(query(t) == ((Some((false, None, None)), Nil)))
     assert(t.urls.size == 1)
   }
 
   test("503 then 200 waits one retry backoff") {
     val t = new Scripted(Some(503 -> ""), Some(200 -> found))
-    assert(query(t) == ((true, Some("Analyzed"), Some("1.2.3")), Seq(5000L)))
+    assert(query(t) == ((Some((true, Some("Analyzed"), Some("1.2.3"))), Seq(5000L))))
     assert(t.urls.size == 2)
   }
 
   test("403 then 200 waits the forbidden wait") {
     val t = new Scripted(Some(403 -> ""), Some(200 -> found))
-    assert(query(t) == ((true, Some("Analyzed"), Some("1.2.3")), Seq(30000L)))
+    assert(query(t) == ((Some((true, Some("Analyzed"), Some("1.2.3"))), Seq(30000L))))
     assert(t.urls.size == 2)
   }
 
   test("a throwing transport then 200 waits one retry backoff") {
     val t = new Scripted(None, Some(200 -> found))
-    assert(query(t) == ((true, Some("Analyzed"), Some("1.2.3")), Seq(5000L)))
+    assert(query(t) == ((Some((true, Some("Analyzed"), Some("1.2.3"))), Seq(5000L))))
     assert(t.urls.size == 2)
   }
 
   test("always 500 gives up after maxRetries attempts, not found") {
     val t = new Scripted(Some(500 -> ""))
-    assert(query(t) == ((false, None, None), Seq(5000L, 5000L)))
+    assert(query(t) == ((None, Seq(5000L, 5000L)))) // no answer: the row reads not found
     assert(t.urls.size == cfg.maxRetries)
   }
 
   test("always 403 waits between attempts only, not found") {
     val t = new Scripted(Some(403 -> ""))
-    assert(query(t) == ((false, None, None), Seq(30000L, 30000L)))
+    assert(query(t) == ((None, Seq(30000L, 30000L)))) // no answer: the row reads not found
     assert(t.urls.size == 3)
   }
 
   test("an always-throwing transport waits between attempts only, not found") {
     val t = new Scripted(None)
-    assert(query(t) == ((false, None, None), Seq(5000L, 5000L)))
+    assert(query(t) == ((None, Seq(5000L, 5000L)))) // no answer: the row reads not found
     assert(t.urls.size == 3)
   }
 
-  test("rate limiter: the first acquire is immediate, later ones are spaced") {
-    val limiter = new RateLimiter(20) // one permit per 50 ms
-    val t0 = System.nanoTime()
-    limiter.acquire()
-    val first = System.nanoTime()
-    assert(first - t0 < 40000000L, s"first acquire waited ${(first - t0) / 1e6} ms")
-    val returns = first +: (1 to 4).map { _ => limiter.acquire(); System.nanoTime() }
-    returns.sliding(2).foreach { case Seq(a, b) =>
-      assert(b - a >= 50000000L, s"acquires ${(b - a) / 1e6} ms apart")
+  /** A limiter on a fake clock (ns) whose sleep advances the clock;
+    * records every sleep (ms). */
+  private class FakeClock(start: Long = 5000000000L) {
+    var now: Long = start
+    val slept = mutable.ArrayBuffer.empty[Long]
+    def limiter(rate: Double) =
+      new RateLimiter(rate, () => now, ms => { slept += ms; now += ms * 1000000L })
+  }
+
+  private val sec = 1000000000L
+
+  test("rate limiter: the first capacity acquires return without sleeping") {
+    val c = new FakeClock
+    val l = c.limiter(1.5)
+    assert(l.capacity == 45)
+    assert(c.limiter(0.15).capacity == 5)
+    (1 to 45).foreach(_ => l.acquire())
+    assert(c.slept.isEmpty && c.now == 5 * sec)
+  }
+
+  test("rate limiter: a full window waits for its oldest permit to leave") {
+    val c = new FakeClock
+    val l = c.limiter(0.15) // 5 permits per 30 s
+    val t0 = c.now
+    l.acquire()
+    c.now += 10 * sec
+    (1 to 4).foreach(_ => l.acquire())
+    assert(c.slept.isEmpty)
+    l.acquire() // the t0 permit leaves the window at t0 + 30 s
+    assert(c.now == t0 + 30 * sec && c.slept.sum == 20000L)
+    l.acquire() // the next oldest was taken at t0 + 10 s
+    assert(c.now == t0 + 40 * sec && c.slept.sum == 30000L)
+  }
+
+  test("rate limiter: no 30 s window holds more than ceil(30 x rate) permits") {
+    for ((rate, cap) <- Seq(1.5 -> 45, 0.15 -> 5)) {
+      val c = new FakeClock
+      val l = c.limiter(rate)
+      val rnd = new scala.util.Random(15)
+      val returns = (1 to 2000).map { _ =>
+        // bursts and lulls: mostly back to back, sometimes a long gap
+        c.now += (if (rnd.nextInt(10) == 0) rnd.nextLong(60 * sec) else rnd.nextLong(sec / 4))
+        val arrived = c.now
+        l.acquire()
+        (arrived, c.now)
+      }
+      val at = returns.map(_._2)
+      // any cap + 1 consecutive permits span at least the window, so a
+      // half-open 30 s window holds at most cap of them
+      at.indices.drop(cap).foreach { i =>
+        assert(at(i) - at(i - cap) >= RateLimiter.WindowNs, s"rate $rate, permit $i")
+      }
+      // and the limiter waits no longer than that bound needs (sleeps
+      // round up to the millisecond)
+      returns.indices.foreach { i =>
+        val due = if (i < cap) returns(i)._1 else math.max(returns(i)._1, at(i - cap) + RateLimiter.WindowNs)
+        assert(at(i) >= due && at(i) - due < 1000000L, s"rate $rate, permit $i")
+      }
+      assert(c.slept.nonEmpty, s"rate $rate never filled its window")
+    }
+  }
+
+  test("rate limiter: a rate <= 0 never sleeps") {
+    for (rate <- Seq(0.0, -1.0)) {
+      val c = new FakeClock
+      val l = c.limiter(rate)
+      (1 to 1000).foreach(_ => l.acquire())
+      assert(c.slept.isEmpty && c.now == 5 * sec)
     }
   }
 
@@ -102,21 +163,56 @@ class NvdClientSpec extends AnyFunSuite {
     val slow = new HttpTransport {
       def get(url: String, headers: Map[String, String]): (Int, String) = {
         maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
-        try { Thread.sleep(1000); (200, found) }
+        try { Thread.sleep(500); (200, found) }
         finally inFlight.decrementAndGet()
       }
     }
-    val pool = cfg.copy(apiKey = Some("key"), partitions = 3) // one permit per 0.667 s
+    val pool = cfg.copy(apiKey = Some("key"), partitions = 3) // 45 permits per 30 s
     val keys = Seq("CVE-2024-1" -> "a", "CVE-2024-2" -> "b", "CVE-2024-3" -> "c")
     val t0 = System.nanoTime()
-    val rows = NvdClient.enrichFromNvd(keys, slow, pool, () => "now")
+    val fetched = NvdClient.enrichFromNvd(keys, slow, pool, () => "now")
     val took = System.nanoTime() - t0
+    val rows = fetched.map(_._1)
+    assert(fetched.forall(_._2))
     assert(rows.map(r => (r.getString(0), r.getString(1))) == keys)
     assert(rows.forall(r => r.getBoolean(2) && r.getString(3) == "1.2.3" &&
       r.getString(4) == "Analyzed" && r.getString(5) == "now"))
-    val intervalNs = (1e9 / pool.rateLimitPerSec).toLong
-    assert(took >= 2 * intervalNs, s"fetch took ${took / 1e6} ms")
-    assert(maxInFlight.get >= 2 && maxInFlight.get <= 3, s"${maxInFlight.get} calls in flight")
+    // all three calls in flight at once: under two of the 0.667 s
+    // intervals the reference's spacing put between requests
+    val oldIntervalNs = (1e9 / pool.rateLimitPerSec).toLong
+    assert(took < 2 * oldIntervalNs, s"fetch took ${took / 1e6} ms")
+    assert(maxInFlight.get == 3, s"${maxInFlight.get} calls in flight")
+  }
+
+  test("enrichFromNvd: one limiter per (apiUrl, apiKey), not per call") {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val counting = new HttpTransport {
+      def get(url: String, headers: Map[String, String]): (Int, String) = {
+        seen.add(url.takeWhile(_ != '?') + headers.getOrElse("apiKey", ""))
+        (200, found)
+      }
+    }
+    def sent(cfg: NvdConfig) =
+      seen.asScala.count(_ == cfg.apiUrl + cfg.apiKey.getOrElse(""))
+    val noKey = cfg.copy(apiUrl = s"http://nvd-${System.nanoTime()}") // 5 per 30 s
+    val five = (1 to 5).map(i => s"CVE-2024-$i" -> "a")
+    val t0 = System.nanoTime()
+    NvdClient.enrichFromNvd(five, counting, noKey) // fills its window
+    // another key or another URL has a window of its own
+    val others = Seq(noKey.copy(apiKey = Some("k")), noKey.copy(apiUrl = noKey.apiUrl + "/b"))
+    others.foreach(NvdClient.enrichFromNvd(five, counting, _))
+    assert(System.nanoTime() - t0 < 10 * sec)
+    assert((noKey +: others).map(sent) == Seq(5, 5, 5))
+    // a later call with the same pair finds the window full and waits
+    val blocked = new Thread(() =>
+      try NvdClient.enrichFromNvd(Seq("CVE-2024-6" -> "a"), counting, noKey.copy(partitions = 1))
+      catch { case _: InterruptedException => () })
+    blocked.start()
+    Thread.sleep(500)
+    assert(sent(noKey) == 5 && blocked.isAlive)
+    blocked.interrupt()
+    blocked.join(10000)
+    assert(!blocked.isAlive && sent(noKey) == 5)
   }
 
   test("enrichFromNvd needs at least one fetch thread") {

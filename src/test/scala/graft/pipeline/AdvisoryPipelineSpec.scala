@@ -79,8 +79,8 @@ class AdvisoryPipelineSpec extends SparkSpec {
 
   lazy val base: String = Files.createTempDirectory("advisory-e2e").toString
 
-  // with an API key the shared limiter spaces requests 0.667 s apart
-  // (6.67 s without one); the stub ignores headers
+  // with an API key the shared limiter admits 45 requests per rolling
+  // 30 s (5 without one); the stub ignores headers
   private val nvd = NvdConfig(apiKey = Some("stub"), partitions = 2)
 
   def overridesDf = {
@@ -175,6 +175,44 @@ class AdvisoryPipelineSpec extends SparkSpec {
     val at = Instant.parse("2026-02-01T01:00:00Z")
     assert(rows == Set(("CVE-2024-3", "openssl", "nvd", at),
       ("CVE-2024-4", "openssl", "nvd", at)))
+  }
+
+  test("a key whose NVD attempts all fail is not cached, and the next run " +
+      "asks for it again") {
+    val b = Files.createTempDirectory("advisory-e2e-outage").toString
+    val asked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    class OutageTransport(down: Set[String]) extends HttpTransport {
+      def get(url: String, headers: Map[String, String]): (Int, String) =
+        if (url.contains("data.json")) (200, advisoryJson)
+        else {
+          val cve = url.split("cveId=").last
+          asked.add(cve)
+          if (down(cve)) (500, "")
+          else (200, nvdResponse("Awaiting Analysis", None))
+        }
+    }
+    val fast = nvd.copy(retryBackoffMs = 1)
+    def runAt(runId: String, at: String, down: Set[String]) =
+      Pipelines.run(spark, PipelineConfig.fromDefaults(runId, b),
+        new OutageTransport(down), fast, "http://stub", overridesDf,
+        now = Instant.parse(at))
+    def cached() = spark.read.parquet(s"$b/output/enrichment_cache").collect()
+      .map(r => r.getAs[String]("cve_id")).toSet
+
+    runAt("o1", "2026-02-01T00:00:00Z", down = Set("CVE-2024-4"))
+    assert(asked.asScala.toSeq.sorted ==
+      Seq("CVE-2024-3", "CVE-2024-4", "CVE-2024-4", "CVE-2024-4"))
+    assert(cached() == Set("CVE-2024-3"))
+    // the failed key's raw row keeps the reference's not-found values
+    val raw = spark.read.parquet(s"$b/output/staging/run_id=o1/enrichment/raw/nvd")
+      .collect().map(r => r.getAs[String]("cve_id") -> r.getAs[Boolean]("nvd_found")).toMap
+    assert(raw == Map("CVE-2024-3" -> true, "CVE-2024-4" -> false))
+
+    // a minute later, inside the TTL: only the failed key is asked again
+    asked.clear()
+    runAt("o2", "2026-02-01T00:01:00Z", down = Set.empty)
+    assert(asked.asScala.toSeq == Seq("CVE-2024-4"))
+    assert(cached() == Set("CVE-2024-3", "CVE-2024-4"))
   }
 
   test("re-driving a run_id in overwrite mode swaps in the same prod and " +
