@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.Executors
 import scala.jdk.CollectionConverters._
 
 /** Transport abstraction so enrichment is testable offline and the rate
@@ -61,15 +61,6 @@ final case class NvdConfig(
 object NvdClient {
 
   private val mapper = new ObjectMapper()
-
-  /** One limiter per (apiUrl, apiKey) for the JVM: NVD counts requests
-    * per key, so back-to-back runs in one driver (a re-drive right after
-    * a crash) share one window instead of each bursting a full one. */
-  private val limiters = new ConcurrentHashMap[(String, Option[String]), RateLimiter]()
-
-  private[enrichment] def limiterFor(cfg: NvdConfig): RateLimiter =
-    limiters.computeIfAbsent((cfg.apiUrl, cfg.apiKey),
-      _ => new RateLimiter(cfg.rateLimitPerSec))
 
   /** Fixed-version extraction from the nested
     * configurations->nodes->cpeMatch structure (nvd_client.py:182-206):
@@ -135,17 +126,17 @@ object NvdClient {
   }
 
   /** Fetches `keys` (cve_id, package) on `cfg.partitions` threads that
-    * share the limiter of `cfg`'s (apiUrl, apiKey). Returns, in key
-    * order, each key's row in the rawNvd schema with whether NVD
-    * answered it: a key whose attempts all failed reads not found in
-    * its row, as in the reference, but is no answer to cache. */
+    * share one rate limiter. Returns, in key order, each key's row in
+    * the rawNvd schema with whether NVD answered it: a key whose
+    * attempts all failed reads not found in its row, as in the
+    * reference, but is no answer to cache. */
   def enrichFromNvd(
       keys: Seq[(String, String)],
       transport: HttpTransport,
       cfg: NvdConfig,
       nowIso: () => String = defaultNowIso,
   ): Seq[(Row, Boolean)] = {
-    val limiter = limiterFor(cfg)
+    val limiter = new RateLimiter(cfg.rateLimitPerSec)
     val pool = Executors.newFixedThreadPool(cfg.partitions)
     try {
       val fetches = keys.map { case (cveId, pkg) =>

@@ -2,15 +2,13 @@ package graft.enrichment
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** `NvdClient.queryCve`'s retry and wait policy under injected faults
   * (scripted transport, recording sleep, no rate limit), the
   * `RateLimiter`'s rolling window on an injected clock, and
-  * `enrichFromNvd`'s driver-side fetch pool and shared limiters. */
+  * `enrichFromNvd`'s driver-side fetch pool and its shared limiter. */
 class NvdClientSpec extends AnyFunSuite {
 
   private val found =
@@ -182,37 +180,6 @@ class NvdClientSpec extends AnyFunSuite {
     val oldIntervalNs = (1e9 / pool.rateLimitPerSec).toLong
     assert(took < 2 * oldIntervalNs, s"fetch took ${took / 1e6} ms")
     assert(maxInFlight.get == 3, s"${maxInFlight.get} calls in flight")
-  }
-
-  test("enrichFromNvd: one limiter per (apiUrl, apiKey), not per call") {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val counting = new HttpTransport {
-      def get(url: String, headers: Map[String, String]): (Int, String) = {
-        seen.add(url.takeWhile(_ != '?') + headers.getOrElse("apiKey", ""))
-        (200, found)
-      }
-    }
-    def sent(cfg: NvdConfig) =
-      seen.asScala.count(_ == cfg.apiUrl + cfg.apiKey.getOrElse(""))
-    val noKey = cfg.copy(apiUrl = s"http://nvd-${System.nanoTime()}") // 5 per 30 s
-    val five = (1 to 5).map(i => s"CVE-2024-$i" -> "a")
-    val t0 = System.nanoTime()
-    NvdClient.enrichFromNvd(five, counting, noKey) // fills its window
-    // another key or another URL has a window of its own
-    val others = Seq(noKey.copy(apiKey = Some("k")), noKey.copy(apiUrl = noKey.apiUrl + "/b"))
-    others.foreach(NvdClient.enrichFromNvd(five, counting, _))
-    assert(System.nanoTime() - t0 < 10 * sec)
-    assert((noKey +: others).map(sent) == Seq(5, 5, 5))
-    // a later call with the same pair finds the window full and waits
-    val blocked = new Thread(() =>
-      try NvdClient.enrichFromNvd(Seq("CVE-2024-6" -> "a"), counting, noKey.copy(partitions = 1))
-      catch { case _: InterruptedException => () })
-    blocked.start()
-    Thread.sleep(500)
-    assert(sent(noKey) == 5 && blocked.isAlive)
-    blocked.interrupt()
-    blocked.join(10000)
-    assert(!blocked.isAlive && sent(noKey) == 5)
   }
 
   test("enrichFromNvd needs at least one fetch thread") {
