@@ -311,11 +311,10 @@ object TableIO {
   }
 
   /** Small-file compaction: rewrite a parquet directory into
-    * ~`targetFileBytes` files. Streaming sinks and incremental ingests
-    * accrete small files; at 100 TB each scan then pays per-file open
-    * + footer-read + scheduling overhead (and the NameNode/listing
-    * pays with it), so periodic compaction is table hygiene, not an
-    * optimization. Sizing uses the CURRENT on-disk bytes (so the
+    * ~`targetFileBytes` files. Incremental ingests accrete small
+    * files; at 100 TB each scan then pays per-file open + footer-read
+    * + scheduling overhead (and the NameNode/listing pays with it), so
+    * periodic compaction is table hygiene, not an optimization. Sizing uses the CURRENT on-disk bytes (so the
     * output matches the actual compression ratio), the rewrite goes to
     * a temp dir first and swaps in via [[swapIn]]. Returns the output
     * file count. */
@@ -366,16 +365,4 @@ object TableIO {
     }
     if (hadOld) fs.delete(bak, true)
   }
-
-  /** Execute SQL then write — the state-machine stage's primary path
-    * (spark_utils.py:46-47). */
-  def writeSql(
-      spark: SparkSession,
-      sql: String,
-      path: String,
-      schema: StructType,
-      mode: SaveMode = SaveMode.Overwrite,
-      partitionKeys: Seq[String] = Seq.empty,
-      partitions: Int = 0,
-  ): Unit = writeTable(spark.sql(sql), path, schema, mode, partitionKeys, partitions)
 }

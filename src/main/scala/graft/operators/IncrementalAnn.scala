@@ -581,21 +581,6 @@ object IncrementalAnn {
       (seedCells ++ near).distinct, idCol, vecCol, keepVersions)
   }
 
-  /** Maintain the standing index from a STREAM of embeddings: each
-    * micro-batch assigns against the FIXED `centroids` and commits
-    * (one [[ingest]] per batch). Replayed micro-batches converge
-    * (keyed upsert); the append-or-identical contract applies per
-    * VECTOR across the stream's lifetime — updates flow through
-    * [[retire]]. */
-  def sink(vectors: DataFrame, indexDir: String, checkpoint: String,
-      centroids: DataFrame, idCol: String, vecCol: String,
-      nBuckets: Int = 64, keepVersions: Int = 2,
-      drainOnce: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.SnapshotUpsert.startForeachBatch(vectors, checkpoint,
-      "append", drainOnce)(b =>
-      ingest(b, indexDir, centroids, idCol, vecCol, nBuckets, keepVersions))
-
   /** Tombstone retired vectors out of the index. `ids` carries one row
     * per retired id in column `idCol`. The index is keyed (cell, id)
     * and `ids` carries no cells, so the retire SCANS the index once to

@@ -95,25 +95,6 @@ object IncrementalDedup {
     cands
   }
 
-  /** Maintain the standing index from a STREAM of docs: each
-    * micro-batch commits its signatures (one [[ingest]] per batch; the
-    * returned candidates plan is not consumed, so the candidate join
-    * never executes — this sink is INDEX MAINTENANCE only; pair it
-    * with [[graft.streaming.EventStreams]]'s stateful near-dup
-    * operators when the stream itself needs per-batch matches).
-    * Replayed micro-batches converge (keyed upsert). */
-  def sink(docs: DataFrame, indexDir: String, checkpoint: String,
-      textCol: String, idCol: String, k: Int = 8, bands: Int = 4,
-      n: Int = 3, nBuckets: Int = 64, keepVersions: Int = 2,
-      drainOnce: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.SnapshotUpsert.startForeachBatch(docs, checkpoint,
-      "append", drainOnce) { b =>
-      ingest(b, indexDir, textCol, idCol, k, bands, n, nBuckets,
-        keepVersions)
-      ()
-    }
-
   /** Layout maintenance: split overfull signature buckets in place
     * (see [[IncrementalText.maintain]] — same contract). */
   def maintain(spark: SparkSession, indexDir: String,

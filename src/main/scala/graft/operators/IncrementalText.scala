@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   * guaranteed corpus-consistent again once the interrupted call is
   * REPLAYED to completion (both merges are idempotent, so the replay
   * converges) — the same replay-before-trusting rule as any
-  * half-applied streaming batch.
+  * half-applied batch.
   */
 object IncrementalText {
 
@@ -147,23 +147,6 @@ object IncrementalText {
     val stats = Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
     TextAnalysis.bm25Rank(postings, stats, qterms, k, k1, b)
   }
-
-  /** Maintain the standing index from a STREAM of docs: each
-    * micro-batch runs one [[ingest]] (two atomic commits). A replayed
-    * micro-batch converges (keyed upsert), so the index is
-    * exactly-once-equivalent under the checkpointed foreachBatch
-    * contract; the two-commit crash window is the object doc's
-    * replay-before-trusting rule, and the replay is automatic here —
-    * the restarted query re-runs the unfinished batch. The
-    * append-or-identical contract applies per DOC across the stream's
-    * lifetime: updates must flow through [[retire]]. */
-  def sink(docs: DataFrame, indexDir: String, checkpoint: String,
-      textCol: String, idCol: String, nBuckets: Int = 64,
-      keepVersions: Int = 2, drainOnce: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.SnapshotUpsert.startForeachBatch(docs, checkpoint,
-      "append", drainOnce)(b =>
-      ingest(b, indexDir, textCol, idCol, nBuckets, keepVersions))
 
   /** Tombstone retired docs out of the index. `docs` carries the
     * retired docs WITH their text (the tombstoned (term, doc_id) keys

@@ -11,15 +11,8 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Whitespace tokenization. The testdata is single-space separated;
-    * for real corpora use [[tokensRegex]]. */
+    * for real corpora use [[bpeTokens]]. */
   def tokens(text: Column): Column = split(text, " ")
-
-  /** BPE-ish pre-tokenization: words, numbers, or single non-space
-    * symbols (a public-knowledge approximation of GPT-style regex
-    * pre-tokenizers). */
-  def tokensRegex(text: Column): Column =
-    call_function("regexp_extract_all", text,
-      lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), lit(0))
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -446,13 +439,11 @@ object TextAnalysis {
     * it to 1%). What does shuffle: per-partition term counts for df
     * (map-side combined), and the per-(query, doc) score sum over
     * postings that matched a query term. The query term list and the
-    * single-row corpus stats broadcast. (The [[bm25Route]] kernel —
-    * score every (doc, query) pair scan-locally — looks tempting
+    * single-row corpus stats broadcast. (Scoring every (doc, query)
+    * pair scan-locally against a broadcast query table looks tempting
     * here, but it pays O(query terms x words) per doc PER QUERY:
     * measured 17x slower than the postings join on the doc-as-query
-    * hybrid workload, whose 8 queries carry ~80 terms each. Route is
-    * the SHORT-standing-query shape; postings is the retrieval
-    * shape.) */
+    * hybrid workload, whose 8 queries carry ~80 terms each.) */
   def bm25TopK(docs: org.apache.spark.sql.DataFrame,
       queries: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, qIdCol: String, qTextCol: String, k: Int = 10,
@@ -604,29 +595,6 @@ object TextAnalysis {
         (round(col("s_micro") / 1e6, 6) + lit(0.0)).as("bm25"), col("rank"))
   }
 
-  /** The shared scoring kernel of [[bm25TopK]] and [[bm25Route]]: one
-    * row per (doc, standing query) with the exact integer micro-unit
-    * BM25 sum, computed entirely scan-locally against the broadcast
-    * [[bm25QueryTable]] (tf = a filter-count inside the materialized
-    * words array, per term of the query). Stateless — streams. */
-  private def bm25ScoreMicro(docs: org.apache.spark.sql.DataFrame,
-      queryTable: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, k1: Double, b: Double): org.apache.spark.sql.DataFrame = {
-    val prepared = docs.select(col(idCol).as("doc_id"),
-        Dedup.words(col(textCol)).as("__ws"))
-      .withColumn("__dl", size(col("__ws")))
-    val sMicro = aggregate(col("qterms"), lit(0L), (acc, t) => {
-      val tf = graft.functions.TextExpressions
-        .countEqNative(col("__ws"), t.getField("term")).cast("double")
-      val w = tf * (k1 + 1) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / col("avgdl")))
-      acc + when(tf > 0,
-        round(t.getField("idf") * w * 1e6).cast("long")).otherwise(lit(0L))
-    })
-    prepared.crossJoin(broadcast(queryTable))
-      .select(col("query_id"), col("doc_id"), sMicro.as("s_micro"))
-  }
-
   /** The MERGEABLE index half of BM25: (df table, stats row) for a
     * corpus slice. Both artifacts are commutative-monoid summaries —
     * term counts and (n_docs, sum_dl) add — so an index over an
@@ -661,57 +629,6 @@ object TextAnalysis {
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     (df, stats)
   }
-
-  /** The frozen half of streaming BM25: per standing query, its terms
-    * with PRE-RESOLVED idf (from a corpus snapshot's df table) plus
-    * the snapshot's avgdl — one broadcastable row per query. Index
-    * once, score forever: arriving documents never need the corpus. */
-  def bm25QueryTable(docs: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, qIdCol: String,
-      qTextCol: String): org.apache.spark.sql.DataFrame = {
-    val toks = docs
-      .select(col(idCol).as("doc_id"), Dedup.words(col(textCol)).as("__ws"))
-      .select(col("doc_id"), explode_outer(array_distinct(col("__ws"))).as("term"))
-    val docFreq = toks.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val stats = docs
-      .select(size(Dedup.words(col(textCol))).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val qterms = queries.select(col(qIdCol).as("query_id"),
-        explode(array_distinct(Dedup.words(col(qTextCol)))).as("term"))
-      .join(docFreq, Seq("term"), "left")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("term"),
-        // absent terms: df = 0 -> the max idf (they still score 0 via tf)
-        log(lit(1.0) + (col("n_docs") - coalesce(col("doc_freq"), lit(0L))
-          + lit(0.5)) / (coalesce(col("doc_freq"), lit(0L)) + lit(0.5)))
-          .as("idf"),
-        (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-    qterms.groupBy("query_id")
-      .agg(collect_list(struct(col("term"), col("idf"))).as("qterms"),
-        first(col("avgdl")).as("avgdl"))
-  }
-
-  /** Standing-query routing — the STREAMING face of [[bm25TopK]]:
-    * score each arriving document against every standing query using
-    * the frozen [[bm25QueryTable]] stats, emit matches above
-    * `minScore`. Entirely STATELESS (one scan-local expression per
-    * (doc, query) pair — tf via a filter over the materialized words
-    * array, the same integer micro-unit sum as the batch operator),
-    * so it runs identically on a batch or streaming DataFrame: no
-    * aggregation, no watermark, no state store. Global top-k is
-    * meaningless on an unbounded stream; the threshold is the
-    * streaming-native contract. Scores agree with [[bm25TopK]]
-    * EXACTLY when the snapshot equals the scored corpus
-    * (StreamBatchEquivalenceSpec). */
-  def bm25Route(docs: org.apache.spark.sql.DataFrame,
-      queryTable: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, minScore: Double, k1: Double = 1.2,
-      b: Double = 0.75): org.apache.spark.sql.DataFrame =
-    bm25ScoreMicro(docs, queryTable, textCol, idCol, k1, b)
-      .filter(col("s_micro") >= math.round(minScore * 1e6))
-      .withColumn("bm25", round(col("s_micro") / 1e6, 6) + lit(0.0))
-      .drop("s_micro")
 
   // ------------------------------------------------------------------
   // Real merge-table BPE (Sennrich et al. 2016, "Neural Machine

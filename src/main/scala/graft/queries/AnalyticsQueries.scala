@@ -79,11 +79,9 @@ object AnalyticsQueries {
         .stripMargin),
     ),
 
-    // Gap-based sessionization in BATCH form (the oracle-checked
-    // complement of streaming.EventStreams.sessionize): a session
-    // break is a >30-minute gap; the session sequence number is the
-    // running sum of break flags. One shuffle on user_id, both
-    // windows share the same sort.
+    // Gap-based sessionization: a session break is a >30-minute gap;
+    // the session sequence number is the running sum of break flags.
+    // One shuffle on user_id, both windows share the same sort.
     QueryDef(
       "q_sessionize_batch",
       (s, d) => {

@@ -420,8 +420,7 @@ object CoreQueries {
              |FROM orders GROUP BY o_orderpriority""".stripMargin),
     ),
 
-    // Event-time tumbling-window aggregation (batch form; the streaming
-    // module runs the same shape incrementally).
+    // Event-time tumbling-window aggregation.
     QueryDef(
       "q_events_hourly",
       (s, d) => QueryDef.loadEvents(s, d)

@@ -3,12 +3,11 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import scala.collection.immutable.SortedMap
 
-/** Keyed latest-state table maintained from a stream of row versions —
-  * the streaming deployment shape of the reference's advisory upsert
+/** Keyed latest-state table maintained from successive batches of row
+  * versions — the incremental form of the reference's advisory upsert
   * (reference: src/advisory_pipeline/state_machine/pipeline.py:120-145,
   * which rewrites the whole prod table per batch run). Each batch
   * commits by ATOMIC MANIFEST CREATION — the lakehouse table-format
@@ -72,7 +71,7 @@ import scala.collection.immutable.SortedMap
   * check-then-open create and writes through NIO `CREATE_NEW` (true
   * `O_EXCL`), so exclusivity holds across PROCESSES there too; the
   * in-process lock additionally serializes commits across the one
-  * driver JVM — where accidental dual writers (two streams against one
+  * driver JVM — where accidental dual writers (two jobs against one
   * table) most often appear — keeping their collisions on the cheap
   * clean-loss path.
   *
@@ -94,7 +93,7 @@ import scala.collection.immutable.SortedMap
   * the touched buckets and re-runs the merge — but a scheduled-job
   * overlap or a failover double-start converges instead of erroring.
   *
-  * Crash contract (single writer, e.g. one streaming query): a crash
+  * Crash contract (single writer, e.g. one scheduled job): a crash
   * BEFORE the manifest write leaves readers on the old version and the
   * replayed batch recomputes the same version number and redoes it in a
   * fresh staging directory — convergent; the crashed attempt's
@@ -1453,7 +1452,7 @@ object SnapshotUpsert {
     * records them as delta layers. Write cost is proportional to the
     * BATCH, never to the buckets it lands in — the high-frequency
     * ingest shape at 100 TB, where a copy-on-write commit per
-    * micro-batch would rewrite the table many times over per day.
+    * small batch would rewrite the table many times over per day.
     *
     * The price moves to the read: a delta-bearing bucket's readers
     * fold its layers over the base (see [[foldDeltas]] — the fold
@@ -1808,10 +1807,10 @@ object SnapshotUpsert {
     * rebucket IS a writer, and a table-sized one: it does NOT auto-
     * retry on a lost version race (re-running a whole-table rewrite
     * behind the caller's back would hide real money) — a concurrent
-    * merge makes it fail with [[ConcurrentCommitException]]; stop the
-    * table's streaming sink (or pause its trigger), then re-run. The
-    * create-exclusive manifest commit is the backstop that makes the
-    * race an error instead of a lost update. For growing ONE overfull
+    * merge makes it fail with [[ConcurrentCommitException]]; pause the
+    * table's writers, then re-run. The create-exclusive manifest commit
+    * is the backstop that makes the race an error instead of a lost
+    * update. For growing ONE overfull
     * bucket without a table rewrite, see [[splitBucket]]. */
   def rebucket(spark: SparkSession, targetDir: String, newBuckets: Int,
       keys: Seq[String], keepVersions: Int = 2,
@@ -2583,7 +2582,7 @@ object SnapshotUpsert {
 
   /** (version, recorded data schema) of the current committed version
     * (None for a fresh table) — one manifest read, no data access; what
-    * the change-feed streaming source pins at start. */
+    * `IncrementalMv` reads an MV's schema from. */
   def currentVersionInfo(spark: SparkSession, targetDir: String)
       : Option[(Long, org.apache.spark.sql.types.StructType)] =
     currentSnapshot(spark, targetDir).map(s => (s.version, s.schema))
@@ -3005,86 +3004,5 @@ object SnapshotUpsert {
             .withColumn("_change", lit("insert")),
           () => advance()))
     }
-  }
-
-  /** The change feed as a STRUCTURED STREAMING SOURCE: a downstream
-    * job consumes each commit's row-level changes as micro-batches,
-    * with versions as offsets and the engine's checkpoint as the
-    * cursor — the always-on form of the [[drainChanges]] poll loop
-    * (same slices, same idempotent-image-diff contract). See
-    * [[ChangeFeedSourceProvider]] for options, the bootstrap shape,
-    * schema pinning, and retention sizing. */
-  def readChangeStream(spark: SparkSession, targetDir: String,
-      keys: Seq[String], emitDeletes: Boolean = true,
-      withCommitVersion: Boolean = false,
-      startingVersion: Option[String] = None,
-      maxVersionsPerBatch: Option[Long] = None,
-      failOnDataLoss: Boolean = true,
-      emitBefore: Boolean = false): DataFrame = {
-    var r = spark.readStream.format("graft-changes")
-      .option("path", targetDir)
-      .option("keys", keys.mkString(","))
-      .option("emitDeletes", emitDeletes.toString)
-      .option("emitBefore", emitBefore.toString)
-      .option("withCommitVersion", withCommitVersion.toString)
-      .option("failOnDataLoss", failOnDataLoss.toString)
-    startingVersion.foreach(v => r = r.option("startingVersion", v))
-    maxVersionsPerBatch.foreach(m =>
-      r = r.option("maxVersionsPerBatch", m.toString))
-    r.load()
-  }
-
-  /** Continuous snapshot-committed upsert under the streaming
-    * checkpoint's replay guarantee. `drainOnce` = process the backlog in
-    * rate-limited micro-batches then stop (the scheduled
-    * table-maintenance shape, same as [[EventStreams.parquetSink]]). */
-  def sink(stream: DataFrame, targetDir: String, checkpoint: String,
-      keys: Seq[String], orderCol: String, nBuckets: Int = 64,
-      keepVersions: Int = 2, drainOnce: Boolean = false,
-      outputMode: String = "append", keepAgeMs: Option[Long] = None,
-      tombstoneCol: Option[String] = None,
-      bucketCols: Seq[String] = Seq.empty,
-      maxCommitAttempts: Int = 5,
-      commit: CommitPrimitive = CreateExclusive): StreamingQuery =
-    startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
-      b => upsertBatchSnapshot(b, targetDir, keys, orderCol, nBuckets,
-        keepVersions, keepAgeMs, tombstoneCol, bucketCols = bucketCols,
-        maxCommitAttempts = maxCommitAttempts, commit = commit))
-
-  /** Continuous MERGE-ON-READ upsert: every micro-batch commits as a
-    * batch-sized delta layer ([[appendDeltaSnapshot]]) instead of a
-    * bucket rewrite — the write-amplification-free sink for
-    * high-frequency streams, with `compactAt` (layers per bucket)
-    * bounding read amplification inline. */
-  def deltaSink(stream: DataFrame, targetDir: String, checkpoint: String,
-      keys: Seq[String], orderCol: String, nBuckets: Int = 64,
-      keepVersions: Int = 2, drainOnce: Boolean = false,
-      outputMode: String = "append", keepAgeMs: Option[Long] = None,
-      tombstoneCol: Option[String] = None,
-      bucketCols: Seq[String] = Seq.empty,
-      maxCommitAttempts: Int = 5,
-      commit: CommitPrimitive = CreateExclusive,
-      compactAt: Int = 8): StreamingQuery =
-    startForeachBatch(stream, checkpoint, outputMode, drainOnce)(
-      b => appendDeltaSnapshot(b, targetDir, keys, orderCol, nBuckets,
-        keepVersions, keepAgeMs, tombstoneCol, bucketCols = bucketCols,
-        maxCommitAttempts = maxCommitAttempts, commit = commit,
-        compactAt = compactAt))
-
-  /** Shared foreachBatch wiring for the streaming sinks. outputMode
-    * "update" is the fit for stateful upstreams that emit per-key
-    * revisions (mapGroupsWithState): each micro-batch carries the keys
-    * whose state changed, which is exactly an upsert feed. */
-  private[graft] def startForeachBatch(stream: DataFrame,
-      checkpoint: String, outputMode: String, drainOnce: Boolean)(
-      f: DataFrame => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          _: Long) => f(b.toDF()))
-    if (drainOnce)
-      w = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    w.start()
   }
 }

@@ -154,6 +154,15 @@ class AdvisoryPipelineSpec extends SparkSpec {
 
   test("the enrichment cache partition is rewritten as one file by a run " +
       "that fetches") {
+    def cacheFiles(dir: String) =
+      new java.io.File(s"$dir/output/enrichment_cache/source_name=nvd")
+        .listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    def cacheRows(dir: String) =
+      spark.read.parquet(s"$dir/output/enrichment_cache").collect()
+        .map(r => (r.getAs[String]("cve_id"), r.getAs[String]("package_name"),
+          r.getAs[String]("source_name"),
+          r.getAs[java.sql.Timestamp]("last_accessed").toInstant))
+        .toSet
     val b = Files.createTempDirectory("advisory-e2e-cache").toString
     def runAt(runId: String, at: String) =
       Pipelines.run(spark, PipelineConfig.fromDefaults(runId, b), new StubTransport,
@@ -164,17 +173,52 @@ class AdvisoryPipelineSpec extends SparkSpec {
     nvdCalls.set(0)
     runAt("c2", "2026-02-01T01:00:00Z")
     assert(nvdCalls.get() == 2)
-    val part = new java.io.File(s"$b/output/enrichment_cache/source_name=nvd")
-    val files = part.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    val files = cacheFiles(b)
     assert(files.length == 1, s"cache partition files: ${files.mkString(", ")}")
-    val rows = spark.read.parquet(s"$b/output/enrichment_cache").collect()
-      .map(r => (r.getAs[String]("cve_id"), r.getAs[String]("package_name"),
-        r.getAs[String]("source_name"),
-        r.getAs[java.sql.Timestamp]("last_accessed").toInstant))
-      .toSet
+    val rows = cacheRows(b)
     val at = Instant.parse("2026-02-01T01:00:00Z")
     assert(rows == Set(("CVE-2024-3", "openssl", "nvd", at),
       ("CVE-2024-4", "openssl", "nvd", at)))
+
+    // The persisted cache evicted while its partition is rewritten. The
+    // first run caches CVE-2024-3 only (CVE-2024-4's attempts fail). A
+    // minute later, inside the TTL, the second run fetches CVE-2024-4 and
+    // carries CVE-2024-3 over from the old partition. With `evict`, that
+    // run's first NVD call (on the driver, after the pending-key collect
+    // and before writeCache) drops every cached block, so the merge
+    // re-reads the old partition from parquet while the dynamic overwrite
+    // replaces it.
+    val (t0, t1) = (Instant.parse("2026-02-01T00:00:00Z"),
+      Instant.parse("2026-02-01T00:01:00Z"))
+    val evicted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    class Down extends StubTransport {
+      override def get(url: String, headers: Map[String, String]): (Int, String) =
+        if (url.endsWith("cveId=CVE-2024-4")) (500, "") else super.get(url, headers)
+    }
+    class Evicting extends StubTransport {
+      override def get(url: String, headers: Map[String, String]): (Int, String) = {
+        if (!url.contains("data.json") && evicted.compareAndSet(false, true))
+          spark.catalog.clearCache()
+        super.get(url, headers)
+      }
+    }
+    val fast = nvd.copy(retryBackoffMs = 1)
+    def twoRuns(second: StubTransport) = {
+      val d = Files.createTempDirectory("advisory-e2e-cache-evict").toString
+      Pipelines.run(spark, PipelineConfig.fromDefaults("e1", d), new Down, fast,
+        "http://stub", overridesDf, now = t0)
+      Pipelines.run(spark, PipelineConfig.fromDefaults("e2", d), second, fast,
+        "http://stub", overridesDf, now = t1)
+      d
+    }
+    val undisturbed = twoRuns(new StubTransport)
+    val disturbed = twoRuns(new Evicting)
+    assert(evicted.get())
+    assert(cacheRows(undisturbed) == Set(("CVE-2024-3", "openssl", "nvd", t0),
+      ("CVE-2024-4", "openssl", "nvd", t1)))
+    assert(cacheFiles(disturbed).length == 1,
+      s"cache partition files: ${cacheFiles(disturbed).mkString(", ")}")
+    assert(cacheRows(disturbed) == cacheRows(undisturbed))
   }
 
   test("a key whose NVD attempts all fail is not cached, and the next run " +

@@ -383,55 +383,6 @@ class DeltaSnapshotSpec extends SparkSpec {
     assert(broadcastPath.count(_._2 == "seed") == 18)
   }
 
-  test("the change-feed STREAMING SOURCE consumes delta commits live; a " +
-      "mid-stream compaction delivers zero rows") {
-    val dir = tmp()
-    SnapshotUpsert.appendDeltaSnapshot(
-      df((1L, "a", 1L), (2L, "b", 1L)), dir, Seq("id"), "v",
-      nBuckets = 4, keepVersions = 10)
-    val state = scala.collection.concurrent.TrieMap.empty[Long, (String, Long)]
-    val received = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = SnapshotUpsert.readChangeStream(spark, dir, Seq("id"),
-        emitDeletes = true)
-      .writeStream.option("checkpointLocation", tmp())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.collect().foreach { r =>
-          received.incrementAndGet()
-          val id = r.getLong(r.fieldIndex("id"))
-          r.getString(r.fieldIndex("_change")) match {
-            case "delete" => state.remove(id)
-            case _ => state.put(id, (r.getString(r.fieldIndex("status")),
-              r.getLong(r.fieldIndex("v"))))
-          }
-        }
-        ()
-      }.start()
-    try {
-      q.processAllAvailable() // bootstrap
-      SnapshotUpsert.appendDeltaSnapshot(
-        df((1L, "a2", 2L), (3L, "c", 1L)), dir, Seq("id"), "v",
-        nBuckets = 4, keepVersions = 10)
-      SnapshotUpsert.appendDeltaSnapshot(
-        tombDf((2L, "x", 9L, true)), dir, Seq("id"), "v", nBuckets = 4,
-        keepVersions = 10, tombstoneCol = Some("del"))
-      q.processAllAvailable()
-      assert(state.toMap == Map(1L -> ("a2", 2L), 3L -> ("c", 1L)))
-      // compaction is a no-op to the stream
-      val before = received.get()
-      assert(SnapshotUpsert.compactDeltas(spark, dir,
-        keepVersions = 10).nonEmpty)
-      q.processAllAvailable()
-      assert(received.get() == before,
-        "a compaction commit must deliver zero change rows")
-      // and post-compaction delta commits keep flowing
-      SnapshotUpsert.appendDeltaSnapshot(df((4L, "d", 1L)), dir, Seq("id"),
-        "v", nBuckets = 4, keepVersions = 10)
-      q.processAllAvailable()
-      assert(state.toMap == Map(1L -> ("a2", 2L), 3L -> ("c", 1L),
-        4L -> ("d", 1L)))
-    } finally q.stop()
-  }
-
   test("an incremental MV refreshes off a DELTA-committed base exactly as " +
       "off a CoW base") {
     import graft.operators.IncrementalMv
@@ -463,25 +414,5 @@ class DeltaSnapshotSpec extends SparkSpec {
     refresh()
     assert(mvState() == recompute())
     assert(mvState() == Set(("a", 2L), ("b", 20L)))
-  }
-
-  test("deltaSink: a micro-batched stream lands as layers under the " +
-      "checkpoint replay guarantee and matches the batch image") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tmp(); val ckpt = tmp()
-    val mem = MemoryStream[(Long, String, Long)]
-    val q = SnapshotUpsert.deltaSink(
-      mem.toDF().toDF("id", "status", "v"), dir, ckpt, Seq("id"), "v",
-      nBuckets = 4, compactAt = 2)
-    try {
-      mem.addData((1L, "a", 1L), (2L, "a", 1L))
-      q.processAllAvailable()
-      mem.addData((1L, "b", 2L), (3L, "a", 1L))
-      q.processAllAvailable()
-      assert(snapSet(dir) ==
-        Set((1L, "b", 2L), (2L, "a", 1L), (3L, "a", 1L)))
-    } finally q.stop()
   }
 }

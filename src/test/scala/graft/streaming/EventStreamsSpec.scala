@@ -2,33 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
-
-import java.sql.Timestamp
 
 class EventStreamsSpec extends SparkSpec {
-  import EventStreams._
-
-  private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
-
-  test("hourly rollup over a memory stream matches batch semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = hourlyRollup(input.toDF()).writeStream
-      .format("memory").queryName("rollup").outputMode("complete").start()
-    try {
-      input.addData(
-        Event(1, ts(10), 1, "click", 1.0),
-        Event(2, ts(20), 1, "click", 2.0),
-        Event(3, ts(70), 2, "view", 5.0))
-      q.processAllAvailable()
-      val rows = spark.table("rollup").collect()
-        .map(r => (r.getTimestamp(0).getTime / 60000, r.getString(1),
-          r.getLong(2), r.getDouble(3))).toSet
-      assert(rows == Set((0L, "click", 2L, 3.0), (60L, "view", 1L, 5.0)))
-    } finally q.stop()
-  }
 
   test("corpus operators are streaming-safe: stream output equals batch") {
     // stratified sampling, PII redaction, quality scoring, and split
@@ -73,553 +48,5 @@ class EventStreamsSpec extends SparkSpec {
         assert(r._2.contains("<PHONE>"))
       }
     } finally q.stop()
-  }
-
-  test("stream-stream interval join attributes purchases to in-window clicks") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val purchases = MemoryStream[Event]
-    val clicks = MemoryStream[Event]
-    val q = EventStreams.purchaseAttribution(
-        purchases.toDF(), clicks.toDF(), lookback = "10 minutes")
-      .select($"purchase_id", $"click_id")
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    try {
-      clicks.addData(
-        Event(100, ts(5), 1, "click", 0.0),   // in window of purchase@12
-        Event(101, ts(1), 1, "click", 0.0),   // outside 10-min lookback
-        Event(102, ts(11), 2, "click", 0.0))  // other user
-      purchases.addData(Event(200, ts(12), 1, "purchase", 9.99))
-      q.processAllAvailable()
-      val rows = spark.table("attrib").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows == Set((200L, 100L)))
-    } finally q.stop()
-  }
-
-  test("stream-stream LEFT OUTER interval join emits misses after watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val purchases = MemoryStream[Event]
-    val clicks = MemoryStream[Event]
-    val q = EventStreams.purchaseAttribution(
-        purchases.toDF(), clicks.toDF(), lookback = "10 minutes",
-        watermark = "1 minute", joinType = "leftOuter")
-      .select($"purchase_id", $"click_id")
-      .writeStream.format("memory").queryName("attrib_outer")
-      .outputMode("append").start()
-    try {
-      clicks.addData(Event(100, ts(5), 1, "click", 0.0))
-      purchases.addData(
-        Event(200, ts(12), 1, "purchase", 9.99), // attributed to 100
-        Event(201, ts(12), 2, "purchase", 5.00)) // no click: a miss
-      q.processAllAvailable()
-      // advance BOTH watermarks far past purchase time + lookback so
-      // the unmatched purchase can no longer be matched and emits
-      clicks.addData(Event(102, ts(60), 9, "click", 0.0))
-      purchases.addData(Event(202, ts(60), 9, "purchase", 1.0))
-      q.processAllAvailable()
-      // one more cycle: outer results emit on state eviction
-      clicks.addData(Event(103, ts(90), 9, "click", 0.0))
-      purchases.addData(Event(203, ts(90), 9, "purchase", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("attrib_outer").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toSet
-      assert(rows.contains((200L, 100L)), s"matched row missing: $rows")
-      assert(rows.contains((201L, -1L)),
-        s"unmatched purchase must emit null click after watermark: $rows")
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment join broadcasts the dim, keeps no state") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Event]
-    val q = EventStreams.enrichStream(input.toDF(), dim, Seq("user_id"))
-      .select($"event_id", $"tier")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts(1), 1, "click", 1.0),
-        Event(2, ts(2), 2, "click", 1.0),
-        Event(3, ts(3), 99, "click", 1.0)) // no dim row -> null tier
-      q.processAllAvailable()
-      val rows = spark.table("enriched").collect()
-        .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-      assert(rows == Set((1L, Some("gold")), (2L, Some("basic")), (3L, None)))
-      // stateless: the progress metrics must report no state store rows
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0))
-    } finally q.stop()
-  }
-
-  test("sessionization closes sessions after the gap, emits on timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("sessions").outputMode("append").start()
-    try {
-      // two bursts for user 1, separated by > gap in the SAME batch
-      // start past epoch 0: the initial watermark is 0 and rows at or
-      // before it are dropped as late
-      input.addData(
-        Event(1, ts(10), 1, "click", 0), Event(2, ts(15), 1, "click", 0),
-        Event(3, ts(40), 1, "click", 0))
-      q.processAllAvailable()
-      val closed = spark.table("sessions").collect()
-      assert(closed.length == 1) // first burst closed by the second
-      assert(closed.head.getAs[Long]("n_events") == 2)
-      assert(closed.head.getAs[Boolean]("closed"))
-    } finally q.stop()
-  }
-
-  test("late orphans within a gap of each other chain into ONE closed " +
-      "session instead of per-event singletons") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("orphan_chain").outputMode("append").start()
-    try {
-      // batch 1 opens a session far in the future (watermark = t - 2h)
-      input.addData(Event(1, ts(10000), 1, "click", 0))
-      q.processAllAvailable()
-      // batch 2: two LATE rows, admitted by the watermark (> 9880),
-      // each more than a gap before the open session (< 9990), and
-      // within a gap of each other — batch semantics would make them
-      // one session
-      input.addData(Event(2, ts(9900), 1, "click", 0),
-        Event(3, ts(9905), 1, "click", 0))
-      q.processAllAvailable()
-      val closed = spark.table("orphan_chain").collect()
-      assert(closed.length == 1,
-        s"the orphan pair must close as ONE session: ${closed.toList}")
-      assert(closed.head.getAs[Long]("n_events") == 2)
-      assert(closed.head.getAs[Timestamp]("first_ts") == ts(9900) &&
-        closed.head.getAs[Timestamp]("last_ts") == ts(9905))
-    } finally q.stop()
-  }
-
-  test("an orphan chain that reaches within a gap of the open session " +
-      "folds into the session (bridged by a late in-gap row)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("orphan_bridge").outputMode("append").start()
-    try {
-      input.addData(Event(1, ts(10000), 1, "click", 0))
-      q.processAllAvailable()
-      // 9985 is an orphan (>gap before 10000); 9992 merges into the
-      // session (within gap of its start) and pulls `first` to 9992,
-      // which is within a gap of the orphan's end — one session
-      input.addData(Event(2, ts(9985), 1, "click", 0),
-        Event(3, ts(9992), 1, "click", 0))
-      q.processAllAvailable()
-      // close the (now 3-event) session with a row past the gap
-      input.addData(Event(4, ts(10020), 1, "click", 0))
-      q.processAllAvailable()
-      val closed = spark.table("orphan_bridge").collect()
-      assert(closed.length == 1, closed.toList.toString)
-      assert(closed.head.getAs[Long]("n_events") == 3,
-        s"orphan + bridge + original must fold into one session: ${closed.toList}")
-      assert(closed.head.getAs[Timestamp]("first_ts") == ts(9985) &&
-        closed.head.getAs[Timestamp]("last_ts") == ts(10000))
-    } finally q.stop()
-  }
-
-  test("sessionize survives a watermark jump wider than the gap: " +
-      "lag-window rows fold and close at the next tick instead of crashing") {
-    // Found by the 100M-event time-random replay rehearsal
-    // (StreamBench): Spark's late filter lags the watermark by one
-    // batch, so after a far-future event jumps the watermark, the NEXT
-    // batch still hands the state function old rows whose entire gap
-    // window lies below the current watermark — and registering their
-    // below-watermark timeout used to throw and kill the query. The
-    // lag window only exists between back-to-back DATA batches (a
-    // no-data batch advances the lagged filter), so this uses a file
-    // source at one file per trigger, the replay shape that hit it.
-    import spark.implicits._
-    val watch = java.nio.file.Files.createTempDirectory("sessionize-jump")
-    def stage(name: String, mtimeMin: Long, e: Event): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("one").toString
-      Seq(e).toDS().coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(watch.toFile, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMin * 60000L)
-    }
-    stage("a.parquet", 1, Event(1, ts(10000), 2, "view", 0)) // jumps watermark
-    stage("b.parquet", 2, Event(2, ts(20), 1, "click", 0)) // lag-window row
-    stage("c.parquet", 3, Event(3, ts(20000), 2, "view", 0)) // next tick
-    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(watch.toString).as[Event]
-    val q = sessionize(stream, gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("jump_sessions").outputMode("append").start()
-    try {
-      q.processAllAvailable() // pre-fix: StreamingQueryException at batch 2
-      val u1 = spark.table("jump_sessions").collect()
-        .filter(_.getAs[Long]("user_id") == 1L)
-      assert(u1.length == 1,
-        s"the lag-window session must close exactly once: ${u1.toList}")
-      assert(u1.head.getAs[Long]("n_events") == 1)
-      assert(u1.head.getAs[Timestamp]("first_ts") == ts(20) &&
-        u1.head.getAs[Timestamp]("last_ts") == ts(20),
-        "the clamped close must keep the session's true bounds")
-      assert(u1.head.getAs[Boolean]("closed"))
-    } finally q.stop()
-  }
-
-  test("sessionize also runs in BATCH execution (the watermark clamp " +
-      "must not consult the missing batch watermark)") {
-    // the analyzer eliminates the watermark node on a batch child and
-    // GroupState.getCurrentWatermarkMs() then throws — the clamp must
-    // only consult it when the input is actually streaming
-    import spark.implicits._
-    val batch = Seq(
-      Event(1, ts(10), 1, "click", 0), Event(2, ts(15), 1, "click", 0),
-      Event(3, ts(60), 1, "click", 0)).toDS() // 45 min of silence mid-burst
-    val out = sessionize(batch, gapMs = 10 * 60000L).collect()
-    assert(out.count(_.closed) == 1,
-      s"the first burst must close in batch mode: ${out.toList}")
-    assert(out.find(_.closed).get.n_events == 2)
-  }
-
-  test("sessionize: rows below the lagged late filter are dropped by " +
-      "Spark itself and cannot resurrect a closed session") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("late_sessions").outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts(10), 1, "click", 0), Event(2, ts(12), 1, "click", 0),
-        Event(3, ts(10000), 2, "view", 0)) // far future: advances the watermark
-      q.processAllAvailable() // extra batch closes user 1 via timeout
-      // by now the LAGGED late filter has caught up to ts(10000)-2h:
-      // this row is dropped before the state function sees it
-      input.addData(Event(4, ts(20), 1, "click", 0))
-      q.processAllAvailable()
-      val u1 = spark.table("late_sessions").collect()
-        .filter(_.getAs[Long]("user_id") == 1L)
-      assert(u1.length == 1,
-        s"user 1's expired session must close exactly once: ${u1.toList}")
-      assert(u1.head.getAs[Long]("n_events") == 2,
-        "the late row must not extend or resurrect the session")
-      assert(u1.head.getAs[Boolean]("closed"))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops repeated keys within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = EventStreams.streamingDedup(input.toDF(), Seq("user_id"), "ts")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts(10), 1, "click", 0), Event(2, ts(11), 1, "click", 0),
-        Event(3, ts(12), 2, "view", 0))
-      q.processAllAvailable()
-      input.addData(Event(4, ts(13), 1, "click", 0)) // still duplicate
-      q.processAllAvailable()
-      val rows = spark.table("dedup").collect()
-      assert(rows.length == 2) // one per distinct user
-      assert(rows.map(_.getAs[Long]("user_id")).toSet == Set(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("incremental near-dup sink equals the batch cross operator across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val corpus = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-      (3L, "completely different content about spark query engines and columnar formats"),
-    ).toDF("doc_id", "text")
-    val incoming = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-      (11L, "the quick brown fox leaps over the lazy dog near the river bank today"),
-      (12L, "totally novel content with no counterpart in the existing corpus at all"),
-    )
-    val out = java.nio.file.Files.createTempDirectory("neardup-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("neardup-ckpt").toString
-    val input = MemoryStream[(Long, String)]
-    val q = EventStreams.incrementalNearDupSink(
-      input.toDF().toDF("doc_id", "text"), corpus, "text", "doc_id", out, ckpt)
-    try {
-      input.addData(incoming.take(2): _*)
-      q.processAllAvailable()
-      input.addData(incoming.drop(2): _*)
-      q.processAllAvailable()
-      val streamed = spark.read.parquet(out).select("id1", "id2")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = graft.operators.Dedup.minHashCandidatesCross(
-        incoming.toDF("doc_id", "text"), corpus, "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batch.nonEmpty && streamed == batch,
-        s"streamed $streamed vs batch $batch")
-      assert(streamed.contains((10L, 0L)), "exact copy of corpus doc 0 must flag")
-      assert(!streamed.exists(_._1 == 12L), "novel doc must not flag")
-    } finally q.stop()
-  }
-
-  test("streaming FSM folds proposals with batch-identical semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Proposal]
-    val q = streamingFsm(input.toDS()).writeStream
-      .format("memory").queryName("fsm").outputMode("update").start()
-    try {
-      input.addData(
-        Proposal("CVE-1", "glibc", "pending_upstream"),
-        Proposal("CVE-2", "zlib", "not_applicable")) // invalid from unknown
-      q.processAllAvailable()
-      input.addData(
-        Proposal("CVE-1", "glibc", "fixed"),
-        Proposal("CVE-1", "glibc", "pending_upstream")) // blocked: terminal
-      q.processAllAvailable()
-      val m = spark.table("fsm").collect()
-        .map(r => r.getString(0) -> r).groupBy(_._1).map { case (k, v) => k -> v.last._2 }
-      assert(m("CVE-1").getAs[String]("status") == "fixed")
-      assert(m("CVE-1").getAs[Long]("transitions") == 2)
-      assert(m("CVE-1").getAs[Long]("blocked") == 1)
-      assert(m("CVE-2").getAs[String]("status") == "unknown")
-      assert(m("CVE-2").getAs[Long]("blocked") == 1)
-    } finally q.stop()
-  }
-
-  test("a late cross-batch row within the gap merges by min/max instead of " +
-      "inverting the session bounds") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 10 * 60000L).writeStream
-      .format("memory").queryName("late_sessions").outputMode("append").start()
-    try {
-      input.addData(Event(1, ts(120), 7, "click", 0))
-      q.processAllAvailable()
-      // late by 5 minutes (the 2h watermark admits it): the old code
-      // set last = 115 < first, and the next on-time row then measured
-      // its gap against the corrupted bound and falsely split
-      input.addData(Event(2, ts(115), 7, "click", 0))
-      q.processAllAvailable()
-      input.addData(Event(3, ts(126), 7, "click", 0)) // 6 min after TRUE last
-      q.processAllAvailable()
-      assert(spark.table("late_sessions").isEmpty,
-        "no session may close: 126 is within the gap of the true last=120")
-      // a far row closes the (correctly merged) session
-      input.addData(Event(4, ts(300), 7, "click", 0))
-      q.processAllAvailable()
-      val closed = spark.table("late_sessions").collect()
-      assert(closed.length == 1)
-      assert(closed.head.getAs[Long]("n_events") == 3)
-      assert(closed.head.getAs[Timestamp]("first_ts") == ts(115))
-      assert(closed.head.getAs[Timestamp]("last_ts") == ts(126))
-      // an orphan more than a gap BEFORE the open session (at 300) but
-      // still above the watermark (300 - 120 = 180) emits as its own
-      // closed single-event session, leaving the open one intact
-      input.addData(Event(5, ts(200), 7, "click", 0))
-      q.processAllAvailable()
-      val orphan = spark.table("late_sessions").collect()
-        .filter(_.getAs[Timestamp]("first_ts") == ts(200))
-      assert(orphan.length == 1 && orphan.head.getAs[Long]("n_events") == 1)
-      // the open session at 300 survived the orphan and closes normally
-      input.addData(Event(6, ts(400), 7, "click", 0))
-      q.processAllAvailable()
-      val all = spark.table("late_sessions").collect()
-      assert(all.length == 3)
-      assert(all.exists(r => r.getAs[Timestamp]("first_ts") == ts(300) &&
-        r.getAs[Long]("n_events") == 1))
-    } finally q.stop()
-  }
-
-  test("out-of-order replay with bounded intra-session disorder converges " +
-      "to the exact batch session fold") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val gapMs = 30 * 60000L
-    val base = 24L * 3600 * 1000 // past epoch 0 so nothing is born late
-    // 10 users x 3 sessions x 5 events (1/min); sessions 2h apart.
-    // Event time = start + i minutes, but ARRIVAL order reverses each
-    // session (arrival key = start + (4-i)), so rows reach the
-    // operator up to 4 minutes out of order and batch boundaries cut
-    // through sessions — the exact cross-batch late regime the min/max
-    // merge exists for. Disorder never exceeds the gap, so the result
-    // must equal the order-insensitive batch fold.
-    val evts = for {
-      u <- 1L to 10L; s <- 0 to 2; i <- 0 to 4
-    } yield {
-      val start = base + u * 777000L + s.toLong * 2 * 3600 * 1000
-      (Event(u * 100 + s * 10 + i, new Timestamp(start + i * 60000L), u,
-        "e", 0.0), start + (4 - i) * 60000L)
-    }
-    val arrival = evts.sortBy(_._2).map(_._1)
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = gapMs).writeStream
-      .format("memory").queryName("ooo_sessions").outputMode("append").start()
-    try {
-      arrival.grouped(7).foreach { c =>
-        input.addData(c: _*)
-        q.processAllAvailable()
-      }
-      val maxTs = evts.map(_._1.ts.getTime).max
-      input.addData(Event(-1L, new Timestamp(maxTs + 3L * 24 * 3600 * 1000),
-        -1L, "sentinel", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("ooo_sessions")
-        .filter($"user_id" >= 0 && $"closed").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getAs[Timestamp]("first_ts").getTime,
-          r.getAs[Timestamp]("last_ts").getTime)).toSet
-      // order-insensitive model: per user, sort and split on the gap
-      val model = evts.map(_._1).groupBy(_.user_id).flatMap { case (u, es) =>
-        val sorted = es.map(_.ts.getTime).sorted
-        val sessions = sorted.tail.foldLeft(List(List(sorted.head))) {
-          (acc, t) => if (t - acc.head.head <= gapMs) (t :: acc.head) :: acc.tail
-                      else List(t) :: acc
-        }
-        sessions.map(s => (u, s.size.toLong, s.min, s.max))
-      }.toSet
-      assert(model.size == 30 && streamed == model,
-        s"streamed ${streamed.size} vs model ${model.size}")
-    } finally q.stop()
-  }
-
-  test("streaming FSM treats a null proposal as no-change (batch UDF rule) " +
-      "instead of poisoning the query") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Proposal]
-    val q = streamingFsm(input.toDS()).writeStream
-      .format("memory").queryName("fsm_null").outputMode("update").start()
-    try {
-      input.addData(Proposal("CVE-9", "glibc", "pending_upstream"))
-      q.processAllAvailable()
-      input.addData(Proposal("CVE-9", "glibc", null),
-        Proposal("CVE-9", "glibc", "fixed"))
-      q.processAllAvailable()
-      val last = spark.table("fsm_null").collect().last
-      assert(last.getAs[String]("status") == "fixed")
-      assert(last.getAs[Long]("transitions") == 2, "null must not count")
-      assert(last.getAs[Long]("blocked") == 0, "null is no-change, not blocked")
-    } finally q.stop()
-  }
-
-  test("stateful streaming runs on the RocksDB state store (the 100 TB state path)") {
-    // the default HDFSBackedStateStore keeps every key on the JVM heap —
-    // fine for small state, fatal for a billion-key dedup horizon. The
-    // production posture is RocksDB-backed state (off-heap, spill-to-
-    // disk, changelog-checkpointed); this proves the engine's stateful
-    // operators actually run on it, not just that the config exists.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Event]
-      val q = EventStreams.streamingDedup(input.toDF(), Seq("user_id"), "ts")
-        .writeStream.format("memory").queryName("rocksdb_dedup")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          Event(1, ts(10), 1, "click", 0), Event(2, ts(11), 1, "click", 0),
-          Event(3, ts(12), 2, "view", 0))
-        q.processAllAvailable()
-        input.addData(Event(4, ts(13), 1, "click", 0))
-        q.processAllAvailable()
-        assert(spark.table("rocksdb_dedup").count() == 2)
-        // the state operator must report RocksDB-specific metrics —
-        // proof the provider was exercised, not silently defaulted
-        val metrics = q.lastProgress.stateOperators(0)
-          .customMetrics.keySet().toArray.mkString(",")
-        assert(metrics.toLowerCase.contains("rocksdb"),
-          s"no rocksdb metrics in state operator: $metrics")
-      } finally q.stop()
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("parquet file sink: checkpointed restart appends without duplicates") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val input = MemoryStream[Event]
-    val q1 = parquetSink(input.toDF(), s"$dir/data", s"$dir/ckpt")
-    try {
-      input.addData(Event(1, ts(1), 1, "click", 1.0),
-        Event(2, ts(2), 1, "view", 2.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // restart from the SAME checkpoint: only the new rows are written
-    val q2 = parquetSink(input.toDF(), s"$dir/data", s"$dir/ckpt")
-    try {
-      input.addData(Event(3, ts(3), 2, "click", 3.0))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val got = spark.read.parquet(s"$dir/data")
-      .select("event_id").as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 2L, 3L))
-  }
-
-  test("parquet sink drainOnce: AvailableNow drains the backlog then stops") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drain").toString
-    val input = MemoryStream[Event]
-    input.addData(Event(1, ts(1), 1, "click", 1.0),
-      Event(2, ts(2), 2, "view", 2.0))
-    val q = parquetSink(input.toDF(), s"$dir/data", s"$dir/ckpt",
-      drainOnce = true)
-    // AvailableNow terminates by itself once the backlog is consumed
-    assert(q.awaitTermination(60000), "drain query must self-terminate")
-    val got = spark.read.parquet(s"$dir/data")
-      .select("event_id").as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 2L))
-  }
-
-  test("foreachBatch sink: batch replay is idempotent, stream lands all rows") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb").toString
-
-    // the idempotence contract, hit directly: replaying batch 0 after
-    // batch 1 landed must leave the table unchanged
-    val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val b1 = Seq((3L, "c")).toDF("id", "v")
-    writeBatchIdempotent(b0, 0L, s"$dir/tbl")
-    writeBatchIdempotent(b1, 1L, s"$dir/tbl")
-    writeBatchIdempotent(b0, 0L, s"$dir/tbl") // replay
-    val after = spark.read.parquet(s"$dir/tbl")
-    assert(after.count() == 3)
-    assert(after.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-
-    // and end-to-end through an actual foreachBatch stream
-    val input = MemoryStream[Event]
-    val q = foreachBatchSink(input.toDF(), s"$dir/stream", s"$dir/ckpt")
-    try {
-      input.addData(Event(1, ts(1), 1, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(Event(2, ts(2), 1, "view", 2.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.read.parquet(s"$dir/stream")
-    assert(streamed.select("event_id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L))
-    // distinct batch ids prove the per-batch partitioning landed
-    assert(streamed.select("batch_id").distinct().count() == 2)
   }
 }

@@ -704,31 +704,6 @@ class SnapshotHardeningSpec extends SparkSpec {
     assert(SnapshotUpsert.versions(spark, dir) == Seq(1L, 2L, 3L, 4L))
   }
 
-  test("streaming sink with a tombstone column maintains deletes " +
-      "end-to-end under the checkpointed replay") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = tmp()
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long, Boolean)]
-    val q = SnapshotUpsert.sink(
-      input.toDF().toDF("id", "status", "v", "_deleted"), dir, tmp(),
-      Seq("id"), "v", nBuckets = 4, keepVersions = 10,
-      tombstoneCol = Some("_deleted"))
-    try {
-      input.addData((1L, "a", 1L, false), (2L, "b", 1L, false))
-      q.processAllAvailable()
-      input.addData((1L, "a2", 2L, false), (2L, "gone", 2L, true))
-      q.processAllAvailable()
-      assert(snapSet(dir) == Set((1L, "a2", 2L)))
-      // the per-commit feed a chained consumer would replay
-      val feed = SnapshotUpsert.changesBetween(spark, dir, 1L, 2L, Seq("id"),
-        emitDeletes = true).collect()
-        .map(r => (r.getLong(0), r.getString(3))).toSet
-      assert(feed == Set((1L, "update"), (2L, "delete")))
-    } finally q.stop()
-  }
-
   test("case-variant reserved columns are rejected BEFORE any side effect " +
       "(no layout pin, no schema marker from an invalid first batch)") {
     val dir = tmp()

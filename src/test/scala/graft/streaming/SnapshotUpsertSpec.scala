@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -456,67 +455,6 @@ class SnapshotUpsertSpec extends SparkSpec {
         Seq("id"), "v", nBuckets = 4)
     }
     assert(e.getMessage.contains("case"), e.getMessage)
-  }
-
-  test("streaming end-to-end: MemoryStream feed maintains the versioned table") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = tmp()
-    val input = MemoryStream[(Long, String, Long)]
-    val q = SnapshotUpsert.sink(input.toDF().toDF("id", "status", "v"),
-      dir, tmp(), Seq("id"), "v", nBuckets = 8)
-    try {
-      input.addData((1L, "new", 1L), (2L, "new", 1L))
-      q.processAllAvailable()
-      input.addData((1L, "fixed", 2L), (3L, "new", 1L))
-      q.processAllAvailable()
-      assert(snapSet(dir) ==
-        Set((1L, "fixed", 2L), (2L, "new", 1L), (3L, "new", 1L)))
-      assert(SnapshotUpsert.versions(spark, dir) == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("capstone: FSM stream -> versioned prod table -> change feed " +
-      "consumed incrementally per commit") {
-    // the full production pipeline in one test: proposals stream
-    // through the FSM (update mode emits per-key revisions), each
-    // micro-batch commits a snapshot version, and an incremental
-    // downstream consumer replays exactly that batch's effect via the
-    // change feed between consecutive versions
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import EventStreams.Proposal
-    val dir = tmp()
-    val input = MemoryStream[Proposal]
-    val q = SnapshotUpsert.sink(
-      EventStreams.streamingFsm(input.toDS()).toDF(), dir, tmp(),
-      Seq("cve_id", "package_name"), "transitions", nBuckets = 8,
-      keepVersions = 10, outputMode = "update")
-    try {
-      input.addData(Proposal("C1", "p", "pending_upstream"),
-        Proposal("C2", "p", "bogus"))
-      q.processAllAvailable()
-      input.addData(Proposal("C1", "p", "fixed"),
-        Proposal("C2", "p", "pending_upstream"))
-      q.processAllAvailable()
-      assert(SnapshotUpsert.versions(spark, dir) == Seq(1L, 2L))
-      // live table state: per-key latest FSM revision
-      val live = SnapshotUpsert.readSnapshot(spark, dir).collect()
-        .map(r => (r.getString(0), r.getString(2), r.getLong(3), r.getLong(4)))
-        .toSet
-      assert(live == Set(
-        ("C1", "fixed", 2L, 0L), // unknown -> pending_upstream -> fixed
-        ("C2", "pending_upstream", 1L, 1L))) // bogus blocked, then valid
-      // the incremental consumer's view of commit 2: both keys revised
-      val feed = SnapshotUpsert.changesBetween(spark, dir, 1L, 2L,
-          Seq("cve_id", "package_name")).collect()
-        .map(r => (r.getString(0), r.getString(2), r.getString(5))).toSet
-      assert(feed == Set(("C1", "fixed", "update"),
-        ("C2", "pending_upstream", "update")))
-      // and commit 1's effect from nothing is pure inserts — replayable
-      // because retained versions give the consumer catch-up room
-      assert(SnapshotUpsert.readVersion(spark, dir, 1L).count() == 2)
-    } finally q.stop()
   }
 
   test("real-data drive: incremental snapshot merges equal the one-shot merge") {
